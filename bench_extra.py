@@ -14,6 +14,7 @@ from __future__ import annotations
 import io
 import json
 import os
+import statistics
 import sys
 import time
 from contextlib import redirect_stdout
@@ -44,10 +45,6 @@ def _spark():
     )
 
 
-def _median(xs):
-    return sorted(xs)[len(xs) // 2]
-
-
 def time_queries(reps: int, names: list[str]) -> None:
     import __spark_entry__ as entrymod
 
@@ -64,7 +61,7 @@ def time_queries(reps: int, names: list[str]) -> None:
             times[name].append(round(time.monotonic() - t, 3))
     spark.sparkContext.setJobDescription(None)
     out = {
-        n: {"median_sec": round(_median(ts), 3), "reps_sec": ts}
+        n: {"median_sec": round(statistics.median(ts), 3), "reps_sec": ts}
         for n, ts in times.items()
     }
     print("BENCH_EXTRA " + json.dumps({"sf_dir": SF_DIR, "cpus": CPUS, "queries": out}))

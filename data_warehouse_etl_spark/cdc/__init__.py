@@ -1,6 +1,6 @@
 from .extract import extract_text_bytes, extract_text_udf, detect_lang_str, detect_lang_udf, fill_lang_udf
 from .gen import generate_ledger, LedgerSpec
-from .dedup import lww_dedup, lww_dedup_salted, lww_dedup_auto
+from .dedup import lww_dedup
 from .engine import CdcEngine, EngineConfig
 from .ivm import IncrementalAggregate
 from .schedule import ScheduleTable
@@ -14,8 +14,6 @@ __all__ = [
     "generate_ledger",
     "LedgerSpec",
     "lww_dedup",
-    "lww_dedup_salted",
-    "lww_dedup_auto",
     "CdcEngine",
     "EngineConfig",
     "IncrementalAggregate",

@@ -8,6 +8,12 @@ the row with the greatest (warc_ts, seq)** — warc_ts is the version order,
 seq the total-order tiebreaker (never rely on unordered ``first()``:
 determinism across cluster sizes requires a total order).
 
+One law, one path: :func:`_winner_ties` computes the winning ``[key, tie]``
+pairs over a (key, version, tie) projection, then the full rows are
+recovered either by a broadcast semi-join on the globally unique tie
+(:func:`lww_dedup_broadcast_keys`) or by the null-safe shuffle-hash
+join-back on (key, tie) (:func:`lww_dedup`).
+
 Physical strategy — HASH aggregation, never window, never sort-aggregate.
 A window rank forces ALL events of a key into one task and sorts them. Less
 obviously, ``max(struct(...))`` / ``max_by(struct(*cols), ...)`` are just as
@@ -29,12 +35,12 @@ buffers are all primitive (hash-aggregable, whole-stage codegen):
 Equivalence with ``max(struct(version, tie))`` — including null versions and
 the total (version, tie) order — is pinned by tests/test_dedup_*.
 
-``winner_seqs``'s hot-key path goes one step further per the north rule
-("salted key-partitioned shuffle with explicit hot-url skew splitting"):
-hot rows get an explicit salt from ``pmod(xxhash64(tie), k)`` and reduce per
-(key, salt) first — the salt is derived from the unique tie, so the plan is
-deterministic, and every reduce is associative+commutative, so the result is
-identical at any parallelism.
+Explicit ``hot_keys`` (the engine's amortized sampled detection) take a
+salted reduce per the north rule ("salted key-partitioned shuffle with
+explicit hot-url skew splitting"): hot rows get an explicit salt from
+``pmod(xxhash64(tie), k)`` and reduce per (key, salt) first — the salt is
+derived from the unique tie, so the plan is deterministic, and every reduce
+is associative+commutative, so the result is identical at any parallelism.
 """
 
 from __future__ import annotations
@@ -59,19 +65,27 @@ def _argmax_tie(keys: DataFrame, key_cols: list[str], o1: str, tie: str) -> Data
     )
 
 
+def _hot_predicate(key: str, hot_keys: list):
+    """Routes a row to the salted reduce. NULL-safe: ``isin`` is NULL for a
+    NULL key and would drop those rows from BOTH branches, so the result is
+    coalesced to false, and a NULL listed in ``hot_keys`` (which ``isin``
+    never matches) routes the NULL-key group explicitly."""
+    is_hot = F.col(key).isin(list(hot_keys))
+    if None in hot_keys:
+        is_hot = is_hot | F.col(key).isNull()
+    return F.coalesce(is_hot, F.lit(False))
+
+
 def _winner_ties(
     df: DataFrame,
     key: str,
     order: tuple[str, ...],
     hot_keys: list | None = None,
     n_salts: int = 16,
-    salted_all: bool = False,
-    keep_key: bool = False,
 ) -> DataFrame:
-    """The winning tiebreaker (``order[-1]``) per key — shared core of
-    :func:`winner_seqs` and the full-row dedup paths. 1-column [tie] by
-    default; ``keep_key`` returns [key, tie] so a join-back can key on the
-    pair (robust even if a caller's tie is only unique *within* a key).
+    """The winning ``[key, tie]`` pair per key, where ``order`` is the
+    (version, tie) 2-tuple — the one LWW law every dedup path and
+    ``LakeTable._resolve`` share.
 
     Cold keys: one ``repartition(key)`` exchange (raw rows, no map-side
     combine — measured cheaper than paying a sort- or hash-map pass on the
@@ -79,19 +93,19 @@ def _winner_ties(
     then the two chained hash aggregates of :func:`_argmax_tie` with no
     further exchange (hashpartitioning(key) satisfies both groupings).
 
-    Hot keys (``hot_keys``, from the engine's amortized sampled detection;
-    or every key when ``salted_all``): repartition by (key, salt) spreads a
-    hot key over ``n_salts`` reducers; per-(key, salt) argmax, then a
+    Hot keys (``hot_keys``): repartition by (key, salt) spreads a hot key
+    over ``n_salts`` reducers; per-(key, salt) argmax, then a
     ≤ n_salts-rows-per-key fold — every aggregate hash-based, exact at any
     parallelism because MAX/argmax with the total (o1, tie) order is
     associative and commutative.
     """
+    if len(order) != 2:
+        raise ValueError(f"LWW order must be a (version, tie) pair, got {order!r}")
     o1, tie = order
     keys = df.select(key, o1, tie)
-    out_cols = [key, tie] if keep_key else [tie]
 
     def _cold(kdf: DataFrame) -> DataFrame:
-        return _argmax_tie(kdf.repartition(key), [key], o1, tie).select(*out_cols)
+        return _argmax_tie(kdf.repartition(key), [key], o1, tie)
 
     def _salted(kdf: DataFrame) -> DataFrame:
         salted = kdf.withColumn(
@@ -114,15 +128,11 @@ def _winner_ties(
         # fold the ≤ n_salts candidates per key (ties in o1 across salts are
         # possible — duplicate events land in different salts — so run the
         # full two-phase argmax again; input is tiny)
-        return _argmax_tie(per_salt, [key], o1, tie).select(*out_cols)
+        return _argmax_tie(per_salt, [key], o1, tie)
 
-    if salted_all:
-        return _salted(keys)
     if not hot_keys:
         return _cold(keys)
-    # NULL-safe split: `~isin` is NULL for a NULL key and would drop those
-    # rows from BOTH branches; a NULL key is an ordinary (cold) group
-    is_hot = F.coalesce(F.col(key).isin(list(hot_keys)), F.lit(False))
+    is_hot = _hot_predicate(key, hot_keys)
     return _cold(keys.filter(~is_hot)).unionByName(_salted(keys.filter(is_hot)))
 
 
@@ -149,68 +159,25 @@ def _join_back(df: DataFrame, winners: DataFrame, key: str, tie: str) -> DataFra
     return df.join(w, cond, "left_semi")
 
 
-def _max_by_all(df: DataFrame, key: str, order: tuple[str, ...]) -> DataFrame:
-    """One full row per key: argmax over ``order``.
-
-    For the standard 2-tuple order with a per-key-unique tiebreaker (the
-    engine's LWW law), winners are computed hash-aggregated on a
-    (key, *order) projection and the full rows recovered by a null-safe
-    equi join on (key, tie) — the payload never enters an aggregation
-    buffer, and no operator sorts. The join is hinted SHUFFLE_HASH: the
-    winner side is a fraction of the input and the build per partition is
-    bounded, while a sort-merge join would re-introduce exactly the payload
-    sort this rewrite removes. Falls back to the struct ``max_by`` form for
-    other order shapes (general but SortAggregate-planned).
-    """
-    if len(order) == 2:
-        tie = order[-1]
-        winners = _winner_ties(df, key, order, keep_key=True)
-        return _join_back(df, winners, key, tie)
-    cols = df.columns
-    return (
-        df.groupBy(key)
-        .agg(F.max_by(F.struct(*cols), F.struct(*[F.col(c) for c in order])).alias("_r"))
-        .select("_r.*")
-    )
-
-
 def lww_dedup(
-    df: DataFrame, key: str = "url", order: tuple[str, ...] = ("warc_ts", "seq")
-) -> DataFrame:
-    """One row per key: argmax over ``order`` (hash-aggregated winner keys +
-    unique-tie join back; see :func:`_max_by_all`)."""
-    return _max_by_all(df, key, order)
-
-
-def lww_dedup_auto(
     df: DataFrame,
     key: str = "url",
     order: tuple[str, ...] = ("warc_ts", "seq"),
-    mode: str = "detect",
+    hot_keys: list | None = None,
     n_salts: int = 16,
-    hot_threshold: int = 1_000_000,
-    salt_source: str = "seq",
 ) -> DataFrame:
-    """Mode dispatcher for the engine config.
+    """One full row per key: argmax over the (version, tie) ``order``, with
+    ``tie`` unique per key (the :func:`_join_back` precondition).
 
-    - ``plain``: winner keys via the cold two-phase hash argmax, full rows
-      recovered by the unique-tie join.
-    - ``detect`` (default): one sampled pre-aggregated counting pass; keys
-      whose batch count exceeds ``hot_threshold`` take the explicit salted
-      reduce, everything else the plain path. This is the north-rule
-      "explicit hot-url skew splitting".
-    - ``salted``: unconditionally salted (plan independent of data; no
-      counting pass, no driver collect).
-    """
-    if mode == "plain":
-        return _max_by_all(df, key, order)
-    if mode == "salted":
-        return lww_dedup_salted(
-            df, key, order, n_salts=n_salts, hot_threshold=None, salt_source=salt_source
-        )
-    return lww_dedup_salted(
-        df, key, order, n_salts=n_salts, hot_threshold=hot_threshold, salt_source=salt_source
-    )
+    Winners are computed hash-aggregated on a (key, *order) projection and
+    the full rows recovered by the null-safe (key, tie) join-back — the
+    payload never enters an aggregation buffer, and no operator sorts. The
+    join is hinted SHUFFLE_HASH: the winner side is a fraction of the input
+    and the build per partition is bounded, while a sort-merge join would
+    re-introduce exactly the payload sort this rewrite removes. Works for
+    any batch size (no broadcast); ``hot_keys`` take the salted reduce."""
+    winners = _winner_ties(df, key, order, hot_keys=hot_keys, n_salts=n_salts)
+    return _join_back(df, winners, key, order[-1])
 
 
 def winner_seqs(
@@ -220,52 +187,23 @@ def winner_seqs(
     hot_keys: list | None = None,
     n_salts: int = 16,
 ) -> DataFrame:
-    """The winning tiebreaker (``order[-1]``) per key, as cheaply as possible.
+    """The winning tiebreaker (``order[-1]``) per key, as a 1-column frame.
 
     Because the LWW law is "greatest ``order`` tuple wins" and the tuple's
     last element is globally unique, the winner per key is a pure argmax
     over the (version, tie) pair — computed entirely with hash aggregations
-    (see module docstring; the former ``max(struct(...))`` form planned
-    SortAggregate and sorted the whole batch twice). The shuffle carries
-    key + two scalars per row, never a full row copy.
-
-    ``hot_keys`` (from the engine's amortized sampled detection) take the
-    explicit salted path — (key, salt) partitioning spreads a hot key over
-    ``n_salts`` reducers — while cold keys reduce in one exchange. Exact at
-    any parallelism: every aggregate is associative/commutative over the
-    total (version, tie) order.
+    (see module docstring). The shuffle carries key + two scalars per row,
+    never a full row copy; ``hot_keys`` take the salted reduce.
     """
-    if len(order) != 2:  # general fallback: the defining struct-max form,
-        # with the same explicit salted split for hot keys (SortAggregate-
-        # planned, but order tuples beyond (version, tie) are not an engine
-        # path — generality over speed here)
-        tie = order[-1]
-        w = F.max(F.struct(*[F.col(c) for c in order])).alias("_w")
-        keys = df.select(key, *order)
-        if not hot_keys:
-            return keys.groupBy(key).agg(w).select(F.col(f"_w.{tie}").alias(tie))
-        is_hot = F.coalesce(F.col(key).isin(list(hot_keys)), F.lit(False))
-        cold = keys.filter(~is_hot).groupBy(key).agg(w)
-        phase1 = (
-            keys.filter(is_hot)
-            .withColumn(
-                "_salt", F.pmod(F.xxhash64(F.col(tie)), F.lit(n_salts)).cast("int")
-            )
-            .groupBy(key, "_salt")
-            .agg(w)
-        )
-        hot = phase1.select(key, "_w.*").groupBy(key).agg(w)
-        return cold.unionByName(hot).select(F.col(f"_w.{tie}").alias(tie))
-    return _winner_ties(df, key, order, hot_keys=hot_keys, n_salts=n_salts)
+    tie = order[-1]
+    return _winner_ties(df, key, order, hot_keys=hot_keys, n_salts=n_salts).select(tie)
 
 
 def lww_dedup_broadcast_keys(
     df: DataFrame,
     key: str = "url",
     order: tuple[str, ...] = ("warc_ts", "seq"),
-    mode: str = "plain",
     n_salts: int = 16,
-    hot_threshold: int = 1_000_000,
     hot_keys: list | None = None,
 ) -> DataFrame:
     """LWW dedup that never shuffles the payload.
@@ -281,20 +219,10 @@ def lww_dedup_broadcast_keys(
     Exact: the winner set is identical (same argmax, unique tiebreaker), so
     the surviving rows are identical → byte-identical state. Use when the
     winner-key set fits a broadcast (≈8 bytes/key; a 10^6-event batch is a
-    few MB). ``lww_dedup_auto`` remains for unbounded batch sizes.
-
-    ``mode="salted"`` forces the unconditionally salted winner reduce (plan
-    independent of data); any other mode reduces cold except for explicit
-    ``hot_keys``. A detect-counting pass inside this function would cost a
-    full keys scan per batch; the engine instead amortizes detection across
-    batches (EngineConfig.hot_detect_every).
+    few MB); :func:`lww_dedup` serves unbounded batch sizes.
     """
-    tie = order[-1]
-    if mode == "salted":
-        winners = _winner_ties(df, key, order, n_salts=n_salts, salted_all=True)
-        return df.join(F.broadcast(winners), tie, "left_semi")
     winners = winner_seqs(df, key, order, hot_keys=hot_keys, n_salts=n_salts)
-    return df.join(F.broadcast(winners), tie, "left_semi")
+    return df.join(F.broadcast(winners), order[-1], "left_semi")
 
 
 def sample_hot_keys(
@@ -319,53 +247,3 @@ def sample_hot_keys(
         eff_threshold = max(hot_threshold // (detect_sample_mod * 4), 1)
     counts = counts_src.groupBy(key).count().filter(F.col("count") > eff_threshold)
     return [r[key] for r in counts.collect()]
-
-
-def lww_dedup_salted(
-    df: DataFrame,
-    key: str = "url",
-    order: tuple[str, ...] = ("warc_ts", "seq"),
-    n_salts: int = 16,
-    hot_threshold: int | None = None,
-    salt_source: str = "seq",
-    detect_sample_mod: int | None = 64,
-) -> DataFrame:
-    """LWW dedup with explicit salted hot-key splitting (full-row result).
-
-    Two modes:
-
-    - ``hot_threshold=None``: **always salted**. Winner keys reduce per
-      (key, salt) first — a hot key spreads over ``n_salts`` reducers — then
-      fold; full rows are recovered by the unique-tie join. No pre-counting
-      pass or driver collect: no plan dependency on the data.
-
-    - ``hot_threshold=k``: detect-and-split. One sampled pre-aggregated
-      counting pass finds keys with > k events; only those take the salted
-      path, cold keys reduce in one exchange. The hot set is broadcast as a
-      literal filter (bounded by |batch| / k keys, driver-safe).
-
-    Both modes are exact: every reduce is associative+commutative with a
-    total order, so the result is identical at any parallelism and batch
-    slicing. Requires the 2-tuple order with unique tie (the engine's LWW
-    law); other shapes fall back through :func:`_max_by_all`.
-    """
-    if len(order) != 2:
-        return _max_by_all(df, key, order)
-    tie = order[-1]
-    if hot_threshold is None:
-        winners = _winner_ties(
-            df, key, order, n_salts=n_salts, salted_all=True, keep_key=True
-        )
-        return _join_back(df, winners, key, tie)
-
-    hot_keys = sample_hot_keys(
-        df,
-        key,
-        hot_threshold=hot_threshold,
-        salt_source=salt_source,
-        detect_sample_mod=detect_sample_mod or 0,
-    )
-    winners = _winner_ties(
-        df, key, order, hot_keys=hot_keys, n_salts=n_salts, keep_key=True
-    )
-    return _join_back(df, winners, key, tie)

@@ -1,7 +1,7 @@
 """The CDC engine: deterministic micro-batched replay of a change ledger into
 a lake table, exactly-once, with per-partition checkpoints and metrics.
 
-Lifecycle per batch (SURVEY.md §3.4), merge-on-read default:
+Lifecycle per batch (SURVEY.md §3.4), merge-on-read:
 
     changes ledger (LakeTable)                                  [source]
       → slice per-part offset range (cp[p], cp[p]+batch_size]   [plan; file-stats pruning]
@@ -17,11 +17,6 @@ Lifecycle per batch (SURVEY.md §3.4), merge-on-read default:
         form) + survivor-side observe() on the same job         [observability]
       → reads LWW-resolve base+delta; compact() folds deltas
         back into base on the operator's cadence                [read path]
-
-    merge_strategy="cow" keeps the round-1 copy-on-write path (full-outer
-    merge vs affected buckets, exact insert/update classes) — both reach
-    byte-identical state; MoR removes the O(table)-per-batch rewrite
-    ceiling that made CoW replay quadratic in table size.
 
 Exactly-once: the manifest pointer swap is the commit point and the committed
 offsets ride in the same manifest (the reference needed a rename-swap publish
@@ -39,11 +34,10 @@ delete must stay dead regardless of how the replay was batched — tombstones
 make final state independent of batch boundaries and parallelism, which is
 the north rule's byte-identical-at-N-and-4N criterion.
 
-Scale posture: per-batch cost is O(batch + affected-bucket data), never
-O(table) — bucket pruning bounds the merge read, LWW runs as map-side
-combining aggregation (no window sort), the hot-url path splits skew
-explicitly, and the only Python in the hot path is the Arrow-batched
-extractor on post-dedup survivors.
+Scale posture: per-batch cost is O(batch), never O(table) — the delta
+commit reads no old state, LWW runs as hash aggregation (no window sort),
+the hot-url path splits skew explicitly, and the only Python in the hot path
+is the Arrow-batched extractor on post-dedup survivors.
 """
 
 from __future__ import annotations
@@ -52,7 +46,6 @@ import json
 import os
 import sys
 import time
-from collections import deque
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -60,7 +53,7 @@ from pyspark.sql import functions as F
 
 from ..lake import LakeTable
 from . import evolve
-from .dedup import lww_dedup_auto, lww_dedup_broadcast_keys, sample_hot_keys
+from .dedup import lww_dedup, lww_dedup_broadcast_keys, sample_hot_keys
 from .extract import extract_enrich_udf, extract_text_udf
 from .metrics import MetricsTable
 from .checkpoint import CheckpointsTable
@@ -79,6 +72,13 @@ _TIMING = os.environ.get("SPARK_GRAFT_DEBUG_TIMING", "") == "1"
 # python-worker handshake (~5ms) to noise. Below it, a fine-grained bucket
 # layout would pay more in python task startup than the text shuffle saves.
 _POST_SHUFFLE_MIN_ROWS_PER_TASK = 5_000
+
+# Largest batch (exact input row count — an upper bound on its winner count)
+# for which dedup_plan="auto" broadcasts the winner seqs. Winner seqs
+# broadcast at ~8B each plus hash-relation overhead, so 4M keys is a ~100MB
+# relation on the driver and every executor — inside default memory; larger
+# batches recover rows by the shuffle-hash join-back instead.
+_BROADCAST_MAX_ROWS = 4_000_000
 
 
 class _Timer:
@@ -106,51 +106,31 @@ class EngineConfig:
     num_buckets: int = 16
     files_per_bucket: int = 1
     salt_k: int = 16
-    # skew handling for the LWW reduce (see cdc/dedup.py lww_dedup_auto):
-    # "detect" (default) = explicit hot-url splitting above hot_threshold,
-    # "salted" = always two-phase, "plain" = single-phase max_by agg
-    skew_mode: str = "detect"
+    # urls with more than hot_threshold events in a batch take the salted
+    # (key, salt) two-phase LWW reduce (cdc/dedup.py _winner_ties).
     hot_threshold: int = 1_000_000
-    # In "detect" mode the sampled hot-key counting pass costs one keys scan
-    # per run — so it is AMORTIZED: it runs on the 2nd batch of a run and
-    # every Nth batch after, and the detected hot set is sticky in between.
-    # The first batch is safe without it: the winner reduce is a map-side-
-    # combining MAX whose per-key shuffle fan-in is bounded at O(input
-    # partitions) regardless of skew; detection only refines the plan shape
-    # (results are exact either way, so state stays byte-identical).
+    # The sampled hot-key counting pass costs one keys scan — so it is
+    # AMORTIZED: it runs on the 2nd batch of a run and every Nth batch
+    # after, and the detected hot set is sticky in between. The first batch
+    # is safe without it: the winner reduce is a MAX whose per-key shuffle
+    # fan-in is bounded at O(input partitions) regardless of skew; detection
+    # only refines the plan shape (results are exact either way, so state
+    # stays byte-identical).
     hot_detect_every: int = 16
-    # apply strategy:
-    # - "mor" (default): merge-on-read — each batch commits its deduped rows
-    #   as per-bucket DELTA files (append_deltas); no old-state read, no
-    #   carried-row rewrite. Per-batch write cost is O(batch) regardless of
-    #   table size; reads LWW-resolve base+delta. One payload job per batch
-    #   (plus the amortized hot-key detection pass every hot_detect_every
-    #   batches when skew_mode="detect").
-    # - "cow": copy-on-write — full-outer merge against the affected buckets'
-    #   current state, rewriting those buckets (per-batch cost
-    #   O(batch + affected-bucket data); exact insert/update metric classes).
-    # Both reach byte-identical final state (test_mor_cow_parity).
-    merge_strategy: str = "mor"
-    # dedup physical plan:
-    # - "broadcast_keys" (chosen by "auto" for batch_size ≤ dedup_bcast_limit):
-    #   winner selection runs over a (url, warc_ts, seq) projection — the
-    #   shuffle carries tens of bytes/row instead of the html payload — and
-    #   winners' seqs broadcast back as a map-side semi-join filter. Payload
-    #   rows are never exchanged before the bucket write.
-    # - "full_shuffle": the classic full-row max_by reduce (any batch size).
+    # dedup row recovery (the winner law is the same either way):
+    # - "broadcast_keys": winner selection runs over a (url, warc_ts, seq)
+    #   projection — the shuffle carries tens of bytes/row instead of the
+    #   html payload — and winners' seqs broadcast back as a map-side
+    #   semi-join filter. Payload rows are never exchanged before the bucket
+    #   write.
+    # - "full_shuffle": full rows recovered by the shuffle-hash join-back on
+    #   (url, seq) — any batch size.
+    # - "auto": broadcast_keys when the batch's exact row count (ledger
+    #   metadata / scanned stats — NOT cfg.batch_size, which bounds only the
+    #   deterministic loop's slices) is ≤ _BROADCAST_MAX_ROWS, else
+    #   full_shuffle.
     dedup_plan: str = "auto"
-    # max ESTIMATED winner-key count for which "auto" still picks
-    # broadcast_keys. Winner seqs broadcast at ~8B each plus hash-relation
-    # overhead, so 4M keys is a ~100MB relation on the driver and every
-    # executor — inside default memory; beyond it "auto" falls back to the
-    # full-row shuffle reduce. The estimate is the observed batch row count
-    # (ledger metadata / scanned stats — NOT cfg.batch_size, which bounds
-    # only the deterministic loop's slices) times the winners-per-row ratio
-    # learned from prior batches' survivor counts (conservative 1.0 before
-    # any history, so a first huge mostly-distinct batch can never force an
-    # oversized broadcast).
-    dedup_bcast_limit: int = 4_000_000  # estimated winner keys
-    # MoR: fold deltas into base files every N batches (0 = only on demand
+    # Fold deltas into base files every N batches (0 = only on demand
     # via engine.compact()). Compaction is a pure layout change — state_hash
     # is invariant to cadence — trading a periodic O(table-with-deltas)
     # rewrite for bounded read amplification. Default 32 keeps deltas-per-
@@ -206,20 +186,13 @@ class CdcEngine:
         # amortized skew detection state (see EngineConfig.hot_detect_every)
         self._hot_keys: list = []
         self._batches_this_run: int = 0
-        # winners-per-row ratios observed over the last few batches (mstats
-        # are free); the "auto" dedup gate estimates the next batch's
-        # winner-set size as rows x max(recent ratios). Starts conservative
-        # (1.0 = assume all-distinct) so a first huge batch can never force a
-        # huge broadcast. Taking the MAX over a window — not just the
-        # immediately preceding batch — plus a 0.1 floor on each observation
-        # bounds the underestimate after a distribution shift (a dup-heavy
-        # batch followed by a mostly-distinct one) at 10x, so the worst-case
-        # admitted broadcast is 10 * dedup_bcast_limit keys, not 100x.
-        self._winner_ratios: deque[float] = deque([1.0], maxlen=4)
         # monotone-watermark state: max event time observed by committed
         # batches but not yet persisted (it is written into the NEXT commit's
         # properties, so the cutoff depends only on committed state and a
         # cold resume replays the identical cutoffs)
+        self._wm_track = (
+            cfg.watermark_delay_s is not None and cfg.watermark_mode == "monotone"
+        )
         self._wm_pending = None
 
     # ------------------------------------------------------------------ setup
@@ -595,14 +568,13 @@ class CdcEngine:
 
         # ---- per-part input stats. An events-level observe() is NOT safe
         # here: the events subtree is evaluated by more than one action
-        # (detect-mode hot-key count, broadcast-keys winner subtree), and a
+        # (hot-key count, broadcast-keys winner subtree), and a
         # Spark Observation asserts on multiple updates. Ledgers that declare
         # dense-seq stats (input_counts) need no pass at all; others pay one
         # explicit column-pruned pre-aggregation — which also yields the part
         # set when the caller doesn't know it upfront (parts=None: streaming
         # micro-batches of arbitrary composition).
-        scanned_stats: dict[int, dict] | None = None
-        if input_counts is None and (parts or parts is None):
+        if input_counts is None:
             scanned_stats = {
                 int(r["part"]): {
                     "events_in": int(r["events_in"]),
@@ -617,33 +589,14 @@ class CdcEngine:
             }
             if parts is None:
                 parts = sorted(scanned_stats)
-        parts = parts or []
-
-        # ---- LWW dedup (skew-aware reduce, see cfg.skew_mode / dedup_plan).
-        # "auto" gates the broadcast-keys plan on the ACTUAL batch row count
-        # when one is known (ledger metadata or the scanned stats above) —
-        # cfg.batch_size bounds the deterministic loop's slices but not an
-        # arbitrary apply_events micro-batch, and a forced broadcast of an
-        # unbounded winner set is a driver/executor OOM hazard.
-        if input_counts is not None:
-            n_rows = sum(input_counts.values())
-        elif scanned_stats is not None:
             n_rows = sum(s["events_in"] for s in scanned_stats.values())
         else:
-            n_rows = None
-        est_winners = (
-            n_rows * max(self._winner_ratios) if n_rows is not None else cfg.batch_size
-        )
-        use_bcast = cfg.dedup_plan == "broadcast_keys" or (
-            cfg.dedup_plan == "auto" and est_winners <= cfg.dedup_bcast_limit
-        )
+            n_rows = sum(input_counts.values())
 
         # amortized sampled hot-key detection (see EngineConfig.hot_detect_every)
         self._batches_this_run += 1
         if (
-            use_bcast
-            and cfg.skew_mode == "detect"
-            and self._batches_this_run >= 2
+            self._batches_this_run >= 2
             and (self._batches_this_run - 2) % cfg.hot_detect_every == 0
         ):
             self._hot_keys = sample_hot_keys(
@@ -651,24 +604,23 @@ class CdcEngine:
             )
             tm.mark("hot_key_detect")
 
-        if use_bcast:
-            deduped = lww_dedup_broadcast_keys(
-                events,
-                key="url",
-                order=("warc_ts", "seq"),
-                mode=cfg.skew_mode,
-                n_salts=cfg.salt_k,
-                hot_keys=self._hot_keys,
-            )
-        else:
-            deduped = lww_dedup_auto(
-                events,
-                key="url",
-                order=("warc_ts", "seq"),
-                mode=cfg.skew_mode,
-                n_salts=cfg.salt_k,
-                hot_threshold=cfg.hot_threshold,
-            )
+        # ---- LWW dedup. "auto" gates the broadcast-keys plan on the ACTUAL
+        # batch row count (ledger metadata or the scanned stats above), an
+        # upper bound on the winner count — cfg.batch_size bounds the
+        # deterministic loop's slices but not an arbitrary apply_events
+        # micro-batch, and a forced broadcast of an unbounded winner set is a
+        # driver/executor OOM hazard.
+        use_bcast = cfg.dedup_plan == "broadcast_keys" or (
+            cfg.dedup_plan == "auto" and n_rows <= _BROADCAST_MAX_ROWS
+        )
+        dedup = lww_dedup_broadcast_keys if use_bcast else lww_dedup
+        deduped = dedup(
+            events,
+            key="url",
+            order=("warc_ts", "seq"),
+            n_salts=cfg.salt_k,
+            hot_keys=self._hot_keys,
+        )
 
         # ---- transform: extract text on survivors only (Arrow-vectorized).
         # One FUSED pandas UDF produces (text, lang) in a single Arrow round
@@ -693,8 +645,7 @@ class CdcEngine:
         # measured +15s on the 4x100k-event 256-bucket cdcout replay. Rows
         # per write task >= _POST_SHUFFLE_MIN_ROWS_PER_TASK (5k rows ~ 45ms
         # of extract work, amortizing the ~5ms handshake) picks post;
-        # smaller batches extract before the exchange. CoW needs text
-        # before its merge join and always keeps the pre-merge placement.
+        # smaller batches extract before the exchange.
         lang_col = "language" if "language" in payload_names else "lang"
         has_lang = lang_col in payload_names
 
@@ -720,33 +671,16 @@ class CdcEngine:
 
         page_fields = [f.name for f in self.pages.manifest.current_fields]
 
-        self._wm_track = (
-            cfg.watermark_delay_s is not None and cfg.watermark_mode == "monotone"
+        write_tasks = max(cfg.num_buckets * cfg.files_per_bucket, 1)
+        mstats, bytes_by_part = self._apply_mor(
+            deduped,
+            enrich,
+            page_fields,
+            properties_update,
+            parts,
+            tm,
+            post_shuffle_extract=n_rows / write_tasks >= _POST_SHUFFLE_MIN_ROWS_PER_TASK,
         )
-
-        # Survivor-side byte accounting rides each apply path's own single
-        # observed action (MoR: the delta write; CoW: the merged write) —
-        # never attached to a subtree evaluated by more than one action,
-        # which a Spark Observation asserts on.
-        if cfg.merge_strategy == "mor":
-            write_tasks = max(cfg.num_buckets * cfg.files_per_bucket, 1)
-            post_shuffle_extract = (
-                est_winners / write_tasks >= _POST_SHUFFLE_MIN_ROWS_PER_TASK
-            )
-            mstats, bytes_by_part = self._apply_mor(
-                deduped,
-                enrich,
-                page_fields,
-                properties_update,
-                parts,
-                tm,
-                post_shuffle_extract=post_shuffle_extract,
-            )
-        else:
-            enriched = enrich(deduped, F.col("op") != "D")
-            mstats, bytes_by_part = self._apply_cow(
-                enriched, page_fields, properties_update, parts, tm
-            )
 
         if input_counts is not None:
             # exact counts from ledger metadata; bytes are of APPLIED html
@@ -762,12 +696,6 @@ class CdcEngine:
                 p: scanned_stats.get(p, {"events_in": 0, "bytes_html": 0})
                 for p in parts
             }
-        # refine the winners-per-row estimate for the next batch's dedup gate
-        # (mstats classes cover exactly the batch's LWW winner rows)
-        if n_rows:
-            self._winner_ratios.append(
-                min(max(sum(mstats.values()) / n_rows, 0.1), 1.0)
-            )
         # monotone watermark: persist the event-time high-water-mark observed
         # on the apply job as a driver-side property commit (manifest write,
         # no Spark job). The NEXT batch's cutoff reads only committed state,
@@ -829,7 +757,7 @@ class CdcEngine:
                     f"else 0 end) as by_{p}"
                 )
             )
-        if getattr(self, "_wm_track", False):
+        if self._wm_track:
             # the batch's max event time survives dedup (the globally newest
             # event always wins its key), so observing it on the survivor set
             # equals the batch max — no pre-pass needed
@@ -872,130 +800,9 @@ class CdcEngine:
             if d:
                 mstats[(p, "delete")] = d
             bytes_by_part[p] = self._observed(vals, f"by_{p}")
-        self._note_wm(vals.get("wm_max"))
-        return mstats, bytes_by_part
-
-    def _note_wm(self, wm) -> None:
+        wm = vals.get("wm_max")
         if wm is not None and (self._wm_pending is None or wm > self._wm_pending):
             self._wm_pending = wm
-
-    def _apply_cow(
-        self,
-        enriched: DataFrame,
-        page_fields: list[str],
-        properties_update: dict[str, str],
-        parts: list[int],
-        tm: _Timer,
-    ) -> tuple[dict, dict[int, int]]:
-        """Copy-on-write apply: full-outer merge vs the affected buckets'
-        current state, rewriting those buckets. Exact insert/update/late
-        metric classes; per-batch cost O(batch + affected-bucket data)."""
-        cfg = self.cfg
-        # enriched is cached before the bucket-discovery action so the
-        # extract UDF and the dedup shuffle run exactly once per batch.
-        # TODO(non-default path): the bucket-discovery distinct() is an
-        # extra O(batch) pass CoW pays and MoR (the default) does not; a
-        # batch known to touch all buckets could skip it (affected = all).
-        enriched = enriched.persist()
-        try:
-            bucket_of = self.pages.bucket_expr("url")
-            affected = sorted(
-                r["b"] for r in enriched.select(bucket_of.alias("b")).distinct().collect()
-            )
-            tm.mark("dedup+extract+buckets")
-            old = self.pages.read(self.spark, buckets=affected)
-
-            n = enriched.alias("n")
-            o = old.alias("o")
-            joined = n.join(o, F.col("n.url") == F.col("o.url"), "full_outer")
-            has_new = F.col("n.seq").isNotNull()
-            has_old = F.col("o._seq").isNotNull()
-            newer = F.struct(F.col("n.warc_ts"), F.col("n.seq")) > F.struct(
-                F.col("o.warc_ts"), F.col("o._seq")
-            )
-            take_new = has_new & (~has_old | newer)
-
-            def new_val(name: str):
-                if name == "text":
-                    return F.col("n.text")
-                if name == "_seq":
-                    return F.col("n.seq")
-                if name == "_deleted":
-                    return F.col("n.op") == "D"
-                return F.col(f"n.{name}")
-
-            out_cols = [
-                F.coalesce(F.col("n.url"), F.col("o.url")).alias("url")
-                if name == "url"
-                else F.when(take_new, new_val(name)).otherwise(F.col(f"o.{name}")).alias(name)
-                for name in page_fields
-            ]
-            klass = (
-                F.when(~has_new, F.lit("carry"))
-                .when(~has_old & (F.col("n.op") == "D"), F.lit("delete_absent"))
-                .when(~has_old, F.lit("insert"))
-                .when(take_new & (F.col("n.op") == "D"), F.lit("delete"))
-                .when(take_new, F.lit("update"))
-                .otherwise(F.lit("late_dropped"))
-            )
-            merged = joined.select(
-                *out_cols, klass.alias("_class"), F.col("n.part").alias("_part")
-            )
-
-            # merge-class counts observed on the write job itself (round 1
-            # ran a separate collect over a persisted copy of merged)
-            klasses = ("insert", "update", "delete", "delete_absent", "late_dropped")
-            applied_sql = "_class IN ('insert', 'update', 'delete', 'delete_absent')"
-            obs_m = Observation()
-            m_aggs = []
-            for p in parts:
-                for k in klasses:
-                    m_aggs.append(
-                        F.expr(
-                            f"sum(case when _part = {p} and _class = '{k}' "
-                            f"then 1 else 0 end) as c_{p}_{k}"
-                        )
-                    )
-                # applied-html bytes on the same (single-action) observation;
-                # for applied classes take_new held, so html is the new value
-                m_aggs.append(
-                    F.expr(
-                        f"sum(case when _part = {p} and {applied_sql} "
-                        f"then coalesce(length(html), 0) else 0 end) as by_{p}"
-                    )
-                )
-            if getattr(self, "_wm_track", False):
-                # event-time max over the batch's applied rows (carried old
-                # rows excluded so the watermark tracks ingested event time)
-                m_aggs.append(
-                    F.expr(
-                        "max(case when _class <> 'carry' then warc_ts end) as wm_max"
-                    )
-                )
-            if m_aggs:
-                merged = merged.observe(obs_m, *m_aggs)
-
-            # ---- atomic commit: data + offsets/ids in one manifest swap
-            self.pages = self.pages.overwrite_buckets(
-                merged,
-                affected,
-                properties_update=properties_update,
-                files_per_bucket=cfg.files_per_bucket,
-            )
-            tm.mark("merge+commit_write")
-        finally:
-            enriched.unpersist()
-
-        vals = obs_m.get if m_aggs else {}  # ONE py4j fetch (see _observed)
-        mstats: dict = {}
-        bytes_by_part: dict[int, int] = {}
-        for p in parts:
-            for k in klasses:
-                c = self._observed(vals, f"c_{p}_{k}")
-                if c:
-                    mstats[(p, k)] = c
-            bytes_by_part[p] = self._observed(vals, f"by_{p}")
-        self._note_wm(vals.get("wm_max"))
         return mstats, bytes_by_part
 
     def _metric_rows(
@@ -1019,14 +826,14 @@ class CdcEngine:
                     "batch_id": batch_id,
                     "part": p,
                     "events_in": ev_in,
-                    "inserts": mstats.get((p, "insert"), 0),
-                    # MoR reports upserts here (insert-vs-update needs old
-                    # state, which merge-on-read never reads)
-                    "updates": mstats.get((p, "update"), 0) + mstats.get((p, "upsert"), 0),
-                    "deletes": mstats.get((p, "delete"), 0)
-                    + mstats.get((p, "delete_absent"), 0),
+                    # merge-on-read never reads old state: insert-vs-update
+                    # is not split (upserts count as updates) and late rows
+                    # are stored, losing read-time resolution
+                    "inserts": 0,
+                    "updates": mstats.get((p, "upsert"), 0),
+                    "deletes": mstats.get((p, "delete"), 0),
                     "dedup_dropped": ev_in - survivors_by_part.get(p, 0),
-                    "late_dropped": mstats.get((p, "late_dropped"), 0),
+                    "late_dropped": 0,
                     "bytes_html": by,
                     "wall_ms": wall_ms,
                     "events_per_sec": (ev_in / (wall_ms / 1000.0)) if wall_ms else 0.0,

@@ -333,9 +333,7 @@ class LakeTable:
             from ..cdc.dedup import _join_back, _winner_ties
 
             tie = m.version_cols[-1]
-            winners = _winner_ties(
-                df, m.row_key, tuple(m.version_cols), keep_key=True
-            )
+            winners = _winner_ties(df, m.row_key, tuple(m.version_cols))
             return _join_back(df, winners, m.row_key, tie).select(*df.columns)
         value_cols = [c for c in df.columns if c != m.row_key]
         return (

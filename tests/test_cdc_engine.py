@@ -72,7 +72,6 @@ def _mk_engine(spark, ledger, tmp, batch_size=500, **kw):
         batch_size=batch_size,
         num_buckets=4,
         salt_k=4,
-        skew_mode=kw.pop("skew_mode", "detect"),
         hot_threshold=kw.pop("hot_threshold", 50),
         **kw,
     )
@@ -165,16 +164,23 @@ def test_batch_size_invariance(spark, ledger, tmp_path):
     assert state_hash(a.read_pages()) == state_hash(b.read_pages())
 
 
-def test_dedup_mode_invariance(spark, ledger, tmp_path):
-    """plain / always-salted / detect-and-split skew modes all produce the
-    identical final state."""
+def test_dedup_mode_invariance(spark, tmp_path):
+    """Both dedup row-recovery plans, with and without hot-key salting,
+    produce the identical final state — the oracle's. The ledger's hot url
+    carries ~30% of the events, so the sampled detection finds it."""
+    spec = LedgerSpec(n_urls=300, n_events=3000, n_parts=4, seed=7, hot_url_rate=0.3)
+    ledger = generate_ledger(str(tmp_path / "changes"), spec)
     hashes = set()
-    for mode, thr in (("plain", 50), ("salted", 50), ("detect", 20)):
-        e = _mk_engine(spark, ledger, tmp_path / mode, batch_size=1500,
-                       skew_mode=mode, hot_threshold=thr)
-        e.run()
-        hashes.add(state_hash(e.read_pages()))
+    for plan in ("broadcast_keys", "full_shuffle"):
+        for thr in (10**9, 20):  # no hot keys / the hot url detected
+            e = _mk_engine(spark, ledger, tmp_path / f"{plan}-{thr}", batch_size=1000,
+                           dedup_plan=plan, hot_threshold=thr, hot_detect_every=1)
+            e.run()
+            assert bool(e._hot_keys) == (thr == 20)
+            hashes.add(state_hash(e.read_pages()))
     assert len(hashes) == 1
+    got = _engine_final_state(spark, e)
+    pd.testing.assert_frame_equal(got, _oracle_final_state(ledger), check_dtype=False)
 
 
 def test_schema_evolution_replay(spark, tmp_path):
@@ -227,25 +233,6 @@ def test_metrics_mirror_schema_evolves_on_open(spark, tmp_path):
     )])
     got = {r["batch_id"]: r["max_deltas_per_bucket"] for r in mt.read(spark).collect()}
     assert got == {1: None, 2: 7}  # old row add-as-null, new row's value kept
-
-
-def test_winner_ratio_floor_and_window(spark, tmp_path):
-    """Round-4 ADVICE fix: the auto-dedup gate's winners-per-row estimate
-    must not trust a single dup-heavy batch — each observation is floored at
-    0.1 and the gate takes the MAX over a window that still contains the
-    conservative 1.0 seed, bounding any post-shift underestimate at 10x."""
-    spec = LedgerSpec(n_urls=5, n_events=500, n_parts=1, seed=3)
-    led = generate_ledger(str(tmp_path / "changes"), spec)
-    eng = CdcEngine(
-        spark,
-        EngineConfig(ledger_path=led.path, pages_path=str(tmp_path / "pages"),
-                     batch_size=500, num_buckets=2),
-    )
-    eng.apply_events(led.read(spark))
-    # true survivor ratio is ~5/500 = 0.01; the floor records 0.1
-    assert eng._winner_ratios[-1] == pytest.approx(0.1)
-    # the 1.0 seed is still inside the window -> next estimate stays conservative
-    assert max(eng._winner_ratios) == 1.0
 
 
 def test_schedule_registry_records_runs(spark, ledger, tmp_path):

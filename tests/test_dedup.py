@@ -5,7 +5,11 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from data_warehouse_etl_spark.cdc.dedup import lww_dedup, lww_dedup_salted
+from data_warehouse_etl_spark.cdc.dedup import (
+    lww_dedup,
+    lww_dedup_broadcast_keys,
+    sample_hot_keys,
+)
 
 
 @pytest.fixture(scope="module")
@@ -30,35 +34,42 @@ def test_lww_basic_laws(spark, events):
     assert got["A"] == "v2"        # tie on warc_ts → seq decides
     assert got["B"] == "b-late"    # warc_ts dominates seq
     assert got["H"] == "h499"      # same ts for all H → max seq
+    with pytest.raises(ValueError, match="pair"):  # only (version, tie) orders
+        lww_dedup(events, key="url", order=("warc_ts", "payload", "seq"))
 
 
 def test_salted_modes_equal_plain(spark, events):
+    """Hot-key salting is a plan shape only: the detected hot set, an
+    explicit one and none at all give the identical winners."""
     plain = _winners(lww_dedup(events))
-    always = _winners(lww_dedup_salted(events, n_salts=7, hot_threshold=None))
-    detect = _winners(lww_dedup_salted(events, n_salts=7, hot_threshold=50))
-    nohot = _winners(lww_dedup_salted(events, n_salts=7, hot_threshold=10_000))
-    assert plain == always == detect == nohot
+    detected = sample_hot_keys(events, hot_threshold=50, detect_sample_mod=0)
+    assert detected == ["H"]
+    hot = _winners(lww_dedup(events, hot_keys=detected, n_salts=7))
+    every = _winners(lww_dedup(events, hot_keys=["A", "B", "H"], n_salts=7))
+    absent = _winners(lww_dedup(events, hot_keys=["no-such-url"], n_salts=7))
+    assert plain == hot == every == absent
 
 
 def test_salted_partition_invariance(spark, events):
-    a = _winners(lww_dedup_salted(events.repartition(1), n_salts=4))
-    b = _winners(lww_dedup_salted(events.repartition(16), n_salts=4))
+    a = _winners(lww_dedup(events.repartition(1), hot_keys=["H"], n_salts=4))
+    b = _winners(lww_dedup(events.repartition(16), hot_keys=["H"], n_salts=4))
     assert a == b
 
 
 def test_no_window_sort_in_plan(spark, events):
-    """The dedup must be an aggregation (map-side combinable), not a window
-    sort — a window would funnel each hot key through one task."""
-    plan = lww_dedup_salted(events)._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    assert "HashAggregate" in plan or "ObjectHashAggregate" in plan or "SortAggregate" in plan
+    """The dedup must be hash aggregation, not a window sort (a window
+    funnels each hot key through one task) nor a SortAggregate (a struct
+    buffer sorts the whole input on both sides of the exchange)."""
+    for hot_keys in (None, ["H"]):
+        for fn in (lww_dedup, lww_dedup_broadcast_keys):
+            df = fn(events, hot_keys=hot_keys, n_salts=4)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "HashAggregate" in plan, plan
+            assert "Window" not in plan and "SortAggregate" not in plan, plan
 
 
 def test_winner_seqs_and_broadcast_keys_match_full_reduce(spark, events):
-    from data_warehouse_etl_spark.cdc.dedup import (
-        lww_dedup_broadcast_keys,
-        winner_seqs,
-    )
+    from data_warehouse_etl_spark.cdc.dedup import winner_seqs
 
     full = lww_dedup(events, key="url", order=("warc_ts", "seq"))
     bc = lww_dedup_broadcast_keys(events, key="url", order=("warc_ts", "seq"))
@@ -73,10 +84,10 @@ def test_winner_seqs_and_broadcast_keys_match_full_reduce(spark, events):
 
 
 def test_auto_gate_falls_back_to_full_shuffle(spark, tmp_path, monkeypatch):
-    """'auto' must pick the full-row shuffle reduce — NOT a forced broadcast —
-    when the estimated winner count exceeds dedup_bcast_limit (VERDICT r2:
-    gate on observed rows, never cfg.batch_size), with byte-identical state
-    either way."""
+    """'auto' must pick the shuffle-hash row recovery — NOT a forced
+    broadcast — when the batch's row count exceeds _BROADCAST_MAX_ROWS
+    (VERDICT r2: gate on observed rows, never cfg.batch_size), with
+    byte-identical state either way."""
     from data_warehouse_etl_spark.cdc import (
         CdcEngine,
         EngineConfig,
@@ -92,13 +103,11 @@ def test_auto_gate_falls_back_to_full_shuffle(spark, tmp_path, monkeypatch):
     )
     base = dict(ledger_path=led.path, batch_size=1000, num_buckets=2)
 
-    # tiny limit -> est winners (rows x conservative ratio 1.0) exceeds it
+    # tiny limit -> the batch's row count exceeds it
+    monkeypatch.setattr(engine_mod, "_BROADCAST_MAX_ROWS", 100)
     eng = CdcEngine(
         spark,
-        EngineConfig(
-            pages_path=str(tmp_path / "auto"), dedup_plan="auto",
-            dedup_bcast_limit=100, **base
-        ),
+        EngineConfig(pages_path=str(tmp_path / "auto"), dedup_plan="auto", **base),
     )
 
     def _boom(*a, **k):
@@ -175,9 +184,10 @@ def test_simhash64_planted_neardups_share_a_band(spark):
 
 
 def test_engine_hot_detection_cadence_state_invariant(spark, tmp_path):
-    """Amortized detect mode (round 3): detection runs on the 2nd batch and
+    """Amortized detection (round 3): detection runs on the 2nd batch and
     every Nth after; the detected hot set takes the salted reduce; the final
-    state is byte-identical to the plain reduce (plan shape only)."""
+    state is byte-identical to a run that never finds a hot key (plan shape
+    only)."""
     from data_warehouse_etl_spark.cdc import (
         CdcEngine,
         EngineConfig,
@@ -194,7 +204,7 @@ def test_engine_hot_detection_cadence_state_invariant(spark, tmp_path):
                 dedup_plan="broadcast_keys")
     det = CdcEngine(
         spark,
-        EngineConfig(pages_path=str(tmp_path / "det"), skew_mode="detect",
+        EngineConfig(pages_path=str(tmp_path / "det"),
                      hot_threshold=10, hot_detect_every=1, **base),
     )
     det.run()
@@ -202,9 +212,11 @@ def test_engine_hot_detection_cadence_state_invariant(spark, tmp_path):
 
     plain = CdcEngine(
         spark,
-        EngineConfig(pages_path=str(tmp_path / "plain"), skew_mode="plain", **base),
+        EngineConfig(pages_path=str(tmp_path / "plain"), hot_threshold=10**9,
+                     hot_detect_every=1, **base),
     )
     plain.run()
+    assert not plain._hot_keys
     assert state_hash(det.read_pages()) == state_hash(plain.read_pages())
 
 
@@ -530,24 +542,43 @@ def test_simhash_hamming_verify_cuts_the_candidate_flood(spark):
 def test_null_key_rows_survive_dedup(spark):
     """A NULL key is an ordinary group (round-6 review finding: the semi-
     join row recovery must be null-safe on both columns, or NULL-key rows
-    silently vanish where the aggregation form kept a winner for them)."""
-    from data_warehouse_etl_spark.cdc.dedup import (
-        lww_dedup_broadcast_keys,
-        lww_dedup_salted,
-    )
+    silently vanish where the aggregation form kept a winner for them) —
+    with and without hot-key salting, on both row-recovery paths."""
+    df = _null_key_events(spark)
+    for hot_keys in (None, ["A"], [None], [None, "A"]):
+        got = {r["url"]: r["payload"] for r in lww_dedup(df, hot_keys=hot_keys, n_salts=4).collect()}
+        assert got == {None: "n2", "A": "a1"}, (hot_keys, got)
+        # broadcast-keys path: winner set must include the NULL-key winner seq
+        bc = {r["payload"] for r in lww_dedup_broadcast_keys(df, hot_keys=hot_keys, n_salts=4).collect()}
+        assert bc == {"n2", "a1"}, (hot_keys, bc)
 
+
+def test_hot_null_key_takes_salted_branch(spark):
+    """A NULL listed as a hot key routes the NULL-key group to the salted
+    reduce (``isin`` alone never matches NULL, which would leave it cold),
+    the winners still equal the unsalted ones, and the routing predicate
+    is unchanged when no NULL is listed."""
+    from data_warehouse_etl_spark.cdc.dedup import _hot_predicate, _winner_ties
+
+    df = _null_key_events(spark)
+    order = ("warc_ts", "seq")
+    assert df.filter(_hot_predicate("url", [None])).count() == 2  # the NULL rows
+    assert df.filter(_hot_predicate("url", ["A"])).count() == 1  # NULLs stay cold
+    salted = _winner_ties(df, "url", order, hot_keys=[None], n_salts=4)
+    assert "_salt" in salted._jdf.queryExecution().optimizedPlan().toString()
+    assert {tuple(r) for r in salted.collect()} == {
+        tuple(r) for r in _winner_ties(df, "url", order).collect()
+    }
+    plain = F.coalesce(F.col("url").isin(["A"]), F.lit(False))
+    assert str(_hot_predicate("url", ["A"])) == str(plain)
+
+
+def _null_key_events(spark):
     rows = [(1, None, "2024-01-01 10:00:00", "n1"),
             (2, None, "2024-01-01 11:00:00", "n2"),
             (3, "A", "2024-01-01 10:00:00", "a1")]
-    df = (
+    return (
         spark.createDataFrame(rows, "seq long, url string, ts string, payload string")
         .withColumn("warc_ts", F.col("ts").cast("timestamp"))
         .drop("ts")
     )
-    for fn in (lww_dedup, lambda d: lww_dedup_salted(d, n_salts=4),
-               lambda d: lww_dedup_salted(d, n_salts=4, hot_threshold=1)):
-        got = {r["url"]: r["payload"] for r in fn(df).collect()}
-        assert got == {None: "n2", "A": "a1"}, got
-    # broadcast-keys path: winner set must include the NULL-key winner seq
-    bc = {r["payload"] for r in lww_dedup_broadcast_keys(df).collect()}
-    assert bc == {"n2", "a1"}

@@ -1,5 +1,5 @@
-"""Merge-on-read guarantees: bounded per-batch writes, CoW parity,
-compaction invariance, commit-lock serialization.
+"""Merge-on-read guarantees: bounded per-batch writes, oracle parity,
+compaction invariance, commit-lock serialization, crash recovery.
 
 The round-1 scale ceiling was copy-on-write: a batch touching all buckets
 rewrote the whole table, making replay cost quadratic in table size
@@ -7,18 +7,21 @@ rewrote the whole table, making replay cost quadratic in table size
 these tests pin the contract:
 
 - per-batch written bytes are O(batch), not O(table)  (bounded-write law)
-- MoR and CoW replays reach byte-identical final state at any batch slicing
+- replays reach the pandas oracle's final state at any batch slicing
 - compaction is a pure layout change (state_hash invariant to cadence)
 - concurrent committers serialize on the lock file, losers get an error
   instead of silently clobbering the winner's manifest
+- a crash at any commit step resumes to the uninterrupted state
 """
 
 import os
 
+import pandas as pd
 import pytest
 
 from data_warehouse_etl_spark.cdc import CdcEngine, EngineConfig, LedgerSpec, generate_ledger
 from data_warehouse_etl_spark.lake import LakeTable, state_hash
+from test_cdc_engine import _engine_final_state, _oracle_final_state
 
 SPEC = LedgerSpec(n_urls=400, n_events=6000, n_parts=4, seed=21, evolve_at_seq=3000)
 
@@ -54,47 +57,39 @@ def _commit_bytes_per_batch(spark, eng: CdcEngine) -> list[int]:
 
 def test_mor_bounded_write_bytes(spark, tmp_lake):
     """The bounded-write law: with uniform urls every batch touches every
-    bucket, so CoW rewrites ~the whole table each batch while MoR writes
-    only the batch's survivors. MoR per-batch bytes must stay flat as the
-    table grows; CoW's must exceed them by a wide margin late in the replay.
+    bucket, yet MoR writes only the batch's survivors — per-batch bytes
+    stay flat as the table grows.
 
     The table must dwarf a batch for the effect to be visible: 3000 urls,
-    500-event batches → by the last batch CoW carries ~5x a batch's rows.
+    500-event batches → by the last batch the table holds ~5x a batch's
+    rows, which a rewrite-the-buckets apply would carry every batch.
     """
     spec = LedgerSpec(n_urls=3000, n_events=4500, n_parts=4, seed=33, evolve_at_seq=None)
     led = generate_ledger(os.path.join(tmp_lake, "changes_bw"), spec)
-    mor = CdcEngine(
-        spark, _cfg(led, tmp_lake, "p_mor", merge_strategy="mor", batch_size=500)
-    )
-    cow = CdcEngine(
-        spark, _cfg(led, tmp_lake, "p_cow", merge_strategy="cow", batch_size=500)
-    )
+    mor = CdcEngine(spark, _cfg(led, tmp_lake, "p_mor", batch_size=500))
     b_mor = _commit_bytes_per_batch(spark, mor)
-    b_cow = _commit_bytes_per_batch(spark, cow)
-    assert len(b_mor) == len(b_cow) >= 6
+    assert len(b_mor) >= 6
 
     # MoR stays flat: last batch costs about the same as the second
     # (first batch is all-inserts and can be bigger than steady state)
-    assert b_mor[-1] <= 2.0 * b_mor[1], (b_mor, b_cow)
-    # CoW grows with the table: by the end it writes far more than MoR does
-    assert b_cow[-1] >= 2.5 * b_mor[-1], (b_mor, b_cow)
-    # and the states agree
-    assert state_hash(mor.read_pages()) == state_hash(cow.read_pages())
+    assert b_mor[-1] <= 2.0 * b_mor[1], b_mor
+    # and the state is the oracle's
+    pd.testing.assert_frame_equal(
+        _engine_final_state(spark, mor), _oracle_final_state(led), check_dtype=False
+    )
 
 
-def test_mor_cow_parity_across_slicings(spark, tmp_lake):
+def test_mor_slicings_match_oracle(spark, tmp_lake):
     led = _ledger(tmp_lake)
+    want = _oracle_final_state(led)
     hashes = []
-    for name, strat, bs in (
-        ("s1", "mor", 500),
-        ("s2", "mor", 6000),
-        ("s3", "cow", 900),
-    ):
-        eng = CdcEngine(
-            spark, _cfg(led, tmp_lake, name, merge_strategy=strat, batch_size=bs)
-        )
+    for name, bs in (("s1", 500), ("s2", 6000), ("s3", 900)):
+        eng = CdcEngine(spark, _cfg(led, tmp_lake, name, batch_size=bs))
         eng.run()
         hashes.append(state_hash(eng.read_pages()))
+        pd.testing.assert_frame_equal(
+            _engine_final_state(spark, eng), want, check_dtype=False
+        )
     assert len(set(hashes)) == 1, hashes
 
 
@@ -253,3 +248,99 @@ def test_post_shuffle_extract_state_identical(spark, tmp_lake, monkeypatch):
     h_post = run("pages_post", 0)
     h_pre = run("pages_pre", 10**12)
     assert h_post == h_pre
+
+
+# ------------------------------------------------------------ crash points
+
+CRASH_SPEC = LedgerSpec(n_urls=200, n_events=2400, n_parts=2, seed=17, evolve_at_seq=1200)
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _crash_cfg(led, path):
+    return EngineConfig(
+        ledger_path=led.path,
+        pages_path=path,
+        batch_size=400,
+        num_buckets=4,
+        compact_every_batches=2,
+        mirror_flush_batches=1,
+    )
+
+
+@pytest.fixture(scope="module")
+def crash_ref(spark, tmp_path_factory):
+    """The crash matrix's ledger and its uninterrupted replay's state hash;
+    that replay's state is checked against the pandas oracle once here."""
+    d = tmp_path_factory.mktemp("crash")
+    led = generate_ledger(str(d / "changes"), CRASH_SPEC)
+    ref = CdcEngine(spark, _crash_cfg(led, str(d / "ref")))
+    ref.run()
+    pd.testing.assert_frame_equal(
+        _engine_final_state(spark, ref), _oracle_final_state(led), check_dtype=False
+    )
+    return led, state_hash(ref.read_pages())
+
+
+def _crash_in_manifest_write(monkeypatch, operation: str, nth: int, after_write: bool):
+    """Crash the nth commit of ``operation`` once its data files are
+    written: before its manifest is written, or (``after_write``) after the
+    manifest but before the pointer swap."""
+    real = LakeTable._write_manifest
+    seen = []
+
+    def write(path, m):
+        if m.history[-1]["operation"] == operation:
+            seen.append(m.version)
+            if len(seen) == nth:
+                if after_write:
+                    real(path, m)
+                raise _Crash(f"crash in {operation} commit")
+        real(path, m)
+
+    monkeypatch.setattr(LakeTable, "_write_manifest", staticmethod(write))
+
+
+def _crash_in_flush(monkeypatch, nth: int):
+    """Crash at the nth mirror flush — after that batch's pointer swap —
+    and every flush after it (a dead process flushes nothing more)."""
+    real = CdcEngine.flush_mirrors
+    calls = []
+
+    def flush(self):
+        calls.append(1)
+        if len(calls) >= nth:
+            raise _Crash("crash before the mirror flush")
+        real(self)
+
+    monkeypatch.setattr(CdcEngine, "flush_mirrors", flush)
+
+
+@pytest.mark.parametrize(
+    "point", ["before_manifest", "before_swap", "before_flush", "in_compact"]
+)
+def test_crash_point_resumes_to_uninterrupted_state(
+    spark, tmp_lake, monkeypatch, crash_ref, point
+):
+    """A crash at each step of the delta commit, and inside compaction,
+    leaves a table that a fresh engine resumes to the uninterrupted run's
+    state_hash (the manifest pointer swap is the one commit point)."""
+    led, h_ref = crash_ref
+    path = os.path.join(tmp_lake, "pages")
+    if point == "before_flush":
+        _crash_in_flush(monkeypatch, nth=3)
+    elif point == "in_compact":
+        _crash_in_manifest_write(monkeypatch, "compact", nth=1, after_write=False)
+    else:
+        _crash_in_manifest_write(
+            monkeypatch, "append_deltas", nth=3, after_write=point == "before_swap"
+        )
+    with pytest.raises(_Crash):
+        CdcEngine(spark, _crash_cfg(led, path)).run()
+    monkeypatch.undo()
+
+    resumed = CdcEngine(spark, _crash_cfg(led, path))
+    assert resumed.run() > 0
+    assert state_hash(resumed.read_pages()) == h_ref

@@ -236,11 +236,10 @@ def _live_pdf(eng, version) -> pd.DataFrame:
     return df.toPandas().sort_values("url").reset_index(drop=True)
 
 
-@pytest.mark.parametrize("strategy", ["mor", "cow"])
-def test_engine_changelog_matches_state_diff_and_composes(spark, tmp_path, strategy):
-    """Both physical merge strategies — MoR delta commits and CoW bucket
-    overwrites — must produce identical changelog semantics (the diff is
-    over resolved snapshots, not over the commit mechanism)."""
+def test_engine_changelog_matches_state_diff_and_composes(spark, tmp_path):
+    """The engine's changelog over merge-on-read delta commits equals an
+    independent state diff and composes across adjacent intervals (the
+    diff is over resolved snapshots, not over the commit mechanism)."""
     ledger = generate_ledger(
         str(tmp_path / "changes"),
         LedgerSpec(n_urls=80, n_events=600, n_parts=2, seed=11, evolve_at_seq=None),
@@ -251,7 +250,6 @@ def test_engine_changelog_matches_state_diff_and_composes(spark, tmp_path, strat
         batch_size=200,
         num_buckets=4,
         salt_k=4,
-        merge_strategy=strategy,
     )
     eng = CdcEngine(spark, cfg)
     versions = [eng.pages.manifest.version]

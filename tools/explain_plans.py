@@ -4,7 +4,7 @@ grep them for the properties that matter at 100 TB.
 Checks (per the scale rules the engine is designed around):
 - parquet scans show PushedFilters + pruned ReadSchema (no full-width reads);
 - small dims join as BroadcastHashJoin;
-- the LWW dedup is HashAggregate (map-side combinable), never Window;
+- the LWW dedup is HashAggregate, never Window or SortAggregate;
 - WholeStageCodegen spans cover the relational operators;
 - no CartesianProduct / BroadcastNestedLoopJoin outside the intended
   cross-join-with-one-row-query cases.
@@ -68,8 +68,8 @@ def main() -> int:
                 want=["HashAggregate", "partial_sum"])
 
     # W2 rank path is window (by design for the query), but the ENGINE dedup
-    # must be aggregation:
-    from data_warehouse_etl_spark.cdc.dedup import lww_dedup_salted
+    # must be hash aggregation:
+    from data_warehouse_etl_spark.cdc.dedup import lww_dedup, lww_dedup_broadcast_keys
     from pyspark.sql import functions as F
     ev = (
         spark.read.parquet(f"{sf}/events.parquet")
@@ -80,11 +80,13 @@ def main() -> int:
             "value",
         )
     )
-    # max_by(struct, struct) aggregates with a variable-width buffer, so Spark
-    # plans SortAggregate — still map-side combining (partial_max_by), which
-    # is the property that matters for skew; Window is the anti-pattern.
-    ok &= audit("engine lww = agg not window", lww_dedup_salted(ev),
-                want=["partial_max_by"], forbid=["Window"])
+    # Window funnels a hot key through one sorted task; SortAggregate (a
+    # struct-typed buffer) sorts the whole input on both sides of the
+    # exchange. Both row-recovery paths must plan primitive hash aggregates.
+    for name, fn in (("lww_dedup", lww_dedup),
+                     ("lww_dedup_broadcast_keys", lww_dedup_broadcast_keys)):
+        ok &= audit(f"engine {name} = hash agg", fn(ev),
+                    want=["HashAggregate"], forbid=["Window", "SortAggregate"])
 
     # J6 range join: equi key drives the join (no BNLJ)
     ok &= audit("j6 equi-driven range join", PARITY_QUERIES["j6_range_join"](spark, sf),

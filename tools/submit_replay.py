@@ -37,9 +37,6 @@ def main() -> None:
                     help="2-3x total executor cores; default: Spark conf")
     ap.add_argument("--dedup-plan", default="auto",
                     choices=["auto", "broadcast_keys", "full_shuffle"])
-    ap.add_argument("--skew-mode", default="detect",
-                    choices=["detect", "salted", "plain"])
-    ap.add_argument("--merge-strategy", default="mor", choices=["mor", "cow"])
     ap.add_argument("--watermark-delay-s", type=int, default=None)
     ap.add_argument("--compact-every-batches", type=int, default=32)
     ap.add_argument("--state-hash", action="store_true",
@@ -63,8 +60,6 @@ def main() -> None:
         num_buckets=args.num_buckets,
         files_per_bucket=args.files_per_bucket,
         dedup_plan=args.dedup_plan,
-        skew_mode=args.skew_mode,
-        merge_strategy=args.merge_strategy,
         watermark_delay_s=args.watermark_delay_s,
         compact_every_batches=args.compact_every_batches,
     )
