@@ -43,8 +43,8 @@ is the Arrow-batched extractor on post-dedup survivors.
 from __future__ import annotations
 
 import json
+import logging
 import os
-import sys
 import time
 from dataclasses import dataclass, field
 
@@ -64,7 +64,7 @@ CHECKPOINTS_PROP = "checkpoints"
 BATCH_PROP = "last_batch_id"
 WM_PROP = "wm_high"  # committed event-time high-water-mark (monotone watermark)
 
-_TIMING = os.environ.get("SPARK_GRAFT_DEBUG_TIMING", "") == "1"
+log = logging.getLogger(__name__)
 
 # Adaptive extract placement (see _transform_and_merge): post-exchange
 # extraction is chosen when each write task gets at least this many rows —
@@ -82,7 +82,7 @@ _BROADCAST_MAX_ROWS = 4_000_000
 
 
 class _Timer:
-    """Phase timer, printed only under SPARK_GRAFT_DEBUG_TIMING=1."""
+    """Phase timer: each mark logs the phase's wall time at DEBUG level."""
 
     def __init__(self, label: str):
         self.label = label
@@ -90,8 +90,7 @@ class _Timer:
 
     def mark(self, phase: str) -> None:
         now = time.monotonic()
-        if _TIMING:
-            print(f"TIMING {self.label} {phase}: {now - self.t:.2f}s", flush=True)
+        log.debug("TIMING %s %s: %.2fs", self.label, phase, now - self.t)
         self.t = now
 
 
@@ -346,7 +345,7 @@ class CdcEngine:
                     applied,
                 )
             except (OSError, RuntimeError) as e:
-                print(f"WARN: schedule registry write skipped: {e}", file=sys.stderr)
+                log.warning("schedule registry write skipped: %s", e)
         return applied
 
     def compact(self, buckets: list[int] | None = None) -> None:

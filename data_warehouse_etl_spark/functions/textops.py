@@ -21,8 +21,21 @@ Design rules:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..lake import LakeTable
+from .similarity import (
+    _built,
+    _changelog_rows,
+    _current,
+    _props,
+    _rebuild,
+    _upsert,
+    sync_index_table,
+)
 
 # --- dialect-specific shingle CTEs (word 3-grams, deduped per doc) ---------
 
@@ -323,8 +336,9 @@ def connected_components(
     collect. Deliberately NOT a recursive CTE (Spark 4 has one): the
     transitive-closure reach set is O(|component|²) rows, which explodes on
     the giant boilerplate clusters a web corpus always contains; hash-min is
-    O(|V| + |E|) per round. For adversarial diameters (chains), use
-    :func:`connected_components_star` — same contract, O(log n) rounds.
+    O(|V| + |E|) per round. A chain-shaped component needs as many rounds
+    as its diameter; past ``max_iters`` this raises rather than return a
+    split component.
 
     ``edges`` is treated as UNDIRECTED: both directions are added
     internally (duplicate edges are harmless under MIN, so no distinct
@@ -367,92 +381,7 @@ def connected_components(
     # with diameter > max_iters would be split into several clusters)
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} rounds — "
-        "a component's diameter exceeds the budget; use "
-        "connected_components_star (O(log n) rounds) or raise max_iters"
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iters: int = 50,
-) -> DataFrame:
-    """Alternating large-star / small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14) — the
-    O(log n)-round scale path for ADVERSARIAL diameters, where hash-min
-    label propagation (:func:`connected_components`) would need
-    O(diameter) rounds. Web corpora mostly produce shallow near-dup
-    clusters (hash-min wins: fewer, cheaper rounds), but chain-shaped
-    components (pagination series, incremental boilerplate drift) have
-    diameter ∝ size; this variant converges in logarithmic rounds on those.
-
-    Per round: large-star points every neighbor LARGER than u at u's
-    neighborhood minimum (one symmetrize + groupBy-MIN + keyed join);
-    small-star re-points each node's SMALLER neighbors (one groupBy-MIN +
-    join). Both are key-partitioned aggregations with map-side combine —
-    the same shuffle shape as hash-min, never all-pairs. Iterates to a
-    fixpoint (edge set stable ⇒ a forest of stars centered at each
-    component's min node), lineage cut per round via localCheckpoint.
-    Returns (node, lbl), same contract as :func:`connected_components`.
-    """
-    # canonical directed form: (u, v) with u > v, set semantics
-    e = (
-        edges.select(
-            F.greatest(F.col(src), F.col(dst)).alias("u"),
-            F.least(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    for _ in range(max_iters):
-        # large-star: symmetrize; for each u emit (v, min(N(u) ∪ {u})) for
-        # every neighbor v > u
-        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m_lg = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("mn", F.col("u")).alias("m"))
-        )
-        large = (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(m_lg, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-        )
-        # small-star on the large-star output: for each u emit
-        # (v, min(N⁻(u) ∪ {u})) for every smaller neighbor v and u itself
-        d = large.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        ).distinct()
-        m_sm = d.groupBy("u").agg(F.min("v").alias("m"))
-        joined = d.join(m_sm, "u")
-        new = (
-            joined.select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(m_sm.select(F.col("u"), F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        # fixpoint: the canonical edge SET is unchanged (both differences
-        # empty — two O(1)-row driver actions, not a data collect)
-        stable = (
-            new.exceptAll(e).limit(1).count() == 0
-            and e.exceptAll(new).limit(1).count() == 0
-        )
-        e = new
-        if stable:
-            # e is a star forest pointing leaf -> center (= component min)
-            return (
-                e.select(F.col("u").alias("node"), F.col("v").alias("lbl"))
-                .unionByName(
-                    e.select(F.col("v").alias("node"), F.col("v").alias("lbl"))
-                )
-                .distinct()
-            )
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iters} rounds"
+        "a component's diameter exceeds the budget; raise max_iters"
     )
 
 
@@ -1018,12 +947,13 @@ def dedup_agreement_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the production shape is a MATERIALIZED band index (the `bandrows` relation
 # of q_dedup_minhash_lsh, laid out by a band-hash bucket) that (a) new
 # batches PROBE — bands for the batch only, pruned scan of the touched
-# bucket partitions, join on (band_no, band_hash) — and (b) the CDC
-# changelog MAINTAINS incrementally. Same physical idiom as the ANN layouts
-# (similarity.py): partitioned parquet + assign sidecar + redo log; the
-# shared crash-safety helpers are imported from there.
+# buckets, join on (band_no, band_hash) — and (b) the CDC changelog
+# MAINTAINS incrementally. Same physical idiom and the same one-commit
+# upsert core as the ANN layouts (similarity.py): a LakeTable bucketed by
+# identity on bh_bucket.
 
 _BAND_BUCKETS = 64
+_DOC_COLS = ["doc_id", "text"]
 
 
 def _band_bucket_col() -> F.Column:
@@ -1039,39 +969,38 @@ def _bandrows_df(spark: SparkSession, docs_view: str) -> DataFrame:
     )
 
 
+def _minhash_rows(spark: SparkSession, docs_df: DataFrame) -> DataFrame:
+    """Band rows of (doc_id, text) docs, plus one tombstone row (NULL
+    bucket) per doc WITHOUT band rows — a NULL text (delete) or a text
+    below shingle length — so its old band rows leave the index."""
+    docs_df.filter(F.col("text").isNotNull()).createOrReplaceTempView("mh_docs_v")
+    live = _bandrows_df(spark, "mh_docs_v")
+    tomb = docs_df.select(
+        "doc_id",
+        F.lit(None).cast("int").alias("band_no"),
+        F.lit(None).cast("string").alias("band_hash"),
+        F.lit(None).cast("int").alias("bh_bucket"),
+    ).join(live.select("doc_id").distinct(), "doc_id", "left_anti")
+    return live.unionByName(tomb)
+
+
+def _minhash_rebuild(
+    spark: SparkSession, index_dir: str, docs: DataFrame, synced: int | None
+) -> None:
+    docs.createOrReplaceTempView("mh_build_docs_v")
+    rows = _bandrows_df(spark, "mh_build_docs_v")
+    _rebuild(index_dir, "bands", rows, "bh_bucket", _props(synced=synced))
+
+
 def build_minhash_index(
     spark: SparkSession, docs_df: DataFrame, index_dir: str, force: bool = False
 ) -> str:
     """Materialize the band index for a document corpus (one-time; later
-    batches probe and upsert it). Layout: ``bands/`` partitioned by
-    bh_bucket with (doc_id, band_no, band_hash); ``assign/`` sidecar maps
-    doc_id -> its bucket set (for upsert/delete old-row discovery without a
-    corpus scan)."""
-    import os
-
-    marker = os.path.join(index_dir, "_built.txt")
-    if os.path.exists(marker) and not force:
-        return index_dir
-    # a forced rebuild must discard any pending redo batch from a crashed
-    # pre-rebuild sync: healing it onto the REBUILT index would replay
-    # stale band rows and break the advertised exactly-once effect
-    # (round-5 advisor finding)
-    if force:
-        from .similarity import _clear_redo
-
-        _clear_redo(index_dir)
-    docs_df.createOrReplaceTempView("mh_build_docs_v")
-    rows = _bandrows_df(spark, "mh_build_docs_v")
-    rows.write.mode("overwrite").partitionBy("bh_bucket").parquet(
-        os.path.join(index_dir, "bands")
-    )
-    spark.read.parquet(os.path.join(index_dir, "bands")).select(
-        "doc_id", "bh_bucket"
-    ).distinct().write.mode("overwrite").partitionBy("bh_bucket").parquet(
-        os.path.join(index_dir, "assign")
-    )
-    with open(marker, "w") as fh:
-        fh.write("built")
+    batches probe and upsert it). Layout: ``bands/``, a LakeTable of
+    (doc_id, band_no, band_hash, bh_bucket) bucketed by identity on
+    bh_bucket. A rebuild is one atomic replace commit."""
+    if force or not _built(os.path.join(index_dir, "bands")):
+        _minhash_rebuild(spark, index_dir, docs_df, None)
     return index_dir
 
 
@@ -1080,23 +1009,18 @@ def minhash_probe_new(
 ) -> DataFrame:
     """Incremental dedup probe: near-dup candidates (new_doc_id, dup_of)
     between a NEW batch and the indexed corpus. Bands are computed for the
-    batch only; the index scan is pruned to the batch's bucket partitions
-    (<= _BAND_BUCKETS, usually far fewer for a small batch); the join key
-    is (band_no, band_hash) — candidate volume is bucket-bounded, never
-    |batch| x |corpus|. Self-matches are excluded so a probe of already-
-    indexed docs reports only their OTHER-doc duplicates."""
-    import os
-
+    batch only; the index is read pruned at the manifest to the batch's
+    buckets (<= _BAND_BUCKETS, usually far fewer for a small batch); the
+    join key is (band_no, band_hash) — candidate volume is bucket-bounded,
+    never |batch| x |corpus|. Self-matches are excluded so a probe of
+    already-indexed docs reports only their OTHER-doc duplicates."""
     new_docs_df.createOrReplaceTempView("mh_probe_docs_v")
     new_rows = _bandrows_df(spark, "mh_probe_docs_v").localCheckpoint()
     buckets = [r["b"] for r in new_rows.select(
         F.col("bh_bucket").alias("b")).distinct().collect()]
     if not buckets:
         return spark.createDataFrame([], "new_doc_id long, dup_of long")
-    idx = (
-        spark.read.parquet(os.path.join(index_dir, "bands"))
-        .filter(F.col("bh_bucket").isin(buckets))
-    )
+    idx = LakeTable.load(os.path.join(index_dir, "bands")).read(spark, buckets=buckets)
     return (
         new_rows.alias("n")
         .join(
@@ -1113,105 +1037,28 @@ def minhash_probe_new(
     )
 
 
-def _apply_minhash_upsert(
-    spark: SparkSession, index_dir: str, new: DataFrame, affected: list[int]
-) -> None:
-    """Idempotent apply (same contract as similarity._apply_srp_upsert):
-    rewrite the affected bucket partitions with the batch's doc_ids dropped
-    everywhere and the batch's non-tombstone band rows unioned in."""
-    import os
-    import shutil
-
-    bands_path = os.path.join(index_dir, "bands")
-    assign_path = os.path.join(index_dir, "assign")
-    ids = new.select("doc_id").distinct()
-    merged = (
-        spark.read.parquet(bands_path)
-        .filter(F.col("bh_bucket").isin(affected))
-        .join(F.broadcast(ids), "doc_id", "left_anti")
-        .unionByName(new.filter(F.col("band_hash").isNotNull()))
-        .localCheckpoint()
-    )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("bh_bucket").parquet(bands_path)
-        merged.select("doc_id", "bh_bucket").distinct().write.mode(
-            "overwrite"
-        ).partitionBy("bh_bucket").parquet(assign_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    present = {
-        int(r["bh_bucket"]) for r in merged.select("bh_bucket").distinct().collect()
-    }
-    for b in affected:
-        if b not in present:
-            shutil.rmtree(os.path.join(bands_path, f"bh_bucket={b}"), ignore_errors=True)
-            shutil.rmtree(os.path.join(assign_path, f"bh_bucket={b}"), ignore_errors=True)
-
-
 def minhash_index_upsert(
-    spark: SparkSession, index_dir: str, docs_df: DataFrame
+    spark: SparkSession, index_dir: str, docs_df: DataFrame, synced_version: int | None = None
 ) -> list[int]:
     """Incremental maintenance: ``docs_df`` is (doc_id, text); a NULL text
-    is a DELETE tombstone (the doc's band rows leave the index). Old rows
-    are found via the assign sidecar (broadcast semi-join of the batch's
-    ids), only affected bucket partitions are rewritten, and the redo log
-    (shared with the ANN indexes) makes a torn upsert heal on the next
-    call. Cost: O(affected buckets), never O(corpus)."""
-    import os
-
-    from .similarity import _clear_redo, _heal_torn_upsert, _write_redo
-
-    assign_path = os.path.join(index_dir, "assign")
-    _heal_torn_upsert(spark, index_dir, _apply_minhash_upsert)
-
-    docs_df.filter(F.col("text").isNotNull()).createOrReplaceTempView(
-        "mh_upsert_docs_v"
-    )
-    live_rows = _bandrows_df(spark, "mh_upsert_docs_v")
-    tomb = docs_df.select(
-        "doc_id",
-        F.lit(None).cast("int").alias("band_no"),
-        F.lit(None).cast("string").alias("band_hash"),
-        F.lit(None).cast("int").alias("bh_bucket"),
-    ).join(live_rows.select("doc_id").distinct(), "doc_id", "left_anti")
-    new = live_rows.unionByName(tomb).localCheckpoint()
-
-    ids = new.select("doc_id").distinct()
-    new_buckets = {
-        int(r["bh_bucket"])
-        for r in new.select("bh_bucket").where("bh_bucket IS NOT NULL")
-        .distinct().collect()
-    }
-    old_buckets = {
-        int(r["bh_bucket"])
-        for r in spark.read.parquet(assign_path)
-        .join(F.broadcast(ids), "doc_id")
-        .select("bh_bucket").distinct().collect()
-    }
-    affected = sorted(new_buckets | old_buckets)
-    if not affected:
-        return []
-    _write_redo(index_dir, new, affected)
-    _apply_minhash_upsert(spark, index_dir, new, affected)
-    _clear_redo(index_dir)
-    return affected
+    is a DELETE tombstone (the doc's band rows leave the index). One
+    ``overwrite_buckets`` commit of the affected buckets (the shared
+    :func:`similarity._upsert` core: old rows found by a column-pruned
+    (doc_id, bh_bucket) read of the index). Cost: O(affected buckets),
+    never O(corpus)."""
+    rows = _minhash_rows(spark, docs_df)
+    props = _props(synced=synced_version)
+    return _upsert(spark, os.path.join(index_dir, "bands"), "doc_id", rows, props)
 
 
 def minhash_index_sync_changelog(
-    spark: SparkSession, index_dir: str, changelog_df: DataFrame
+    spark: SparkSession, index_dir: str, changelog_df: DataFrame, synced_version: int | None = None
 ) -> list[int]:
     """CDC-out consumer: maintain the band index from a documents-table
     changelog (insert/update upsert their new text; deletes tombstone;
     update preimages of the "both" convention are ignored)."""
-    ups = changelog_df.filter(
-        F.col("_change_type").isin("insert", "update", "update_postimage")
-    ).select("doc_id", "text")
-    dels = changelog_df.filter(F.col("_change_type") == "delete").select(
-        "doc_id", F.lit(None).cast("string").alias("text")
-    )
-    return minhash_index_upsert(spark, index_dir, ups.unionByName(dels))
+    rows = _changelog_rows(changelog_df, _DOC_COLS)
+    return minhash_index_upsert(spark, index_dir, rows, synced_version)
 
 
 def minhash_index_sync_table(
@@ -1221,59 +1068,9 @@ def minhash_index_sync_table(
     row_filter=None,
     exclude: list[str] | None = None,
 ) -> dict:
-    """Self-anchoring CDC->index sync: the index remembers the source
-    snapshot it reflects (``_synced_version.txt``) and advances itself —
-    the caller never tracks interval endpoints (same contract as
-    ``ivm.IncrementalAggregate.refresh``).
-
-    First sync (or an anchor snapshot expired by retention GC) rebuilds
-    from the live view; every other sync reads the table changelog from the
-    anchor and applies it incrementally. The anchor is written AFTER the
-    apply: a crash in between re-applies the same interval next sync, which
-    is a state no-op — the upsert drops the batch's doc_ids everywhere and
-    unions identical rows back (idempotent), so marker-after-apply gives an
-    exactly-once EFFECT without a transaction spanning index and marker.
-
-    ``table`` is a ``LakeTable`` of documents carrying (doc_id, text);
-    ``row_filter``/``exclude`` are passed to ``read_changes`` (the caller's
-    live-view conventions, e.g. tombstone filtering).
-    """
-    import os
-
-    marker = os.path.join(index_dir, "_synced_version.txt")
-    cur = table.manifest.version
-
-    def _write_marker() -> None:
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(cur))
-        os.replace(tmp, marker)
-
-    last = None
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            last = int(fh.read().strip())
-    if last == cur:
-        return {"mode": "noop", "from": last, "to": cur}
-
-    def _rebuild() -> dict:
-        docs = table.read(spark)
-        if row_filter is not None:
-            docs = row_filter(docs)
-        build_minhash_index(
-            spark, docs.select("doc_id", "text"), index_dir, force=True
-        )
-        _write_marker()
-        return {"mode": "rebuild", "from": last, "to": cur}
-
-    if last is None:
-        return _rebuild()
-    try:
-        cl = table.read_changes(
-            spark, last, exclude=exclude, row_filter=row_filter
-        )
-    except ValueError:
-        return _rebuild()  # anchor snapshot aged out of retention
-    affected = minhash_index_sync_changelog(spark, index_dir, cl)
-    _write_marker()
-    return {"mode": "delta", "from": last, "to": cur, "buckets": len(affected)}
+    """:func:`similarity.sync_index_table` for the band index: ``table`` is
+    a ``LakeTable`` of documents carrying (doc_id, text)."""
+    return sync_index_table(
+        spark, index_dir, table, _current(os.path.join(index_dir, "bands")),
+        _minhash_rebuild, minhash_index_sync_changelog, _DOC_COLS, row_filter, exclude,
+    )

@@ -19,7 +19,8 @@ same *semantics* on plain parquet + a JSON manifest, behind one interface
   rebuild-with-extra-columns-and-rename idiom
   (``FCT_RESERVATION_UPD.sql:167-256``).
 - **Bucket partitioning + pruning**: data files are laid out by
-  ``bucket(N, key)``; commits that only touch some buckets rewrite only those
+  ``bucket(N, key)`` (or by ``identity(key)`` for an integer cell id, the
+  similarity indexes' layout); commits that only touch some buckets rewrite only those
   buckets' files (copy-on-write MERGE granularity), and reads can prune to a
   bucket subset. Analog of Iceberg's ``bucket(N, url)`` partition transform;
   the reference's only layout directive, ``DISTRIBUTE ON RANDOM``
@@ -94,6 +95,9 @@ class Manifest:
     # the greatest version_cols tuple wins (None = plain table, no MoR)
     row_key: str | None = None
     version_cols: list[str] = field(default_factory=list)
+    # partition transform of bucket_col: "hash" = pmod(xxhash64(col), N);
+    # "identity" = the column's own int value (one bucket per cell id)
+    transform: str = "hash"
 
     @property
     def current_fields(self) -> list[FieldSpec]:
@@ -119,6 +123,7 @@ class Manifest:
             "history": self.history,
             "row_key": self.row_key,
             "version_cols": self.version_cols,
+            "transform": self.transform,
         }
 
     @staticmethod
@@ -139,6 +144,7 @@ class Manifest:
             history=d.get("history", []),
             row_key=d.get("row_key"),
             version_cols=d.get("version_cols", []),
+            transform=d.get("transform", "hash"),
         )
 
 
@@ -168,8 +174,14 @@ class LakeTable:
         properties: dict[str, str] | None = None,
         row_key: str | None = None,
         version_cols: list[str] | None = None,
+        transform: str = "hash",
     ) -> "LakeTable":
         """Create an empty table. ``schema`` is [(name, spark_ddl_type), ...].
+
+        ``transform="identity"`` buckets by the integer value of
+        ``bucket_col`` itself instead of its hash: one bucket per cell id,
+        for layouts whose readers prune to named cells (the similarity
+        indexes); ``num_buckets`` is then only the write parallelism.
 
         ``row_key`` + ``version_cols`` declare merge-on-read semantics: reads
         resolve to one row per key (greatest version tuple wins), which lets
@@ -190,6 +202,7 @@ class LakeTable:
             history=[{"version": 0, "operation": "create"}],
             row_key=row_key,
             version_cols=list(version_cols or []),
+            transform=transform,
         )
         LakeTable._write_manifest(path, m)
         LakeTable._swap_pointer(path, 0)
@@ -233,7 +246,8 @@ class LakeTable:
         )
 
     def bucket_expr(self, col: str | None = None) -> F.Column:
-        """The table's partition transform: pmod(xxhash64(key), N).
+        """The table's partition transform: pmod(xxhash64(key), N), or
+        CAST(key AS INT) under the identity transform.
 
         Deterministic and engine-internal (plays the role of Iceberg's
         murmur3 bucket transform). Callers use it to pre-compute affected
@@ -241,6 +255,8 @@ class LakeTable:
         """
         c = col or self.manifest.bucket_col
         n = self.manifest.num_buckets
+        if self.manifest.transform == "identity":
+            return F.col(c).cast("int")
         return F.pmod(F.xxhash64(F.col(c)), F.lit(n)).cast("int")
 
     def read(
@@ -468,6 +484,7 @@ class LakeTable:
                 ],
                 row_key=m.row_key,
                 version_cols=m.version_cols,
+                transform=m.transform,
             )
             LakeTable._write_manifest(self.path, new)
             LakeTable._swap_pointer(self.path, new.version)
@@ -850,12 +867,22 @@ class LakeTable:
         computed under the OLD width, and a manifest mixing them with the
         new width would silently mis-prune bucket reads and misclassify
         changelog rows after a rollback across a rebucket boundary.
+
+        Properties are restored too — committed offsets, watermark, field
+        map and index anchors describe the data they were committed with,
+        so they roll back with it (a resumed engine then replays the
+        rolled-past batches). Only the table-level refs (:meth:`tag`) keep
+        their current values.
         """
         m = self.manifest
         old = LakeTable.load(self.path, version).manifest
+        props = {k: v for k, v in old.properties.items() if not k.startswith(self._TAG_PREFIX)}
+        props.update((k, v) for k, v in m.properties.items() if k.startswith(self._TAG_PREFIX))
         return self._commit(
             old.files,
             f"rollback:v{version}",
+            properties_update=props,
+            properties_drop=[k for k in m.properties if k not in props],
             schema_version=old.schema_version,
             bucket_col_override=(
                 old.bucket_col if old.bucket_col != m.bucket_col else None

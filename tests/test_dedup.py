@@ -313,54 +313,20 @@ def test_dedup_clusters_partitions_the_pair_graph(spark):
         assert size == sum(1 for c in cluster_of.values() if c == cid)
 
 
-def test_star_cc_equals_hashmin_and_unionfind(spark):
-    """Large-star/small-star CC must agree with hash-min CC and a Python
-    union-find on a seeded sparse random graph (many components, mixed
-    sizes)."""
+def test_hashmin_cc_equals_unionfind(spark):
+    """Hash-min CC must agree with a Python union-find on a seeded sparse
+    random graph (many components, mixed sizes)."""
     import random
 
-    from data_warehouse_etl_spark.functions.textops import (
-        connected_components,
-        connected_components_star,
-    )
+    from data_warehouse_etl_spark.functions.textops import connected_components
 
     rng = random.Random(42)
     und = sorted({tuple(sorted(rng.sample(range(200), 2))) for _ in range(150)})
     sym = und + [(b, a) for a, b in und]
     edges = spark.createDataFrame(sym, "src long, dst long")
 
-    got_star = {r["node"]: r["lbl"] for r in connected_components_star(edges).collect()}
     got_min = {r["node"]: r["lbl"] for r in connected_components(edges).collect()}
-
-    parent: dict = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in und:
-        parent[find(a)] = find(b)
-    comp: dict = {}
-    for n in parent:
-        comp.setdefault(find(n), set()).add(n)
-    want = {n: min(g) for g in comp.values() for n in g}
-    assert got_star == want
-    assert got_min == want
-
-
-def test_star_cc_logarithmic_on_long_chain(spark):
-    """A 600-node chain has diameter 599 — hash-min would need 599 rounds;
-    the star variant must resolve it inside its default 50-round budget
-    (O(log n) expected)."""
-    from data_warehouse_etl_spark.functions.textops import connected_components_star
-
-    und = [(i, i + 1) for i in range(600)]
-    sym = und + [(b, a) for a, b in und]
-    edges = spark.createDataFrame(sym, "src long, dst long")
-    got = {r["node"]: r["lbl"] for r in connected_components_star(edges).collect()}
-    assert got == {i: 0 for i in range(601)}
+    assert got_min == _unionfind_labels(und)
 
 
 def test_hashmin_cc_raises_on_diameter_overrun(spark):
@@ -427,14 +393,11 @@ def _unionfind_labels(und_edges):
 
 
 def test_cc_accepts_directed_only_input(spark):
-    """Both CC variants symmetrize internally: a pair list carrying each
+    """Hash-min CC symmetrizes internally: a pair list carrying each
     edge in ONE direction only (the shape every dedup pair query emits,
     doc_a < doc_b) must produce the same components as the symmetric
     form — before the fix hash-min silently under-merged on this input."""
-    from data_warehouse_etl_spark.functions.textops import (
-        connected_components,
-        connected_components_star,
-    )
+    from data_warehouse_etl_spark.functions.textops import connected_components
 
     # chain oriented high->low so naive min-propagation along given
     # direction alone cannot reach the component min
@@ -442,9 +405,7 @@ def test_cc_accepts_directed_only_input(spark):
     edges = spark.createDataFrame(directed, "src long, dst long")
     want = _unionfind_labels(directed)
     got_min = {r["node"]: r["lbl"] for r in connected_components(edges).collect()}
-    got_star = {r["node"]: r["lbl"] for r in connected_components_star(edges).collect()}
     assert got_min == want
-    assert got_star == want
 
 
 @settings(
@@ -461,12 +422,9 @@ def test_cc_accepts_directed_only_input(spark):
     )
 )
 def test_cc_property_matches_unionfind(spark, raw):
-    """Property: on ANY edge list (directed, duplicated, self-looped) both
-    CC variants equal a Python union-find oracle over the undirected view."""
-    from data_warehouse_etl_spark.functions.textops import (
-        connected_components,
-        connected_components_star,
-    )
+    """Property: on ANY edge list (directed, duplicated, self-looped)
+    hash-min CC equals a Python union-find oracle over the undirected view."""
+    from data_warehouse_etl_spark.functions.textops import connected_components
 
     edges = spark.createDataFrame(raw, "src long, dst long")
     want = _unionfind_labels(raw)
@@ -474,14 +432,7 @@ def test_cc_property_matches_unionfind(spark, raw):
         r["node"]: r["lbl"]
         for r in connected_components(edges, max_iters=64).collect()
     }
-    got_star = {
-        r["node"]: r["lbl"] for r in connected_components_star(edges).collect()
-    }
     assert got_min == want
-    # star's canonical form drops self-loops, so nodes whose ONLY edges
-    # are self-loops are absent from its output (documented contract)
-    real = {n for a, b in raw if a != b for n in (a, b)}
-    assert got_star == {n: l for n, l in want.items() if n in real}
 
 
 def test_dedup_agreement_summary_invariants(spark):

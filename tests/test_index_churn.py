@@ -13,13 +13,16 @@ import random
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from data_warehouse_etl_spark.functions.similarity import (
+    _ivf_cells,
     build_ivf_index,
     build_srp_index,
     ivf_index_upsert,
     srp_index_upsert,
 )
+from data_warehouse_etl_spark.lake import LakeTable
 
 SF_DIR = "/root/testdata/sf0.001"
 N_BATCHES = 20
@@ -62,11 +65,23 @@ def _batches(corpus, rng, n_batches):
         yield list(dedup.values())
 
 
-def _layout_state(spark, layout_dir, part_col):
-    rows = spark.read.parquet(layout_dir).collect()
+def _layout_state(spark, idx, kind):
+    """The index's committed layout rows (IVF: the cells snapshot its
+    centroid table reflects)."""
+    if kind == "ivf":
+        t, part_col = _ivf_cells(idx), "label"
+    else:
+        t, part_col = LakeTable.load(os.path.join(idx, "buckets")), "srp_bucket"
     return sorted(
         (int(r["vec_id"]), int(r["label"]), tuple(r["embedding"]), int(r[part_col]))
-        for r in rows
+        for r in t.read(spark).collect()
+    )
+
+
+def _centroid_state(spark, idx):
+    return sorted(
+        (int(r["label"]), tuple(r["cv"]))
+        for r in LakeTable.load(os.path.join(idx, "centroids")).read(spark).collect()
     )
 
 
@@ -93,9 +108,9 @@ def _write_corpus(corpus, path):
 
 @pytest.mark.parametrize("kind", ["srp", "ivf"])
 def test_churned_index_equals_rebuild_every_batch(spark, tmp_path, kind):
-    build, upsert, layout, part_col = {
-        "srp": (build_srp_index, srp_index_upsert, "buckets", "srp_bucket"),
-        "ivf": (build_ivf_index, ivf_index_upsert, "cells", "label"),
+    build, upsert = {
+        "srp": (build_srp_index, srp_index_upsert),
+        "ivf": (build_ivf_index, ivf_index_upsert),
     }[kind]
     idx = build(spark, SF_DIR, index_dir=str(tmp_path / "live"))
     corpus = _corpus(spark)
@@ -106,41 +121,25 @@ def test_churned_index_equals_rebuild_every_batch(spark, tmp_path, kind):
     for i, batch in enumerate(_batches(corpus, rng, N_BATCHES)):
         upsert(spark, idx, spark.createDataFrame(batch, SCHEMA))
         # from-scratch oracle: rebuild the whole index from the current
-        # corpus state and demand identical layout content AND identical
-        # assign sidecar
+        # corpus state and demand identical layout content
         _write_corpus(corpus, src2)
         fake_sf = str(tmp_path / "sf")
         os.makedirs(fake_sf, exist_ok=True)
         os.replace(src2, os.path.join(fake_sf, "embeddings.parquet"))
         build(spark, fake_sf, index_dir=rebuild_dir, force=True)
 
-        got = _layout_state(spark, os.path.join(idx, layout), part_col)
-        want = _layout_state(spark, os.path.join(rebuild_dir, layout), part_col)
+        got = _layout_state(spark, idx, kind)
+        want = _layout_state(spark, rebuild_dir, kind)
         assert got == want, f"{kind} batch {i}: layout diverged from rebuild"
-        a_got = sorted(
-            (int(r["vec_id"]), int(r[part_col]))
-            for r in spark.read.parquet(os.path.join(idx, "assign")).collect()
-        )
-        assert a_got == sorted((v, b) for v, _, _, b in got), (
-            f"{kind} batch {i}: assign sidecar diverged from layout"
-        )
         if kind == "ivf":
             # the incrementally-refreshed centroid relation must equal the
             # rebuild's (both use the same ROUND(AVG) construction)
-            c_got = sorted(
-                (int(r["label"]), tuple(r["cv"]))
-                for r in spark.read.parquet(os.path.join(idx, "centroids")).collect()
+            assert _centroid_state(spark, idx) == _centroid_state(spark, rebuild_dir), (
+                f"ivf batch {i}: centroids diverged"
             )
-            c_want = sorted(
-                (int(r["label"]), tuple(r["cv"]))
-                for r in spark.read.parquet(
-                    os.path.join(rebuild_dir, "centroids")
-                ).collect()
-            )
-            assert c_got == c_want, f"ivf batch {i}: centroids diverged"
 
     # after the churn the live index holds every corpus row exactly once
-    ids = [v for v, _, _, _ in _layout_state(spark, os.path.join(idx, layout), part_col)]
+    ids = [v for v, _, _, _ in _layout_state(spark, idx, kind)]
     assert ids == sorted(corpus)
 
 
@@ -153,17 +152,13 @@ def test_index_follows_lake_changelog(spark, tmp_path, kind):
     of the table's live view — deletes leave their partition (tombstone rows
     in the upsert drop set). Both changelog image conventions are exercised
     (post-only and pre/post pairs; preimages must be ignored)."""
-    from pyspark.sql import functions as F
-
     from data_warehouse_etl_spark.functions.similarity import (
         ivf_index_sync_changelog,
         srp_index_sync_changelog,
     )
-    from data_warehouse_etl_spark.lake import LakeTable
-
-    build, sync, layout, part_col = {
-        "srp": (build_srp_index, srp_index_sync_changelog, "buckets", "srp_bucket"),
-        "ivf": (build_ivf_index, ivf_index_sync_changelog, "cells", "label"),
+    build, sync = {
+        "srp": (build_srp_index, srp_index_sync_changelog),
+        "ivf": (build_ivf_index, ivf_index_sync_changelog),
     }[kind]
 
     corpus = _corpus(spark)
@@ -223,27 +218,129 @@ def test_index_follows_lake_changelog(spark, tmp_path, kind):
 
         _write_corpus(corpus, os.path.join(fake_sf, "embeddings.parquet"))
         build(spark, fake_sf, index_dir=rebuild_dir, force=True)
-        got = _layout_state(spark, os.path.join(idx, layout), part_col)
-        want = _layout_state(spark, os.path.join(rebuild_dir, layout), part_col)
-        assert got == want, f"interval {i}: layout diverged from rebuild"
-        a_got = sorted(
-            (int(r["vec_id"]), int(r[part_col]))
-            for r in spark.read.parquet(os.path.join(idx, "assign")).collect()
-        )
-        assert a_got == sorted((v, b) for v, _, _, b in got), (
-            f"interval {i}: assign sidecar diverged"
+        got = _layout_state(spark, idx, kind)
+        assert got == _layout_state(spark, rebuild_dir, kind), (
+            f"interval {i}: layout diverged from rebuild"
         )
         # deleted ids are gone from the layout
         assert {v for v, _, _, _ in got} == set(corpus)
         if kind == "ivf":
-            c_got = sorted(
-                (int(r["label"]), tuple(r["cv"]))
-                for r in spark.read.parquet(os.path.join(idx, "centroids")).collect()
+            assert _centroid_state(spark, idx) == _centroid_state(spark, rebuild_dir), (
+                f"interval {i}: centroids diverged"
             )
-            c_want = sorted(
-                (int(r["label"]), tuple(r["cv"]))
-                for r in spark.read.parquet(
-                    os.path.join(rebuild_dir, "centroids")
-                ).collect()
-            )
-            assert c_got == c_want, f"interval {i}: centroids diverged"
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _index_state(spark, kind, idx):
+    if kind == "minhash":
+        return sorted(
+            tuple(r) for r in LakeTable.load(os.path.join(idx, "bands")).read(spark)
+            .select("doc_id", "band_no", "band_hash", "bh_bucket").collect()
+        )
+    state = _layout_state(spark, idx, kind)
+    return (state, _centroid_state(spark, idx)) if kind == "ivf" else state
+
+
+def _source_table(spark, path, kind):
+    """A MoR source table for the index: embeddings (srp/ivf) or documents
+    (minhash), with ``_deleted`` tombstones and a ``_v`` version column."""
+    if kind == "minhash":
+        cols = [("doc_id", "bigint"), ("text", "string")]
+        src = spark.read.parquet(SF_DIR + "/documents.parquet")
+        src = src.select("doc_id", "text").limit(60)
+    else:
+        cols = [("vec_id", "bigint"), ("label", "int"), ("embedding", "array<float>")]
+        src = spark.read.parquet(SF_DIR + "/embeddings.parquet")
+        src = src.select("vec_id", "label", "embedding")
+    t = LakeTable.create(
+        path, schema=cols + [("_deleted", "boolean"), ("_v", "bigint")],
+        bucket_col=cols[0][0], num_buckets=4, row_key=cols[0][0], version_cols=["_v"],
+    )
+    src = src.withColumn("_deleted", F.lit(False)).withColumn("_v", F.lit(0).cast("bigint"))
+    return t.append(src)
+
+
+def _change_batch(spark, t, kind):
+    """Commit one mixed batch to the source: moved rows, an insert, a delete."""
+    live = t.read(spark).orderBy(t.manifest.row_key).limit(4).collect()
+    if kind == "minhash":
+        rows = [(r["doc_id"], r["text"] + " edited edited", False, 1) for r in live[:2]]
+        rows += [(10**6, live[2]["text"], False, 1), (live[3]["doc_id"], None, True, 1)]
+        schema = "doc_id bigint, text string, _deleted boolean, _v bigint"
+    else:
+        rows = [
+            (r["vec_id"], (r["label"] + 1) % 25, [-x for x in r["embedding"]], False, 1)
+            for r in live[:2]
+        ]
+        rows += [(10**6, 3, list(live[2]["embedding"]), False, 1),
+                 (live[3]["vec_id"], None, None, True, 1)]
+        schema = SCHEMA + ", _deleted boolean, _v bigint"
+    return t.append_deltas(spark.createDataFrame(rows, schema))
+
+
+def _crash_index_commit(monkeypatch, table: str, after_write: bool):
+    """Crash the first index commit to ``table`` (a subdirectory name of the
+    index): before its manifest is written, or after it but before the
+    pointer swap."""
+    real = LakeTable._write_manifest
+
+    def write(path, m):
+        op = m.history[-1]["operation"]
+        if os.path.basename(path) == table and op == "overwrite_buckets":
+            if after_write:
+                real(path, m)
+            raise _Crash(f"crash in the {table} commit")
+        real(path, m)
+
+    monkeypatch.setattr(LakeTable, "_write_manifest", staticmethod(write))
+
+
+@pytest.mark.parametrize(
+    "kind,point",
+    [(k, p) for k in ("srp", "ivf", "minhash") for p in ("before_manifest", "before_swap")]
+    + [("ivf", "before_centroids")],
+)
+def test_index_crash_point_keeps_old_state_and_recovers(
+    spark, tmp_path, monkeypatch, kind, point
+):
+    """A crash at each step of an index sync commit — and, for IVF, between
+    the cells commit and the centroids commit — leaves the index reading
+    exactly its pre-sync state, with its pre-sync anchor; re-running the
+    sync applies the interval once and equals a from-scratch rebuild."""
+    from data_warehouse_etl_spark.functions.similarity import (
+        ivf_index_sync_table,
+        srp_index_sync_table,
+    )
+    from data_warehouse_etl_spark.functions.textops import minhash_index_sync_table
+
+    sync = {"srp": srp_index_sync_table, "ivf": ivf_index_sync_table,
+            "minhash": minhash_index_sync_table}[kind]
+    kw = dict(
+        row_filter=lambda df: df.filter(~F.coalesce(F.col("_deleted"), F.lit(False))),
+        exclude=["_v", "_deleted"],
+    )
+    t = _source_table(spark, str(tmp_path / "src"), kind)
+    idx = str(tmp_path / "idx")
+    assert sync(spark, idx, t, **kw)["mode"] == "rebuild"
+    v_synced = t.manifest.version
+    t = _change_batch(spark, t, kind)
+    before = _index_state(spark, kind, idx)
+
+    table = {"srp": "buckets", "ivf": "cells", "minhash": "bands"}[kind]
+    if point == "before_centroids":
+        _crash_index_commit(monkeypatch, "centroids", after_write=False)
+    else:
+        _crash_index_commit(monkeypatch, table, after_write=point == "before_swap")
+    with pytest.raises(_Crash):
+        sync(spark, idx, t, **kw)
+    monkeypatch.undo()
+    assert _index_state(spark, kind, idx) == before
+
+    res = sync(spark, idx, t, **kw)
+    assert res["mode"] == "delta" and res["from"] == v_synced
+    want = str(tmp_path / "want")
+    assert sync(spark, want, t, **kw)["mode"] == "rebuild"
+    assert _index_state(spark, kind, idx) == _index_state(spark, kind, want)

@@ -1,5 +1,5 @@
-"""Materialized IVF index (round 3): the probed-cell scan must be
-physically partition-pruned, and the indexed query must return exactly the
+"""Materialized IVF index (round 3): the probed-cell scan must read only
+the probed cells' files, and the indexed query must return exactly the
 inline (oracle-shaped) result."""
 
 import os
@@ -10,36 +10,41 @@ from data_warehouse_etl_spark.functions.similarity import (
     _knn_ivf_sql,
     build_ivf_index,
     ivf_cell_scan_df,
+    ivf_index_dir,
     ivf_probed_cells_df,
     q_knn_ivf_probed,
 )
+from data_warehouse_etl_spark.lake import LakeTable
+from tests.conftest import files_by_bucket, scanned_files
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_ivf_index_builds_once_and_is_cell_partitioned(spark, tmp_path):
     idx = build_ivf_index(spark, SF_DIR, index_dir=str(tmp_path / "ivf"))
-    # layout: one directory per cell under cells/
-    cells = [d for d in os.listdir(os.path.join(idx, "cells")) if d.startswith("label=")]
-    assert len(cells) >= 2
-    # idempotent: second call is a no-op (marker mtime unchanged)
-    marker = os.path.join(idx, "_built_from.txt")
-    m0 = os.path.getmtime(marker)
+    cdir = os.path.join(idx, "cells")
+    cells = LakeTable.load(cdir)
+    assert cells.manifest.transform == "identity" and cells.manifest.bucket_col == "label"
+    # one bucket per cell: bucket ids are exactly the corpus labels
+    labels = {r[0] for r in spark.read.parquet(SF_DIR + "/embeddings.parquet")
+              .select("label").distinct().collect()}
+    assert set(files_by_bucket(cdir)) == labels and len(labels) >= 2
+    # the centroid table reflects this cells snapshot
+    cents = LakeTable.load(os.path.join(idx, "centroids"))
+    assert cents.manifest.properties["cells_version"] == str(cells.manifest.version)
+    # idempotent: second call is a no-op (no new snapshot of either table)
     build_ivf_index(spark, SF_DIR, index_dir=str(tmp_path / "ivf"))
-    assert os.path.getmtime(marker) == m0
+    assert LakeTable.load(cdir).manifest.version == cells.manifest.version
+    assert LakeTable.load(cents.path).manifest.version == cents.manifest.version
 
 
 def test_ivf_probed_scan_is_partition_pruned(spark):
     labels = [int(r["label"]) for r in ivf_probed_cells_df(spark, SF_DIR).collect()]
     assert len(labels) == 2
     scan = ivf_cell_scan_df(spark, SF_DIR, labels)
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "label" in plan
-    # the file-source relation must select only the probed cells' partitions
-    import re
-
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "label" in m.group(1), plan[:2000]
+    cdir = os.path.join(ivf_index_dir(SF_DIR), "cells")
+    by_cell = files_by_bucket(cdir)
+    assert scanned_files(scan, cdir) == sorted(p for c in labels for p in by_cell[c])
 
 
 def test_ivf_indexed_equals_inline(spark):
@@ -57,28 +62,22 @@ def test_ivf_indexed_equals_inline(spark):
 def test_ivf_index_upsert_rewrites_cells_and_refreshes_centroids(spark, tmp_path):
     """Incremental maintenance (round 4, twin of the SRP upsert test): an
     upsert batch with one NEW vector and one vector MOVED between cells must
-    rewrite exactly the affected cell partitions, refresh exactly those
-    cells' centroid rows (value-identical to a recompute over the updated
-    cells), and carry every untouched centroid row over unchanged."""
+    rewrite exactly the affected cells (every other cell keeps its file
+    paths), refresh exactly those cells' centroid rows (value-identical to
+    a recompute over the updated cells), and carry every untouched centroid
+    row over unchanged."""
     from data_warehouse_etl_spark.functions.similarity import ivf_index_upsert
 
     idx = build_ivf_index(spark, SF_DIR, index_dir=str(tmp_path / "ivf"))
     cdir = os.path.join(idx, "cells")
 
-    def listing():
-        return {
-            d: sorted(f for f in os.listdir(os.path.join(cdir, d)) if f.endswith(".parquet"))
-            for d in os.listdir(cdir)
-            if d.startswith("label=")
-        }
-
     def centroids():
         return {
             int(r["label"]): tuple(r["cv"])
-            for r in spark.read.parquet(os.path.join(idx, "centroids")).collect()
+            for r in LakeTable.load(os.path.join(idx, "centroids")).read(spark).collect()
         }
 
-    before, cents_before = listing(), centroids()
+    before, cents_before = files_by_bucket(cdir), centroids()
     emb = spark.read.parquet(SF_DIR + "/embeddings.parquet")
     v0 = emb.filter("vec_id = 0").first()
     lbl0 = int(v0["label"])
@@ -94,9 +93,9 @@ def test_ivf_index_upsert_rewrites_cells_and_refreshes_centroids(spark, tmp_path
     affected = ivf_index_upsert(spark, idx, new_df)
     assert set(affected) == {lbl0, old_lbl}
 
-    after = listing()
-    changed = {d for d in set(before) | set(after) if before.get(d) != after.get(d)}
-    assert changed == {f"label={lbl0}", f"label={old_lbl}"}, changed
+    after = files_by_bucket(cdir)
+    changed = {c for c in set(before) | set(after) if before.get(c) != after.get(c)}
+    assert changed == {lbl0, old_lbl}, changed
 
     cents_after = centroids()
     # untouched cells: centroid rows carried over bit-identically (no recompute)
@@ -104,9 +103,8 @@ def test_ivf_index_upsert_rewrites_cells_and_refreshes_centroids(spark, tmp_path
         if lbl not in affected:
             assert cents_after[lbl] == cv
     # affected cells: value-identical to a recompute over the updated cells
-    spark.read.parquet(cdir).selectExpr(
-        "vec_id", "embedding", "CAST(label AS INT) AS label"
-    ).filter(f"label IN ({lbl0}, {old_lbl})").createOrReplaceTempView("chk_cells_v")
+    cells = LakeTable.load(cdir).read(spark)
+    cells.filter(f"label IN ({lbl0}, {old_lbl})").createOrReplaceTempView("chk_cells_v")
     want = {
         int(r["label"]): tuple(r["cv"])
         for r in spark.sql(
@@ -118,6 +116,5 @@ def test_ivf_index_upsert_rewrites_cells_and_refreshes_centroids(spark, tmp_path
         assert cents_after[lbl] == want[lbl]
 
     # the mover left its old cell and sits in the new one
-    cells = spark.read.parquet(cdir)
     assert cells.filter(f"label = {old_lbl} AND vec_id = {mover['vec_id']}").count() == 0
     assert cells.filter(f"label = {lbl0} AND vec_id = {mover['vec_id']}").count() == 1

@@ -27,7 +27,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def _band_state(spark, index_dir):
-    rows = spark.read.parquet(os.path.join(index_dir, "bands")).collect()
+    rows = LakeTable.load(os.path.join(index_dir, "bands")).read(spark).collect()
     return sorted(
         (int(r["doc_id"]), int(r["band_no"]), r["band_hash"], int(r["bh_bucket"]))
         for r in rows
@@ -123,9 +123,9 @@ def test_minhash_index_follows_changelog(spark, tmp_path):
 
 def test_sync_table_self_anchors_and_is_crash_idempotent(spark, tmp_path):
     """The self-anchoring sync: first call rebuilds, later calls apply the
-    changelog from the remembered version and re-applying the SAME interval
-    (a crash between apply and marker) is a state no-op; an anchor expired
-    by retention GC falls back to one rebuild and stays correct."""
+    changelog from the anchor committed with the index, and re-applying the
+    SAME interval is a state no-op; an anchor expired by retention GC falls
+    back to one rebuild and stays correct."""
     from data_warehouse_etl_spark.functions.textops import minhash_index_sync_table
 
     src = (
@@ -159,7 +159,10 @@ def test_sync_table_self_anchors_and_is_crash_idempotent(spark, tmp_path):
     res = minhash_index_sync_table(spark, idx, t, **kw)
     assert res["mode"] == "delta" and res["from"] == v_from
     state = _band_state(spark, idx)
-    # crash window: re-apply the SAME interval directly — state unchanged
+    # the anchor rides the index commit
+    bands = LakeTable.load(os.path.join(idx, "bands"))
+    assert bands.manifest.properties["synced_version"] == str(t.manifest.version)
+    # re-apply the SAME interval directly — state unchanged
     from data_warehouse_etl_spark.functions.textops import minhash_index_sync_changelog
     cl = t.read_changes(spark, v_from, exclude=["ver", "_deleted"], row_filter=live)
     minhash_index_sync_changelog(spark, idx, cl)

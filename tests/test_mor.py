@@ -319,17 +319,33 @@ def _crash_in_flush(monkeypatch, nth: int):
 
 
 @pytest.mark.parametrize(
-    "point", ["before_manifest", "before_swap", "before_flush", "in_compact"]
+    "point", ["before_manifest", "before_swap", "before_flush", "in_compact", "rollback"]
 )
 def test_crash_point_resumes_to_uninterrupted_state(
     spark, tmp_lake, monkeypatch, crash_ref, point
 ):
-    """A crash at each step of the delta commit, and inside compaction,
-    leaves a table that a fresh engine resumes to the uninterrupted run's
-    state_hash (the manifest pointer swap is the one commit point)."""
+    """A crash at each step of the delta commit, inside compaction, and
+    inside a rollback leaves a table that a fresh engine resumes to the
+    uninterrupted run's state_hash (the manifest pointer swap is the one
+    commit point). The rollback case replays the whole ledger, rolls the
+    table back to an early batch — before the schema evolution — and
+    resumes from the offsets committed with that batch."""
     led, h_ref = crash_ref
     path = os.path.join(tmp_lake, "pages")
-    if point == "before_flush":
+    if point == "rollback":
+        eng = CdcEngine(spark, _crash_cfg(led, path))
+        eng.run()
+        v_mid = [
+            h["version"] for h in eng.pages.manifest.history
+            if h["operation"] == "append_deltas"
+        ][1]
+        _crash_in_manifest_write(monkeypatch, f"rollback:v{v_mid}", nth=1, after_write=True)
+        with pytest.raises(_Crash):
+            eng.pages.rollback(v_mid)
+        monkeypatch.undo()
+        assert state_hash(eng.refresh_pages()) == h_ref  # the torn rollback is invisible
+        eng.pages.rollback(v_mid)
+    elif point == "before_flush":
         _crash_in_flush(monkeypatch, nth=3)
     elif point == "in_compact":
         _crash_in_manifest_write(monkeypatch, "compact", nth=1, after_write=False)
@@ -337,9 +353,10 @@ def test_crash_point_resumes_to_uninterrupted_state(
         _crash_in_manifest_write(
             monkeypatch, "append_deltas", nth=3, after_write=point == "before_swap"
         )
-    with pytest.raises(_Crash):
-        CdcEngine(spark, _crash_cfg(led, path)).run()
-    monkeypatch.undo()
+    if point != "rollback":
+        with pytest.raises(_Crash):
+            CdcEngine(spark, _crash_cfg(led, path)).run()
+        monkeypatch.undo()
 
     resumed = CdcEngine(spark, _crash_cfg(led, path))
     assert resumed.run() > 0

@@ -63,16 +63,24 @@ def test_time_travel_and_snapshot_listing(spark, tmp_lake):
 
 def test_rollback_restores_state_as_new_commit(spark, tmp_lake):
     path = os.path.join(tmp_lake, "t")
-    t = _mk_mor(spark, path, ROWS_V1)
+    t = _mk_mor(spark, path, ROWS_V1).set_properties({"offset": "1"})
     h1 = state_hash(t.read(spark))
     v1 = t.manifest.version
-    t = t.append_deltas(spark.createDataFrame([("a", 10, 2)], t.schema()))
+    t = t.append_deltas(
+        spark.createDataFrame([("a", 10, 2)], t.schema()),
+        properties_update={"offset": "2", "later": "x"},
+    )
     assert state_hash(t.read(spark)) != h1
+    t = t.tag("after", t.manifest.version)
 
     t = t.rollback(v1)
     assert state_hash(t.read(spark)) == h1
-    assert t.manifest.version == v1 + 2  # a NEW commit, not a pointer rewind
+    assert t.manifest.version == v1 + 3  # a NEW commit, not a pointer rewind
     assert t.manifest.history[-1]["operation"] == f"rollback:v{v1}"
+    # properties roll back with the data; refs made after v1 survive
+    assert t.manifest.properties["offset"] == "1"
+    assert "later" not in t.manifest.properties
+    assert t.tags() == {"after": v1 + 1}
     # the rolled-past snapshot stays retained and readable
     assert t.at_version(v1 + 1).read(spark).count() == 4
 

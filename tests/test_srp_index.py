@@ -1,9 +1,8 @@
 """Materialized SRP-LSH index (round 4): the probe-bucket candidate scan
-must be physically partition-pruned, and the indexed query must return
+must read only the probed buckets' files, and the indexed query must return
 exactly the inline (oracle-shaped) result."""
 
 import os
-import re
 
 from data_warehouse_etl_spark.functions.similarity import (
     _cos_spark,
@@ -12,32 +11,38 @@ from data_warehouse_etl_spark.functions.similarity import (
     build_srp_index,
     q_knn_lsh_srp,
     srp_bucket_scan_df,
+    srp_index_dir,
     srp_query_bucket,
 )
+from data_warehouse_etl_spark.lake import LakeTable
+from tests.conftest import files_by_bucket, scanned_files
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_srp_index_builds_once_and_is_bucket_partitioned(spark, tmp_path):
     idx = build_srp_index(spark, SF_DIR, index_dir=str(tmp_path / "srp"))
-    buckets = [
-        d for d in os.listdir(os.path.join(idx, "buckets")) if d.startswith("srp_bucket=")
-    ]
-    assert len(buckets) >= 2
-    # idempotent: second call is a no-op (marker mtime unchanged)
-    marker = os.path.join(idx, "_built_from.txt")
-    m0 = os.path.getmtime(marker)
+    bdir = os.path.join(idx, "buckets")
+    t = LakeTable.load(bdir)
+    assert t.manifest.transform == "identity" and t.manifest.bucket_col == "srp_bucket"
+    by_bucket = files_by_bucket(bdir)
+    assert len(by_bucket) >= 2
+    # one bucket per srp_bucket value: every file holds only its own bucket
+    for b in by_bucket:
+        vals = {r[0] for r in t.read(spark, buckets=[b]).select("srp_bucket").collect()}
+        assert vals == {b}
+    # idempotent: second call is a no-op (no new snapshot)
+    v0 = t.manifest.version
     build_srp_index(spark, SF_DIR, index_dir=str(tmp_path / "srp"))
-    assert os.path.getmtime(marker) == m0
+    assert LakeTable.load(bdir).manifest.version == v0
 
 
 def test_srp_probe_scan_is_partition_pruned(spark):
     qb = srp_query_bucket(spark, SF_DIR)
     assert 0 <= qb < 16  # 4 hyperplanes -> 4-bit bucket
     scan = srp_bucket_scan_df(spark, SF_DIR, qb)
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "srp_bucket" in m.group(1), plan[:2000]
+    bdir = os.path.join(srp_index_dir(SF_DIR), "buckets")
+    assert scanned_files(scan, bdir) == files_by_bucket(bdir)[qb]
 
 
 def test_srp_indexed_equals_inline(spark):
@@ -53,22 +58,15 @@ def test_srp_indexed_equals_inline(spark):
 def test_srp_index_upsert_rewrites_only_affected_partitions(spark, tmp_path):
     """Incremental maintenance (round 4): an upsert batch with one NEW
     vector and one MOVED vector (embedding changed -> bucket flips) must
-    rewrite exactly the affected bucket partitions — every other partition's
-    file set is untouched — and the pruned probe scan must see the new
-    state."""
+    rewrite exactly the affected buckets in one commit — every other
+    bucket keeps its file paths — and the pruned probe scan must see the
+    new state."""
     from data_warehouse_etl_spark.functions.similarity import srp_index_upsert
 
     idx = build_srp_index(spark, SF_DIR, index_dir=str(tmp_path / "srp"))
     bdir = os.path.join(idx, "buckets")
-
-    def listing():
-        return {
-            d: sorted(f for f in os.listdir(os.path.join(bdir, d)) if f.endswith(".parquet"))
-            for d in os.listdir(bdir)
-            if d.startswith("srp_bucket=")
-        }
-
-    before = listing()
+    before = files_by_bucket(bdir)
+    v_before = LakeTable.load(bdir).manifest.version
     emb = spark.read.parquet(SF_DIR + "/embeddings.parquet")
     qb = srp_query_bucket(spark, SF_DIR)
     # the probe vector's own embedding -> lands in the probe's bucket
@@ -76,8 +74,8 @@ def test_srp_index_upsert_rewrites_only_affected_partitions(spark, tmp_path):
     # a vector currently in the probe's bucket, to MOVE by negating its
     # embedding (sign flips on every hyperplane -> complement bucket 15-qb)
     mover = (
-        spark.read.parquet(bdir)
-        .filter(f"srp_bucket = {qb} AND vec_id <> 0")
+        LakeTable.load(bdir).read(spark, buckets=[qb])
+        .filter("vec_id <> 0")
         .select("vec_id", "label", "embedding")
         .first()
     )
@@ -90,12 +88,11 @@ def test_srp_index_upsert_rewrites_only_affected_partitions(spark, tmp_path):
     )
     affected = srp_index_upsert(spark, idx, new_df)
     assert qb in affected and (15 - qb) in affected
+    assert LakeTable.load(bdir).manifest.version == v_before + 1  # one commit
 
-    after = listing()
-    changed = {
-        d for d in set(before) | set(after) if before.get(d) != after.get(d)
-    }
-    assert changed == {f"srp_bucket={qb}", f"srp_bucket={15 - qb}"}, changed
+    after = files_by_bucket(bdir)
+    changed = {b for b in set(before) | set(after) if before.get(b) != after.get(b)}
+    assert changed == {qb, 15 - qb}, changed
 
     # the probe's pruned scan now surfaces the new vector as the top hit
     # (identical embedding to the probe -> cosine 1.0) and no longer the mover
@@ -104,7 +101,7 @@ def test_srp_index_upsert_rewrites_only_affected_partitions(spark, tmp_path):
     assert all(r["vec_id"] != mover["vec_id"] for r in got)
     # the mover landed in its complement bucket with its new embedding
     moved = (
-        spark.read.parquet(bdir)
+        LakeTable.load(bdir).read(spark, buckets=[15 - qb])
         .filter(f"srp_bucket = {15 - qb} AND vec_id = {int(mover['vec_id'])}")
         .collect()
     )
@@ -112,22 +109,19 @@ def test_srp_index_upsert_rewrites_only_affected_partitions(spark, tmp_path):
 
 
 def test_srp_index_upsert_drops_emptied_bucket(spark, tmp_path):
-    """Edge: when an upsert moves EVERY vector out of a bucket, the dynamic
-    overwrite has no rows for that partition and would leave its stale files
-    — the upsert must drop the emptied directory (buckets/ and assign/) so
-    a later probe of that bucket sees nothing."""
+    """Edge: when an upsert moves EVERY vector out of a bucket, that bucket
+    has no files in the new snapshot, so a later probe of it sees nothing."""
     from data_warehouse_etl_spark.functions.similarity import srp_index_upsert
 
     idx = build_srp_index(spark, SF_DIR, index_dir=str(tmp_path / "srp"))
     bdir = os.path.join(idx, "buckets")
+    layout = LakeTable.load(bdir).read(spark)
     smallest = min(
-        spark.read.parquet(bdir).groupBy("srp_bucket").count().collect(),
-        key=lambda r: r["count"],
+        layout.groupBy("srp_bucket").count().collect(), key=lambda r: r["count"]
     )
     b = int(smallest["srp_bucket"])
     victims = (
-        spark.read.parquet(bdir)
-        .filter(f"srp_bucket = {b}")
+        layout.filter(f"srp_bucket = {b}")
         .select("vec_id", "label", "embedding")
         .collect()
     )
@@ -140,12 +134,12 @@ def test_srp_index_upsert_drops_emptied_bucket(spark, tmp_path):
     )
     affected = srp_index_upsert(spark, idx, new_df)
     assert b in affected and (15 - b) in affected
-    assert not os.path.exists(os.path.join(bdir, f"srp_bucket={b}"))
-    assert not os.path.exists(os.path.join(idx, "assign", f"srp_bucket={b}"))
+    assert b not in files_by_bucket(bdir)
+    assert srp_bucket_scan_df(spark, SF_DIR, b, index_dir=idx).count() == 0
     # every victim landed in the complement bucket
     ids = ", ".join(str(v[0]) for v in batch)
     got = (
-        spark.read.parquet(bdir)
+        LakeTable.load(bdir).read(spark)
         .filter(f"srp_bucket = {15 - b} AND vec_id IN ({ids})")
         .count()
     )
@@ -153,9 +147,9 @@ def test_srp_index_upsert_drops_emptied_bucket(spark, tmp_path):
 
 
 def test_srp_multiprobe_pruned_and_equals_inline(spark):
-    """v5 multiprobe: the candidate scan must be partition-pruned to the
-    probe's bucket plus its Hamming-1 neighbors (5 of 16 partitions), and
-    the indexed result must equal the self-contained inline (oracle) form."""
+    """v5 multiprobe: the candidate scan must read only the files of the
+    probe's bucket plus its Hamming-1 neighbors (5 of 16 buckets), and the
+    indexed result must equal the self-contained inline (oracle) form."""
     from data_warehouse_etl_spark.functions.similarity import (
         _MULTIPROBE_MASKS,
         _knn_lsh_multiprobe_sql,
@@ -166,9 +160,11 @@ def test_srp_multiprobe_pruned_and_equals_inline(spark):
     qb = srp_query_bucket(spark, SF_DIR)
     probes = sorted({qb ^ m for m in _MULTIPROBE_MASKS})
     scan = srp_bucket_scan_df(spark, SF_DIR, probes)
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "srp_bucket" in m.group(1) and " IN " in m.group(1), plan[:2000]
+    bdir = os.path.join(srp_index_dir(SF_DIR), "buckets")
+    by_bucket = files_by_bucket(bdir)
+    assert scanned_files(scan, bdir) == sorted(
+        p for b in probes for p in by_bucket.get(b, [])
+    )
 
     spark.read.parquet(f"{SF_DIR}/embeddings.parquet").createOrReplaceTempView(
         "embeddings_v"
@@ -183,95 +179,22 @@ def test_srp_multiprobe_pruned_and_equals_inline(spark):
     assert {r[3] for r in got} <= set(probes)
 
 
-def test_srp_upsert_heals_torn_state(spark, tmp_path):
-    """Round-5 advisor fix: a crash between the buckets/ overwrite and the
-    assign/ sidecar overwrite used to leave assign stale, so a LATER upsert
-    of the same vector computed the wrong old-bucket set and the vector
-    ended up duplicated across two bucket partitions. The redo log
-    (_pending + _pending.json) must let the next upsert detect and redo the
-    interrupted apply, leaving exactly one copy of every vector."""
-    import shutil
-
-    from data_warehouse_etl_spark.functions.similarity import (
-        _redo_paths,
-        srp_index_upsert,
-    )
-
-    idx = build_srp_index(spark, SF_DIR, index_dir=str(tmp_path / "srp"))
-    bdir = os.path.join(idx, "buckets")
-    qb = srp_query_bucket(spark, SF_DIR)
-    mover = (
-        spark.read.parquet(bdir)
-        .filter(f"srp_bucket = {qb}")
-        .select("vec_id", "label", "embedding")
-        .first()
-    )
-    batch1 = spark.createDataFrame(
-        [(int(mover["vec_id"]), int(mover["label"]), [-x for x in mover["embedding"]])],
-        "vec_id bigint, label int, embedding array<float>",
-    )
-
-    # simulate the torn state: run the full upsert, then restore the OLD
-    # assign/ sidecar and resurrect the redo record — exactly the on-disk
-    # state of a crash after the buckets/ write and before the assign/ write
-    assign = os.path.join(idx, "assign")
-    assign_backup = str(tmp_path / "assign_old")
-    shutil.copytree(assign, assign_backup)
-    affected1 = srp_index_upsert(spark, idx, batch1)
-    shutil.rmtree(assign)
-    shutil.copytree(assign_backup, assign)
-    pend, meta = _redo_paths(idx)
-    batch1.selectExpr(
-        "*", f"CAST({_srp_bucket_spark('embedding')} AS INT) AS srp_bucket"
-    ).write.mode("overwrite").parquet(pend)
-    import json as _json
-
-    with open(meta, "w") as fh:
-        _json.dump({"affected": affected1}, fh)
-
-    # upsert the same vector again (back to its original embedding): without
-    # healing, the stale assign says it still lives in qb, missing the copy
-    # in 15-qb -> duplicate. With healing the redo runs first.
-    batch2 = spark.createDataFrame(
-        [(int(mover["vec_id"]), int(mover["label"]), list(mover["embedding"]))],
-        "vec_id bigint, label int, embedding array<float>",
-    )
-    srp_index_upsert(spark, idx, batch2)
-    assert not os.path.exists(meta) and not os.path.exists(pend)
-
-    dups = (
-        spark.read.parquet(bdir)
-        .groupBy("vec_id")
-        .count()
-        .filter("count > 1")
-        .collect()
-    )
-    assert dups == []
-    back = (
-        spark.read.parquet(bdir)
-        .filter(f"vec_id = {int(mover['vec_id'])}")
-        .collect()
-    )
-    assert len(back) == 1 and int(back[0]["srp_bucket"]) == qb
-    # assign sidecar agrees with the layout again
-    arow = (
-        spark.read.parquet(os.path.join(idx, "assign"))
-        .filter(f"vec_id = {int(mover['vec_id'])}")
-        .collect()
-    )
-    assert len(arow) == 1 and int(arow[0]["srp_bucket"]) == qb
-
-
 def test_srp_upsert_invalidates_build_stamp(spark, tmp_path):
     """Round-5 advisor fix: after an upsert the index no longer mirrors the
-    source parquet, so the build stamp must stop claiming it does — the next
-    default build_srp_index() resyncs from source and parity queries stay
-    value-identical with the DuckDB oracle (which always reads the source)."""
+    source parquet, so the build stamp committed with it must stop claiming
+    it does — the next default build_srp_index() resyncs from source and
+    parity queries stay value-identical with the DuckDB oracle (which always
+    reads the source)."""
     from data_warehouse_etl_spark.functions.similarity import srp_index_upsert
 
     idx = build_srp_index(spark, SF_DIR, index_dir=str(tmp_path / "srp"))
-    marker = os.path.join(idx, "_built_from.txt")
-    stamp0 = open(marker).read()
+    bdir = os.path.join(idx, "buckets")
+
+    def stamp():
+        return LakeTable.load(bdir).manifest.properties["built_from"]
+
+    stamp0 = stamp()
+    assert stamp0.startswith(os.path.abspath(SF_DIR + "/embeddings.parquet") + ":")
     emb = spark.read.parquet(SF_DIR + "/embeddings.parquet")
     v0 = list(emb.filter("vec_id = 0").first()["embedding"])
     srp_index_upsert(
@@ -281,16 +204,11 @@ def test_srp_upsert_invalidates_build_stamp(spark, tmp_path):
             [(10**9, 0, v0)], "vec_id bigint, label int, embedding array<float>"
         ),
     )
-    assert open(marker).read().startswith("upserted:")
+    assert stamp() == ""
     # a rebuild resyncs from source: stamp restored, upserted vector gone
     build_srp_index(spark, SF_DIR, index_dir=idx)
-    assert open(marker).read() == stamp0
-    assert (
-        spark.read.parquet(os.path.join(idx, "buckets"))
-        .filter("vec_id = 1000000000")
-        .count()
-        == 0
-    )
+    assert stamp() == stamp0
+    assert LakeTable.load(bdir).read(spark).filter("vec_id = 1000000000").count() == 0
 
 
 def test_ann_recall_summary_invariants(spark):

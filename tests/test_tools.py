@@ -1,0 +1,31 @@
+"""The two audit tools run end to end: the plan audit passes, and the
+materialized ANN indexes match the DuckDB oracle post-build and post-churn
+(``bench.py`` shells out to the second)."""
+
+import json
+import os
+import subprocess
+import sys
+
+from tests.conftest import SF_CORRECT
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _run(*args: str) -> str:
+    out = subprocess.run(
+        [sys.executable, *args], cwd=REPO, capture_output=True, text=True, timeout=900
+    )
+    assert out.returncode == 0, out.stdout[-3000:] + out.stderr[-3000:]
+    return out.stdout
+
+
+def test_explain_plans_passes():
+    assert "PLAN AUDIT: PASS" in _run("tools/explain_plans.py")
+
+
+def test_check_index_parity_post_build_and_churn():
+    stdout = _run("tools/check_index_parity.py", SF_CORRECT, "8", "1")
+    line = next(x for x in stdout.splitlines() if x.startswith("INDEX_PARITY "))
+    res = json.loads(line[len("INDEX_PARITY "):])
+    assert res["ok"] is True, res

@@ -15,7 +15,9 @@ originals → they move back). The final corpus is value-identical to the
 source by construction, so the DuckDB oracle is unchanged — a green compare
 against the CHURNED layouts proves ``srp_index_upsert``/``ivf_index_upsert``
 preserve layout/oracle parity through real bucket moves (including emptied
-and re-created partitions) at bench scale.
+and re-created buckets) at bench scale. Each index is a directory of
+LakeTables whose manifests hold relative file paths, so a copy of the
+directory is an independent index.
 
 Prints one line ``INDEX_PARITY {json}`` and exits 0 iff everything matched.
 

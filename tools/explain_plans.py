@@ -7,7 +7,9 @@ Checks (per the scale rules the engine is designed around):
 - the LWW dedup is HashAggregate, never Window or SortAggregate;
 - WholeStageCodegen spans cover the relational operators;
 - no CartesianProduct / BroadcastNestedLoopJoin outside the intended
-  cross-join-with-one-row-query cases.
+  cross-join-with-one-row-query cases;
+- the index probes (v2/v4/v5, MinHash) read exactly the manifest files of
+  the probed buckets of their LakeTable (``inputFiles()``).
 
 Usage: python tools/explain_plans.py [sf_dir]
 """
@@ -18,6 +20,7 @@ import io
 import os
 import sys
 from contextlib import redirect_stdout
+from urllib.parse import urlparse
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -38,6 +41,23 @@ def audit(name: str, df, want: list[str] = (), forbid: list[str] = ()) -> bool:
     if problems:
         print(plan)
     return not problems
+
+
+def audit_files(name: str, df, table, buckets) -> bool:
+    """df's scan of the LakeTable ``table`` reads exactly the manifest files
+    of ``buckets`` — the pruning happens at the manifest, not in the plan."""
+    bset = set(buckets)
+    want = sorted(
+        os.path.join(table.path, f["path"]) for f in table.manifest.files if f["bucket"] in bset
+    )
+    got = sorted(
+        p for p in {urlparse(u).path for u in df.inputFiles()}
+        if p.startswith(table.path.rstrip(os.sep) + os.sep)
+    )
+    ok = bool(want) and got == want
+    print(f"{'OK ' if ok else 'BAD'} {name}"
+          + ("" if ok else f"  [read {len(got)} files, want {len(want)}]"))
+    return ok
 
 
 def main() -> int:
@@ -92,47 +112,43 @@ def main() -> int:
     ok &= audit("j6 equi-driven range join", PARITY_QUERIES["j6_range_join"](spark, sf),
                 forbid=["BroadcastNestedLoopJoin", "CartesianProduct"])
 
-    # V2 IVF (round 3: MATERIALIZED index): the probe plan reads the
-    # 25-row centroids table, never the corpus; the cell-scan plan is
-    # statically partition-pruned to the probed labels (PartitionFilters) —
-    # only those cells' files are read.
+    # V2 IVF (MATERIALIZED index): the probe plan reads the 25-row centroids
+    # table, never the corpus; the cell scan reads only the probed cells'
+    # files of the cells LakeTable (identity-bucketed on label).
     from data_warehouse_etl_spark.functions.similarity import (
+        _MULTIPROBE_MASKS,
+        _ivf_cells,
+        build_ivf_index,
+        build_srp_index,
         ivf_cell_scan_df,
         ivf_probed_cells_df,
+        srp_bucket_scan_df,
+        srp_query_bucket,
     )
+    from data_warehouse_etl_spark.lake import LakeTable
     # (the probe's only corpus touch is the 1-row vec_id=0 pushed lookup)
     probe = ivf_probed_cells_df(spark, sf)
     ok &= audit("v2 probe reads centroid table", probe,
                 want=["centroids", "EqualTo(vec_id,0)"])
     labels = [int(r["label"]) for r in probe.collect()]
     cell_scan = ivf_cell_scan_df(spark, sf, labels)
-    ok &= audit("v2 cell scan partition-pruned", cell_scan,
-                want=["PartitionFilters: [", " IN ("],
-                forbid=["CartesianProduct"])
+    ok &= audit("v2 cell scan plan", cell_scan, forbid=["CartesianProduct"])
+    ok &= audit_files("v2 cell scan reads only the probed cells", cell_scan,
+                      _ivf_cells(build_ivf_index(spark, sf)), labels)
 
-    # V4 SRP-LSH (round 4: MATERIALIZED bucketed layout): the candidate scan
-    # is statically partition-pruned to the probe's bucket — no query-time
-    # hyperplane evaluation over the corpus.
-    from data_warehouse_etl_spark.functions.similarity import (
-        srp_bucket_scan_df,
-        srp_query_bucket,
-    )
+    # V4 SRP-LSH (MATERIALIZED bucketed layout): the candidate scan reads
+    # only the probe's bucket — no query-time hyperplane evaluation over the
+    # corpus. V5 multiprobe: the Hamming-1 neighborhood's buckets.
+    srp_table = LakeTable.load(os.path.join(build_srp_index(spark, sf), "buckets"))
     qb = srp_query_bucket(spark, sf)
-    srp_scan = srp_bucket_scan_df(spark, sf, qb)
-    # (attribute ids suffix the column name in the plan text: srp_bucket#N = qb)
-    ok &= audit("v4 srp scan partition-pruned", srp_scan,
-                want=["PartitionFilters: [isnotnull(srp_bucket#", f" = {qb})]"],
-                forbid=["CartesianProduct"])
-    # V5 multiprobe: same layout, IN-pruned to the Hamming-1 neighborhood
-    from data_warehouse_etl_spark.functions.similarity import _MULTIPROBE_MASKS
-    mp_scan = srp_bucket_scan_df(spark, sf, [qb ^ m for m in _MULTIPROBE_MASKS])
-    ok &= audit("v5 multiprobe scan partition-pruned", mp_scan,
-                want=["PartitionFilters: [", " IN ("],
-                forbid=["CartesianProduct"])
+    for name, probes in (("v4 srp scan", [qb]),
+                         ("v5 multiprobe scan", [qb ^ m for m in _MULTIPROBE_MASKS])):
+        scan = srp_bucket_scan_df(spark, sf, probes)
+        ok &= audit(f"{name} plan", scan, forbid=["CartesianProduct"])
+        ok &= audit_files(f"{name} reads only the probed buckets", scan, srp_table, probes)
 
     # MoR read path: base+delta resolution is aggregation, never Window
     import tempfile
-    from data_warehouse_etl_spark.lake import LakeTable
     d = tempfile.mkdtemp(prefix="plan-mor-")
     t = LakeTable.create(os.path.join(d, "t"), [("url", "string"), ("warc_ts", "timestamp"),
                          ("v", "bigint"), ("_seq", "bigint"), ("_deleted", "boolean")],
@@ -146,9 +162,10 @@ def main() -> int:
     ok &= audit("mor resolve = agg not window", t.read(spark),
                 want=["partial_max_by"], forbid=["Window"])
 
-    # Incremental-dedup probe (round 5): the band-index scan for a NEW batch
-    # is statically partition-pruned to the batch's bh_bucket partitions
+    # Incremental-dedup probe: the band-index scan for a NEW batch reads
+    # only the batch's bh_bucket files of the band LakeTable
     from data_warehouse_etl_spark.functions.textops import (
+        _bandrows_df,
         build_minhash_index,
         minhash_probe_new,
     )
@@ -157,10 +174,14 @@ def main() -> int:
         spark, mh_docs, os.path.join(d, "mh_idx"), force=True
     )
     probe_batch = mh_docs.limit(3)
-    ok &= audit("minhash probe partition-pruned",
-                minhash_probe_new(spark, mh_idx, probe_batch),
-                want=["PartitionFilters: [", "bh_bucket"],
+    mh_probe = minhash_probe_new(spark, mh_idx, probe_batch)
+    ok &= audit("minhash probe plan", mh_probe,
                 forbid=["CartesianProduct", "BroadcastNestedLoopJoin"])
+    probe_batch.createOrReplaceTempView("mh_audit_docs_v")
+    mh_buckets = {r[0] for r in _bandrows_df(spark, "mh_audit_docs_v")
+                  .select("bh_bucket").distinct().collect()}
+    ok &= audit_files("minhash probe reads only the batch's buckets", mh_probe,
+                      LakeTable.load(os.path.join(mh_idx, "bands")), mh_buckets)
 
     # Changelog read (round 5): the snapshot diff is ONE key-equi full-outer
     # join over the changed buckets — never a nested-loop/cartesian pairing,
