@@ -10,8 +10,9 @@ Layout
 ------
 - ``session``    : SparkSession factory with scale-appropriate defaults
 - ``lake``       : LakeTable — atomic-snapshot parquet lake (Iceberg-style
-                   semantics: manifest-swap commit, field-id schema evolution,
-                   bucket partitioning) usable without external jars
+                   semantics: create-if-absent manifest commit, field-id
+                   schema evolution, bucket partitioning) usable without
+                   external jars
 - ``cdc``        : the engine — ledger generator, HTML→text extractor (pandas
                    UDF), salted LWW dedup, merge apply, checkpoints, metrics
 - ``operators``  : reference operator families (SURVEY.md §2) as reusable

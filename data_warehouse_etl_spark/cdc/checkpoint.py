@@ -19,6 +19,7 @@ import datetime as _dt
 from pyspark.sql import DataFrame, SparkSession
 
 from ..lake import LakeTable
+from .driverio import append_rows, open_table
 
 SCHEMA = [
     ("part", "int"),
@@ -35,16 +36,7 @@ class CheckpointsTable:
 
     @staticmethod
     def open(path: str) -> "CheckpointsTable":
-        if LakeTable.exists(path):
-            t = LakeTable.load(path)
-            # evolve resumed mirrors if SCHEMA has since grown a column
-            # (same hazard as MetricsTable.open — see comment there)
-            have = {f.name for f in t.manifest.current_fields}
-            for n, ddl in SCHEMA:
-                if n not in have:
-                    t = t.add_column(n, ddl)
-            return CheckpointsTable(t)
-        return CheckpointsTable(LakeTable.create(path, SCHEMA, bucket_col=None))
+        return CheckpointsTable(open_table(path, SCHEMA))
 
     def record(self, spark: SparkSession, batch_id: int, offsets: dict[int, int]) -> None:
         self.record_many(spark, [(batch_id, offsets)])
@@ -64,8 +56,6 @@ class CheckpointsTable:
         ]
         # O(parts) driver-resident rows → pyarrow write + manifest commit,
         # no Spark job (see cdc/driverio.py)
-        from .driverio import append_rows
-
         self.table = append_rows(self.table, rows, SCHEMA)
 
     def read(self, spark: SparkSession) -> DataFrame:

@@ -32,6 +32,28 @@ _ARROW_TYPES = {
 }
 
 
+def open_table(path: str, schema: list[tuple[str, str]]) -> LakeTable:
+    """Create the mirror table at ``path``, or load it and append every
+    ``schema`` column it lacks.
+
+    A mirror created before its SCHEMA grew a column would otherwise keep
+    its old manifest schema, and :func:`append_rows` would register wider
+    files under the old schema_version — silently dropping the new column on
+    read (and breaking consumers that select it). Evolving the manifest
+    (add-as-null, new field id) before any append prevents that. New columns
+    are only ever APPENDED to a SCHEMA, so positional row building stays
+    aligned with the evolved field order.
+    """
+    if not LakeTable.exists(path):
+        return LakeTable.create(path, schema, bucket_col=None)
+    t = LakeTable.load(path)
+    have = {f.name for f in t.manifest.current_fields}
+    for n, ddl in schema:
+        if n not in have:
+            t = t.add_column(n, ddl)
+    return t
+
+
 def append_rows(table: LakeTable, rows: list[tuple], schema: list[tuple[str, str]]) -> LakeTable:
     """Append tuples to a (non-bucketed) LakeTable without a Spark job."""
     if not rows:

@@ -18,7 +18,8 @@ Lifecycle per batch (SURVEY.md §3.4), merge-on-read:
       → reads LWW-resolve base+delta; compact() folds deltas
         back into base on the operator's cadence                [read path]
 
-Exactly-once: the manifest pointer swap is the commit point and the committed
+Exactly-once: publishing the batch's manifest ``v{N+1}`` by atomic
+create-if-absent (LakeTable._publish) is the commit point, and the committed
 offsets ride in the same manifest (the reference needed a rename-swap publish
 + anti-join guard + high-water-mark table to approximate this —
 ``/root/reference/Sql Scripts/FCT_RESERVATION_UPD.sql:255-256``,
@@ -46,7 +47,7 @@ import json
 import logging
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -148,12 +149,12 @@ class EngineConfig:
     # - "batch_exact": cutoff = max(warc_ts) of the CURRENT batch - delay;
     #   requires one extra pre-aggregated pass over the batch per batch.
     watermark_mode: str = "monotone"
-    lang_col_priority: bool = True  # trust feed lang; detect only when absent
     # flush the observational metrics/checkpoints mirror tables every N
     # batches (and at end of run). The authoritative offsets are inside the
     # data commit; the mirrors are lineage queries, so batching their writes
-    # trades at most N batches of mirror rows on crash for ~4 fewer Spark
-    # jobs per batch (each job is a straggler-exposed barrier).
+    # trades at most N batches of mirror rows on crash for fewer mirror
+    # commits (each flush is a driver-side pyarrow append plus one manifest
+    # publish per mirror — cdc/driverio.py).
     mirror_flush_batches: int = 8
     # declared cadence recorded in the _schedule registry after each run()
     # (the reference's "Schedule Frequency" metadata: daily | monthly |
@@ -165,7 +166,6 @@ class EngineConfig:
     # resume are unaffected (offsets live in the current manifest). Size N
     # to cover downstream changelog/IVM consumers' refresh cadence.
     retain_snapshots: int = 0
-    extra: dict = field(default_factory=dict)
 
 
 class CdcEngine:
@@ -185,10 +185,11 @@ class CdcEngine:
         # amortized skew detection state (see EngineConfig.hot_detect_every)
         self._hot_keys: list = []
         self._batches_this_run: int = 0
-        # monotone-watermark state: max event time observed by committed
-        # batches but not yet persisted (it is written into the NEXT commit's
-        # properties, so the cutoff depends only on committed state and a
-        # cold resume replays the identical cutoffs)
+        # monotone-watermark state: max event time observed by applied
+        # batches. _transform_and_merge persists it with a set_properties
+        # commit right after each batch, so the next batch's cutoff depends
+        # only on committed state and a cold resume replays the identical
+        # cutoffs
         self._wm_track = (
             cfg.watermark_delay_s is not None and cfg.watermark_mode == "monotone"
         )
@@ -236,7 +237,7 @@ class CdcEngine:
         return df.filter(~F.col("_deleted")).drop(*INTERNAL_COLS)
 
     def refresh_pages(self) -> DataFrame:
-        """Re-resolve the table pointer, then read (for observers of a table
+        """Reload the table head, then read (for observers of a table
         another handle — e.g. a streaming query — has been committing to)."""
         self.pages = self.pages.refresh()
         return self.read_pages()
@@ -335,7 +336,7 @@ class CdcEngine:
             # + completion time, the reference's Schedule-Frequency surface.
             # Best-effort by contract (schedule.py: "the data path's
             # exactly-once guarantee never depends on it"): a failure here
-            # (e.g. commit-lock contention from a concurrent process) must
+            # (e.g. a publish race lost to a concurrent process) must
             # neither mask an in-flight data-path exception nor fail an
             # otherwise-successful run.
             try:
@@ -650,16 +651,11 @@ class CdcEngine:
 
         def enrich(df: DataFrame, live) -> DataFrame:
             if has_lang:
-                src = (
-                    F.col(lang_col)
-                    if cfg.lang_col_priority
-                    else F.lit(None).cast("string")
-                )
                 return (
                     df.withColumn(
                         "_tx",
                         extract_enrich_udf(
-                            F.when(live, F.col("html")), F.when(live, src)
+                            F.when(live, F.col("html")), F.when(live, F.col(lang_col))
                         ),
                     )
                     .withColumn("text", F.col("_tx.text"))

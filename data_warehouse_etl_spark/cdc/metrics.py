@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lake import LakeTable
+from .driverio import append_rows, open_table
 
 SCHEMA = [
     ("batch_id", "bigint"),
@@ -42,22 +43,7 @@ class MetricsTable:
 
     @staticmethod
     def open(path: str) -> "MetricsTable":
-        if LakeTable.exists(path):
-            t = LakeTable.load(path)
-            # Schema evolution for resumed mirrors: a metrics table created
-            # before SCHEMA grew a column would keep its old manifest schema,
-            # and append would then register wider files under the old
-            # schema_version — silently dropping the new column on read (and
-            # breaking consumers that select it). Evolve the manifest
-            # (add-as-null, new field id) before any append. New columns are
-            # only ever APPENDED to SCHEMA, so positional row building in
-            # append() stays aligned with the evolved field order.
-            have = {f.name for f in t.manifest.current_fields}
-            for n, ddl in SCHEMA:
-                if n not in have:
-                    t = t.add_column(n, ddl)
-            return MetricsTable(t)
-        return MetricsTable(LakeTable.create(path, SCHEMA, bucket_col=None))
+        return MetricsTable(open_table(path, SCHEMA))
 
     def append(self, spark: SparkSession, rows: list[dict]) -> None:
         if not rows:
@@ -65,8 +51,6 @@ class MetricsTable:
         ordered = [tuple(r[n] for n, _ in SCHEMA) for r in rows]
         # O(parts) driver-resident rows → pyarrow write + manifest commit,
         # no Spark job (see cdc/driverio.py)
-        from .driverio import append_rows
-
         self.table = append_rows(self.table, ordered, SCHEMA)
 
     def read(self, spark: SparkSession) -> DataFrame:

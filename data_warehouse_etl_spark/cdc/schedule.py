@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lake import LakeTable
+from .driverio import append_rows, open_table
 
 SCHEMA = [
     ("process", "string"),
@@ -39,23 +40,12 @@ class ScheduleTable:
 
     @staticmethod
     def open(path: str) -> "ScheduleTable":
-        if LakeTable.exists(path):
-            t = LakeTable.load(path)
-            # evolve resumed mirrors if SCHEMA has since grown a column
-            # (same hazard as MetricsTable.open — see comment there)
-            have = {f.name for f in t.manifest.current_fields}
-            for n, ddl in SCHEMA:
-                if n not in have:
-                    t = t.add_column(n, ddl)
-            return ScheduleTable(t)
-        return ScheduleTable(LakeTable.create(path, SCHEMA, bucket_col=None))
+        return ScheduleTable(open_table(path, SCHEMA))
 
     def record(self, process: str, frequency: str, batches_applied: int) -> None:
         now = _dt.datetime.now(_dt.timezone.utc)
         # O(1) driver-resident row → pyarrow write + manifest commit,
         # no Spark job (see cdc/driverio.py)
-        from .driverio import append_rows
-
         self.table = append_rows(
             self.table, [(process, frequency, now, batches_applied)], SCHEMA
         )

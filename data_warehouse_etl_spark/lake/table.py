@@ -5,10 +5,12 @@ network to fetch ``iceberg-spark-runtime`` jars, so LakeTable provides the
 same *semantics* on plain parquet + a JSON manifest, behind one interface
 (SURVEY.md §7 "Iceberg availability in sandbox"):
 
-- **Atomic snapshot commit**: every mutation writes new data files plus a new
-  manifest ``metadata/v{N}.json``, then atomically renames a pointer file.
-  Readers resolve the pointer first, so they see either the old or the new
-  snapshot, never a mix. This replaces the reference's shadow-rebuild +
+- **Atomic snapshot commit**: every mutation writes new data files, then
+  publishes manifest ``metadata/v{N+1}.json`` over base ``v{N}`` by atomic
+  create-if-absent (a durable temp manifest hard-linked to the new name).
+  That creation is the one commit point; the head is the highest published
+  version, so readers see either the old or the new snapshot, never a mix.
+  This replaces the reference's shadow-rebuild +
   ``ALTER TABLE RENAME`` publish idiom
   (``/root/reference/Sql Scripts/FCT_RESERVATION_UPD.sql:255-256``,
   ``DM_RESTAURANT_MOD.sql:120-122``).
@@ -31,9 +33,11 @@ same *semantics* on plain parquet + a JSON manifest, behind one interface
   transaction (exactly-once; ETL_LOAD_CONTROL analog,
   ``RestaurantDetails_Marta_v11_06152015.sql:153-155``).
 
-Concurrency: single-writer (the sandbox driver). A real deployment swaps this
-module for Iceberg's optimistic-locking catalog; the engine code above this
-interface is unchanged.
+Concurrency: optimistic, like Delta Lake's put-if-absent log entries. Of the
+committers that share a base, exactly one creates the next version; the rest
+raise "concurrent commit detected" and may ``refresh()`` and retry. A real
+deployment swaps this module for Iceberg's catalog; the engine code above
+this interface is unchanged.
 
 Scale notes (100 TB posture): the manifest holds one entry per data file, so
 file count — not data volume — bounds manifest size; ``files_per_bucket``
@@ -56,9 +60,6 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-_POINTER = "version-hint.text"
-
 
 @dataclass
 class FieldSpec:
@@ -155,8 +156,12 @@ def _spark_type(ddl: str) -> T.DataType:
 class LakeTable:
     """A versioned parquet table at ``path`` with atomic commits.
 
-    Use :meth:`create` once, then :meth:`load`. All mutations produce a new
-    immutable snapshot; :meth:`read` always reflects the last committed one.
+    Use :meth:`create` once, then :meth:`load`. Every mutation publishes a
+    new immutable snapshot ``metadata/v{N+1}.json`` on top of the handle's
+    base ``v{N}`` (:meth:`_publish`: atomic create-if-absent, refused unless
+    ``v{N}`` is still the head). :meth:`load` and :meth:`refresh` take the
+    highest published version as the head; :meth:`read` reflects the
+    handle's snapshot.
     """
 
     def __init__(self, path: str, manifest: Manifest):
@@ -187,6 +192,8 @@ class LakeTable:
         resolve to one row per key (greatest version tuple wins), which lets
         :meth:`append_deltas` commit upserts without rewriting base files.
         """
+        if LakeTable.exists(path):
+            raise FileExistsError(f"a table already exists at {path}")
         os.makedirs(os.path.join(path, "metadata"), exist_ok=True)
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
         fields = [FieldSpec(i + 1, n, t) for i, (n, t) in enumerate(schema)]
@@ -204,23 +211,24 @@ class LakeTable:
             version_cols=list(version_cols or []),
             transform=transform,
         )
-        LakeTable._write_manifest(path, m)
-        LakeTable._swap_pointer(path, 0)
+        LakeTable._publish(path, m)
         return LakeTable(path, m)
 
     @staticmethod
     def load(path: str, version: int | None = None) -> "LakeTable":
         """Load the current snapshot, or a retained historical one.
 
-        ``version=None`` resolves the pointer (current snapshot). An explicit
-        ``version`` is time travel: the returned handle reads that snapshot's
-        file set under that snapshot's schema. Historical handles are
-        naturally read-only — any commit from one fails the pointer-version
-        CAS in :meth:`_commit`. Analog of Iceberg's ``VERSION AS OF``.
+        ``version=None`` loads the head, the highest published version. An
+        explicit ``version`` is time travel: the returned handle reads that
+        snapshot's file set under that snapshot's schema. Historical handles
+        are naturally read-only — any commit from one fails the head check
+        in :meth:`_publish`. Analog of Iceberg's ``VERSION AS OF``.
         """
         if version is None:
-            with open(os.path.join(path, "metadata", _POINTER)) as fh:
-                version = int(fh.read().strip())
+            versions = LakeTable._versions(path)
+            if not versions:
+                raise FileNotFoundError(f"no table at {path}")
+            version = versions[-1]
         try:
             with open(os.path.join(path, "metadata", f"v{version}.json")) as fh:
                 return LakeTable(path, Manifest.from_json(json.load(fh)))
@@ -232,10 +240,10 @@ class LakeTable:
 
     @staticmethod
     def exists(path: str) -> bool:
-        return os.path.exists(os.path.join(path, "metadata", _POINTER))
+        return bool(LakeTable._versions(path))
 
     def refresh(self) -> "LakeTable":
-        """Re-resolve the pointer (another committer may have advanced it)."""
+        """Reload the head (another committer may have advanced it)."""
         return LakeTable.load(self.path)
 
     # ------------------------------------------------------------------ read
@@ -445,133 +453,38 @@ class LakeTable:
         num_buckets_override: int | None = None,
     ) -> "LakeTable":
         m = self.manifest
-        # Optimistic lock: O_CREAT|O_EXCL lock file serializes committers so
-        # a losing racer gets the RuntimeError instead of silently clobbering
-        # the winner's manifest (check-then-act alone is not atomic). A lock
-        # older than _LOCK_STALE_S is treated as a crashed committer's.
-        lock = os.path.join(self.path, "metadata", "commit.lock")
-        fd = self._acquire_lock(lock)
-        try:
-            with open(os.path.join(self.path, "metadata", _POINTER)) as fh:
-                if int(fh.read().strip()) != m.version:
-                    raise RuntimeError(
-                        f"concurrent commit detected on {m.table}: refresh() and retry"
-                    )
-            new = Manifest(
-                table=m.table,
-                version=m.version + 1,
-                schema_version=m.schema_version if schema_version is None else schema_version,
-                schemas={**m.schemas, **(schemas_update or {})},
-                next_field_id=m.next_field_id if next_field_id is None else next_field_id,
-                bucket_col=m.bucket_col if bucket_col_override is None else bucket_col_override,
-                num_buckets=m.num_buckets if num_buckets_override is None else num_buckets_override,
-                files=new_files,
-                properties={
-                    k: v
-                    for k, v in {**m.properties, **(properties_update or {})}.items()
-                    if not (properties_drop and k in properties_drop)
-                },
-                history=m.history
-                + [
-                    {
-                        "version": m.version + 1,
-                        "operation": operation,
-                        # wall-clock commit time: operational metadata only
-                        # (TIMESTAMP AS OF); never part of row state, so
-                        # byte-identity across replays is unaffected
-                        "ts": time.time(),
-                    }
-                ],
-                row_key=m.row_key,
-                version_cols=m.version_cols,
-                transform=m.transform,
-            )
-            LakeTable._write_manifest(self.path, new)
-            LakeTable._swap_pointer(self.path, new.version)
-            self.manifest = new
-            return self
-        finally:
-            os.close(fd)
-            try:
-                os.unlink(lock)
-            except OSError:
-                pass
-
-    _LOCK_STALE_S = 300.0
-
-    @staticmethod
-    def _acquire_lock(lock: str):
-        import time as _time
-
-        for _ in range(2):
-            try:
-                return os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError:
-                try:
-                    age = _time.time() - os.path.getmtime(lock)
-                except OSError:
-                    continue  # holder released between EEXIST and stat; retry
-                if age > LakeTable._LOCK_STALE_S:
-                    # Break a crashed committer's lock by atomic RENAME, not
-                    # unlink: two committers may both observe the lock as
-                    # stale, and with unlink the second could remove the
-                    # first breaker's freshly-created lock between its create
-                    # and its commit — letting both into the critical
-                    # section. rename() is atomic and succeeds for exactly
-                    # one breaker; the loser sees ENOENT (or the winner's
-                    # fresh lock on the next iteration) and raises.
-                    stale = f"{lock}.stale-{uuid.uuid4().hex[:8]}"
-                    try:
-                        os.rename(lock, stale)
-                    except OSError:
-                        continue  # someone else stole the break; re-examine
-                    # TOCTOU guard: between our staleness stat and the
-                    # rename, another breaker may have completed the break
-                    # AND a new committer created a FRESH lock at the same
-                    # path — which our rename just hijacked. Re-stat what we
-                    # actually moved: if it is NOT stale, it was a live lock;
-                    # restore it (hard-link = atomic, non-clobbering — never
-                    # overwrites a lock recreated in the meantime) and treat
-                    # the slot as held.
-                    try:
-                        fresh = (
-                            _time.time() - os.path.getmtime(stale)
-                            <= LakeTable._LOCK_STALE_S
-                        )
-                    except OSError:
-                        continue  # moved file vanished; re-examine
-                    if fresh:
-                        # Known availability-only window (round-5 advisor
-                        # note): if the live holder releases (unlinks) its
-                        # lock between our rename and this os.link, the
-                        # holder's unlink hits ENOENT (swallowed in its
-                        # finally) and the restore resurrects an orphaned
-                        # lock that blocks committers with RuntimeError
-                        # until it ages out (_LOCK_STALE_S). No correctness
-                        # impact — commits are still guarded by the
-                        # pointer-version CAS — and the window is the
-                        # microseconds between two syscalls; eliminating it
-                        # would need holders to release by renaming an
-                        # fd-identified token they own rather than by path.
-                        try:
-                            os.link(stale, lock)
-                            os.unlink(stale)
-                        except OSError:
-                            pass  # lock recreated first; holder's commit is
-                            # still guarded by the pointer-version check
-                        raise RuntimeError(
-                            f"concurrent commit in progress ({lock} held): "
-                            "refresh() and retry"
-                        )
-                    try:
-                        os.unlink(stale)
-                    except OSError:
-                        pass
-                    continue
-                raise RuntimeError(
-                    f"concurrent commit in progress ({lock} held): refresh() and retry"
-                )
-        raise RuntimeError(f"could not acquire commit lock {lock}")
+        new = Manifest(
+            table=m.table,
+            version=m.version + 1,
+            schema_version=m.schema_version if schema_version is None else schema_version,
+            schemas={**m.schemas, **(schemas_update or {})},
+            next_field_id=m.next_field_id if next_field_id is None else next_field_id,
+            bucket_col=m.bucket_col if bucket_col_override is None else bucket_col_override,
+            num_buckets=m.num_buckets if num_buckets_override is None else num_buckets_override,
+            files=new_files,
+            properties={
+                k: v
+                for k, v in {**m.properties, **(properties_update or {})}.items()
+                if not (properties_drop and k in properties_drop)
+            },
+            history=m.history
+            + [
+                {
+                    "version": m.version + 1,
+                    "operation": operation,
+                    # wall-clock commit time: operational metadata only
+                    # (TIMESTAMP AS OF); never part of row state, so
+                    # byte-identity across replays is unaffected
+                    "ts": time.time(),
+                }
+            ],
+            row_key=m.row_key,
+            version_cols=m.version_cols,
+            transform=m.transform,
+        )
+        LakeTable._publish(self.path, new)
+        self.manifest = new
+        return self
 
     def append(
         self,
@@ -740,7 +653,7 @@ class LakeTable:
             f"rename_column:{old}->{new}",
             schemas_update={sv: fields},
             schema_version=sv,
-            # bucket_col rename rides in the SAME atomic manifest swap — a
+            # bucket_col rename rides in the SAME atomic manifest publish — a
             # crash can never publish a manifest whose bucket_col names a
             # column that no longer exists
             bucket_col_override=new if m.bucket_col == old else None,
@@ -779,12 +692,6 @@ class LakeTable:
         "Retained" = the manifest file still exists; :meth:`expire_snapshots`
         removes old ones, and expired versions disappear from this listing
         even though they stay in the current manifest's ``history``."""
-        mdir = os.path.join(self.path, "metadata")
-        retained = sorted(
-            int(fn[1:-5])
-            for fn in os.listdir(mdir)
-            if fn.startswith("v") and fn.endswith(".json") and fn[1:-5].isdigit()
-        )
         ops = {h["version"]: h.get("operation", "?") for h in self.manifest.history}
         return [
             {
@@ -792,7 +699,7 @@ class LakeTable:
                 "operation": ops.get(v, "?"),
                 "current": v == self.manifest.version,
             }
-            for v in retained
+            for v in LakeTable._versions(self.path)
         ]
 
     def at_version(self, version: int) -> "LakeTable":
@@ -852,7 +759,7 @@ class LakeTable:
 
     def rollback(self, version: int) -> "LakeTable":
         """Restore an earlier snapshot's state as a NEW commit (Iceberg
-        ``rollback_to_snapshot``): the current pointer advances to a manifest
+        ``rollback_to_snapshot``): the head advances to a manifest
         whose file set + schema version are the old snapshot's. Nothing is
         deleted — the rolled-past snapshots stay retained (and inspectable /
         re-rollback-able) until :meth:`expire_snapshots`.
@@ -898,67 +805,43 @@ class LakeTable:
         older manifests and every data file referenced ONLY by expired
         snapshots.
 
-        Runs under the commit lock (serialized against committers). Deletion
-        order is crash-safe in the direction that matters: expired manifests
-        are unlinked FIRST, so a crash mid-way leaves only orphaned data
-        files, never a retained manifest with missing files. Only files
+        Deletion order is crash-safe in the direction that matters: expired
+        manifests are unlinked FIRST, so a crash mid-way leaves only orphaned
+        data files, never a retained manifest with missing files. Only files
         referenced by an expired manifest are deletion candidates — data/
         is NOT swept, because a concurrent writer's files legitimately sit
-        there before its manifest commit. No new snapshot is created — like
-        Iceberg, expiration is metadata cleanup, not a table mutation.
+        there before its manifest commit. No lock is needed: a concurrent
+        commit references only its base's files (the head, which is always
+        kept) or files it wrote itself, and the head check in
+        :meth:`_publish` refuses a stale handle whose next version this
+        expired. No new snapshot is created — like Iceberg, expiration is
+        metadata cleanup, not a table mutation.
         """
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        lock = os.path.join(self.path, "metadata", "commit.lock")
-        fd = self._acquire_lock(lock)
-        try:
-            cur = LakeTable.load(self.path)  # re-resolve under the lock
-            mdir = os.path.join(self.path, "metadata")
-            versions = sorted(
-                int(fn[1:-5])
-                for fn in os.listdir(mdir)
-                if fn.startswith("v") and fn.endswith(".json") and fn[1:-5].isdigit()
-            )
-            keep = set(versions[-keep_last:])
-            keep.add(cur.manifest.version)  # never expire the live snapshot
-            keep |= set(cur.tags().values())  # tagged snapshots are pinned
-            expired = [v for v in versions if v not in keep]
-
-            def refs(vs) -> set:
-                out: set = set()
-                for v in vs:
-                    try:
-                        with open(os.path.join(mdir, f"v{v}.json")) as fh:
-                            out |= {f["path"] for f in json.load(fh)["files"]}
-                    except FileNotFoundError:
-                        continue  # prior interrupted expire already removed it
-                return out
-
-            retained_refs = refs(keep)
-            expired_refs = refs(expired)
-            for v in expired:
-                try:
-                    os.unlink(os.path.join(mdir, f"v{v}.json"))
-                except FileNotFoundError:
-                    pass
-            removed = 0
-            for rel in sorted(expired_refs - retained_refs):
-                try:
-                    os.unlink(os.path.join(self.path, rel))
-                    removed += 1
-                except FileNotFoundError:
-                    pass
-            return {
-                "expired_snapshots": len(expired),
-                "data_files_removed": removed,
-                "retained_snapshots": len(keep & set(versions)),
-            }
-        finally:
-            os.close(fd)
+        versions = LakeTable._versions(self.path)
+        keep = set(versions[-keep_last:])  # the head is always kept
+        keep |= set(LakeTable.load(self.path).tags().values())  # tagged snapshots are pinned
+        expired = [v for v in versions if v not in keep]
+        retained_refs = LakeTable._refs(self.path, keep)
+        expired_refs = LakeTable._refs(self.path, expired)
+        for v in expired:
             try:
-                os.unlink(lock)
-            except OSError:
+                os.unlink(os.path.join(self.path, "metadata", f"v{v}.json"))
+            except FileNotFoundError:
                 pass
+        removed = 0
+        for rel in sorted(expired_refs - retained_refs):
+            try:
+                os.unlink(os.path.join(self.path, rel))
+                removed += 1
+            except FileNotFoundError:
+                pass
+        return {
+            "expired_snapshots": len(expired),
+            "data_files_removed": removed,
+            "retained_snapshots": len(keep & set(versions)),
+        }
 
     def remove_orphan_files(self, older_than_s: float = 3 * 24 * 3600.0) -> dict[str, int]:
         """GC for files no manifest references (Iceberg
@@ -971,45 +854,45 @@ class LakeTable:
         also 3 days): a LIVE writer's files exist unreferenced between its
         parquet write and its manifest commit, so only files older than the
         grace window are eligible — a commit gap longer than that is a
-        crashed writer, not a slow one. Runs under the commit lock so the
-        reference set cannot advance mid-sweep.
+        crashed writer, not a slow one. No lock is needed: a commit
+        published mid-sweep references only its base's files, which are
+        already in the reference set, or files it wrote inside the grace
+        window.
         """
-        lock = os.path.join(self.path, "metadata", "commit.lock")
-        fd = self._acquire_lock(lock)
-        try:
-            mdir = os.path.join(self.path, "metadata")
-            referenced: set = set()
-            for fn in os.listdir(mdir):
-                if fn.startswith("v") and fn.endswith(".json") and fn[1:-5].isdigit():
-                    with open(os.path.join(mdir, fn)) as fh:
-                        referenced |= {f["path"] for f in json.load(fh)["files"]}
-            cutoff = time.time() - older_than_s
-            removed = scanned = 0
-            data_root = os.path.join(self.path, "data")
-            for root, _dirs, fnames in os.walk(data_root):
-                for fn in fnames:
-                    # only files a manifest could reference — never write-
-                    # protocol artifacts (_SUCCESS, .crc) of committed snaps
-                    if fn.startswith((".", "_")) or not fn.endswith(".parquet"):
-                        continue
-                    p = os.path.join(root, fn)
-                    rel = os.path.relpath(p, self.path)
-                    scanned += 1
-                    if rel in referenced:
-                        continue
-                    try:
-                        if os.path.getmtime(p) <= cutoff:
-                            os.unlink(p)
-                            removed += 1
-                    except OSError:
-                        continue  # racing writer finalized/moved it
-            return {"files_scanned": scanned, "orphans_removed": removed}
-        finally:
-            os.close(fd)
+        referenced = LakeTable._refs(self.path, LakeTable._versions(self.path))
+        cutoff = time.time() - older_than_s
+        removed = scanned = 0
+        for root, _dirs, fnames in os.walk(os.path.join(self.path, "data")):
+            for fn in fnames:
+                # only files a manifest could reference — never write-
+                # protocol artifacts (_SUCCESS, .crc) of committed snaps
+                if fn.startswith((".", "_")) or not fn.endswith(".parquet"):
+                    continue
+                p = os.path.join(root, fn)
+                rel = os.path.relpath(p, self.path)
+                scanned += 1
+                if rel in referenced:
+                    continue
+                try:
+                    if os.path.getmtime(p) <= cutoff:
+                        os.unlink(p)
+                        removed += 1
+                except OSError:
+                    continue  # racing writer finalized/moved it
+        return {"files_scanned": scanned, "orphans_removed": removed}
+
+    @staticmethod
+    def _refs(path: str, versions) -> set:
+        """The data files the given snapshots' manifests reference; a
+        manifest an earlier or concurrent expire removed adds none."""
+        out: set = set()
+        for v in versions:
             try:
-                os.unlink(lock)
-            except OSError:
-                pass
+                with open(os.path.join(path, "metadata", f"v{v}.json")) as fh:
+                    out |= {f["path"] for f in json.load(fh)["files"]}
+            except FileNotFoundError:
+                continue
+        return out
 
     @staticmethod
     def _changed_buckets(from_m: Manifest, to_m: Manifest) -> list[int] | None:
@@ -1189,27 +1072,57 @@ class LakeTable:
     # ------------------------------------------------------------- internals
 
     @staticmethod
-    def _write_manifest(path: str, m: Manifest) -> None:
-        target = os.path.join(path, "metadata", f"v{m.version}.json")
-        tmp = target + f".tmp-{uuid.uuid4().hex[:8]}"
+    def _versions(path: str) -> list[int]:
+        """The published snapshot versions, ascending: every
+        ``metadata/v{N}.json``. The last one is the head."""
+        try:
+            names = os.listdir(os.path.join(path, "metadata"))
+        except FileNotFoundError:
+            return []
+        return sorted(
+            int(fn[1:-5])
+            for fn in names
+            if fn.startswith("v") and fn.endswith(".json") and fn[1:-5].isdigit()
+        )
+
+    @staticmethod
+    def _write_temp(path: str, m: Manifest) -> str:
+        """Write ``m`` to a durable temp manifest that no listing matches."""
+        tmp = os.path.join(path, "metadata", f"v{m.version}.json.tmp-{uuid.uuid4().hex[:8]}")
         with open(tmp, "w") as fh:
             json.dump(m.to_json(), fh)
             fh.flush()
-            os.fsync(fh.fileno())  # durable before the pointer can reference it
-        os.rename(tmp, target)
+            os.fsync(fh.fileno())  # durable before any reader can see it
+        return tmp
 
     @staticmethod
-    def _swap_pointer(path: str, version: int) -> None:
-        target = os.path.join(path, "metadata", _POINTER)
-        tmp = target + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.rename(tmp, target)  # POSIX atomic replace = the commit point
-        dfd = os.open(os.path.dirname(target), os.O_RDONLY)
+    def _publish(path: str, m: Manifest) -> None:
+        """The commit point: create ``metadata/v{m.version}.json`` if absent.
+
+        The head must still be the base ``m.version - 1`` (-1 for
+        :meth:`create`); that check refuses a stale handle even when its next
+        version number was expired. Two committers past the check race on
+        ``os.link``, which creates the name atomically for exactly one of
+        them; the other gets ``EEXIST``. Either way the loser raises and the
+        head is untouched. The check and the link are two steps: a version
+        expired between them (which takes two newer commits and an expire
+        inside that window) can be re-created below the head, where it is
+        never loaded as current and the committer's next commit is refused.
+        """
+        lost = RuntimeError(f"concurrent commit detected on {m.table}: refresh() and retry")
+        if (LakeTable._versions(path) or [-1])[-1] != m.version - 1:
+            raise lost
+        mdir = os.path.join(path, "metadata")
+        tmp = LakeTable._write_temp(path, m)
         try:
-            os.fsync(dfd)  # persist the rename itself across crashes
+            os.link(tmp, os.path.join(mdir, f"v{m.version}.json"))
+        except FileExistsError:
+            raise lost from None
+        finally:
+            os.unlink(tmp)
+        dfd = os.open(mdir, os.O_RDONLY)
+        try:
+            os.fsync(dfd)  # persist the new name across crashes
         finally:
             os.close(dfd)
 

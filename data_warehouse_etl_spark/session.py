@@ -16,7 +16,19 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+
+def _launch_conf() -> SparkConf | None:
+    """The conf of the driver JVM when one is already running — e.g. the one
+    spark-submit started with its ``--master`` — else None (reading a conf
+    with no JVM would start one before the defaults below are set)."""
+    if SparkContext._jvm is None:
+        if "PYSPARK_GATEWAY_PORT" not in os.environ:
+            return None
+        SparkContext._ensure_initialized()  # connect to the running JVM
+    return SparkConf()
 
 
 def get_spark(
@@ -27,12 +39,19 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env) or ``local[*]``.
-    On a real cluster, pass ``master=None`` and let spark-submit supply it.
+    ``master=None`` keeps the master of the launch conf (spark-submit's
+    ``--master``) and falls back to ``local[$SPARK_GRAFT_CPUS]`` (env) or
+    ``local[*]`` only when there is none. The ``spark.driver.memory``
+    default is set only when this call launches the driver JVM: a running
+    JVM's heap is already fixed.
     """
+    launch = _launch_conf()
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        master = f"local[{cpus}]" if cpus else "local[*]"
+        if launch is not None and launch.contains("spark.master"):
+            master = launch.get("spark.master")
+        else:
+            cpus = os.environ.get("SPARK_GRAFT_CPUS")
+            master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
         inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
         if inner.isdigit():
@@ -61,7 +80,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # scan-split floor: the per-file open charge keeps tiny files from
         # exploding into tasks, but the 4m default also FLOORS the derived
@@ -90,8 +108,11 @@ def get_spark(
         # don't line up (measured: 85s → 50s on a 2-batch replay)
         .config("spark.locality.wait", "0s")
     )
-    if master:
-        builder = builder.master(master)
+    builder = builder.master(master)
+    if launch is None:
+        builder = builder.config(
+            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -257,13 +257,13 @@ def test_schedule_registry_records_runs(spark, ledger, tmp_path):
 
 def test_schedule_registry_failure_never_masks_run(spark, ledger, tmp_path):
     """Round-5 advisor fix: the cadence registry is observational — a
-    failure writing it (e.g. commit-lock contention from a concurrent
-    process) must neither fail an otherwise-successful run() nor mask the
-    data path's own exception."""
+    failure writing it (e.g. a publish race lost to a concurrent process)
+    must neither fail an otherwise-successful run() nor mask the data
+    path's own exception."""
     eng = _mk_engine(spark, ledger, tmp_path, batch_size=2000)
 
     def boom(*a, **kw):
-        raise RuntimeError("concurrent commit in progress (_schedule lock held)")
+        raise RuntimeError("concurrent commit detected on _schedule: refresh() and retry")
 
     eng.schedule.record = boom
     n = eng.run()  # must complete despite the registry write failing

@@ -128,31 +128,6 @@ def test_auto_gate_falls_back_to_full_shuffle(spark, tmp_path, monkeypatch):
     assert h_auto == state_hash(forced.read_pages())
 
 
-def test_stale_lock_break_is_single_winner(tmp_path):
-    """A >300s-old commit.lock is broken by atomic rename: the breaker that
-    loses the rename must NOT remove the winner's fresh lock (round-3 fix
-    for the double-unlink clobbering race)."""
-    import os
-    import time
-
-    from data_warehouse_etl_spark.lake.table import LakeTable
-
-    lock = str(tmp_path / "commit.lock")
-    with open(lock, "w"):
-        pass
-    old = time.time() - 600
-    os.utime(lock, (old, old))
-    fd = LakeTable._acquire_lock(lock)   # breaks the stale lock, acquires
-    assert os.path.exists(lock)
-    # a second committer now sees a FRESH lock and must refuse, not break it
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="concurrent commit"):
-        LakeTable._acquire_lock(lock)
-    os.close(fd)
-    os.unlink(lock)
-
-
 def test_simhash64_planted_neardups_share_a_band(spark):
     """64-bit banded SimHash (round 3): two documents differing in one word
     out of ~40 must agree on at least one 16-bit band (become candidates);

@@ -283,9 +283,9 @@ def _change_batch(spark, t, kind):
 
 def _crash_index_commit(monkeypatch, table: str, after_write: bool):
     """Crash the first index commit to ``table`` (a subdirectory name of the
-    index): before its manifest is written, or after it but before the
-    pointer swap."""
-    real = LakeTable._write_manifest
+    index): before its temp manifest is written, or with the temp manifest
+    durable but not yet linked to its version name."""
+    real = LakeTable._write_temp
 
     def write(path, m):
         op = m.history[-1]["operation"]
@@ -293,9 +293,9 @@ def _crash_index_commit(monkeypatch, table: str, after_write: bool):
             if after_write:
                 real(path, m)
             raise _Crash(f"crash in the {table} commit")
-        real(path, m)
+        return real(path, m)
 
-    monkeypatch.setattr(LakeTable, "_write_manifest", staticmethod(write))
+    monkeypatch.setattr(LakeTable, "_write_temp", staticmethod(write))
 
 
 @pytest.mark.parametrize(
@@ -306,8 +306,9 @@ def _crash_index_commit(monkeypatch, table: str, after_write: bool):
 def test_index_crash_point_keeps_old_state_and_recovers(
     spark, tmp_path, monkeypatch, kind, point
 ):
-    """A crash at each step of an index sync commit — and, for IVF, between
-    the cells commit and the centroids commit — leaves the index reading
+    """A crash at each step of an index sync commit (``before_swap``: temp
+    manifest durable, not yet linked) — and, for IVF, between the cells
+    commit and the centroids commit — leaves the index reading
     exactly its pre-sync state, with its pre-sync anchor; re-running the
     sync applies the interval once and equals a from-scratch rebuild."""
     from data_warehouse_etl_spark.functions.similarity import (

@@ -1,6 +1,10 @@
-"""LakeTable: atomic snapshots, bucket pruning, field-id schema evolution."""
+"""LakeTable: atomic snapshots, the publish protocol, bucket pruning,
+field-id schema evolution."""
 
 import os
+import threading
+
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -82,29 +86,88 @@ def test_state_hash_order_insensitive(spark):
     assert state_hash(a) != state_hash(c)
 
 
-def test_lock_break_toctou_restores_live_lock(tmp_path, monkeypatch):
-    """Round-4 ADVICE fix: a breaker that stats the lock as stale but then
-    renames a FRESH lock (one recreated in its stat->rename window by another
-    breaker + new committer) must detect the hijack on re-stat, restore the
-    live lock, and report the slot held — never admit two committers."""
-    import time
+def test_publish_race_has_one_winner(tmp_path, monkeypatch):
+    """Six handles at the same base publish at once; each waits, its temp
+    manifest durable, until all have passed the head check, so the atomic
+    link alone picks the winner. Exactly one publishes; the rest raise and
+    each commits after refresh()."""
+    path = str(tmp_path / "t")
+    LakeTable.create(path, SCHEMA)
+    n = 6
+    handles = [LakeTable.load(path) for _ in range(n)]
+    barrier = threading.Barrier(n, timeout=30)
+    real = LakeTable._write_temp
 
-    import pytest
+    def write(p, m):
+        tmp = real(p, m)
+        barrier.wait()
+        return tmp
 
-    lock = str(tmp_path / "commit.lock")
-    fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    os.close(fd)
-    real_getmtime = os.path.getmtime
+    monkeypatch.setattr(LakeTable, "_write_temp", staticmethod(write))
+    won, lost = [], {}
 
-    def fake_getmtime(p):
-        # the pre-rename stat (lock path) reports a stale age; the re-stat of
-        # the renamed copy reports its TRUE fresh mtime — exactly the TOCTOU
-        if p == lock:
-            return time.time() - 400.0
-        return real_getmtime(p)
+    def commit(i):
+        try:
+            handles[i].set_properties({"writer": str(i)})
+            won.append(i)
+        except RuntimeError as e:
+            lost[i] = str(e)
 
-    monkeypatch.setattr("os.path.getmtime", fake_getmtime)
-    with pytest.raises(RuntimeError, match="concurrent commit in progress"):
-        LakeTable._acquire_lock(lock)
-    # the live lock was put back, not stolen or unlinked
-    assert os.path.exists(lock)
+    threads = [threading.Thread(target=commit, args=(i,)) for i in range(n)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=60)
+        assert not th.is_alive()
+    monkeypatch.undo()
+    assert len(won) == 1 and sorted(won + list(lost)) == list(range(n))
+    assert all("concurrent commit" in e for e in lost.values())
+    head = LakeTable.load(path)
+    assert head.manifest.version == 1
+    assert head.manifest.properties["writer"] == str(won[0])
+    for i in lost:
+        handles[i].refresh().set_properties({"writer": str(i)})
+    assert LakeTable._versions(path) == list(range(n + 1))
+    assert not [f for f in os.listdir(os.path.join(path, "metadata")) if ".tmp-" in f]
+
+
+def test_stale_handle_refused_after_its_next_version_expired(tmp_path):
+    path = str(tmp_path / "t")
+    stale = LakeTable.create(path, SCHEMA)
+    t = LakeTable.load(path)
+    for i in range(3):
+        t = t.set_properties({"i": str(i)})
+    t.expire_snapshots(keep_last=1)
+    assert LakeTable._versions(path) == [3]  # v1, the stale handle's next version, is gone
+    with pytest.raises(RuntimeError, match="concurrent commit"):
+        stale.set_properties({"i": "stale"})
+    assert LakeTable._versions(path) == [3]
+    assert LakeTable.load(path).manifest.properties["i"] == "2"
+
+
+def test_create_refuses_an_existing_table(spark, tmp_path):
+    path = str(tmp_path / "t")
+    t = LakeTable.create(path, SCHEMA, bucket_col="url", num_buckets=2)
+    t.append(spark.createDataFrame([("a", 1)], "url string, v int"))
+    with pytest.raises(FileExistsError):
+        LakeTable.create(path, [("other", "string")])
+    again = LakeTable.load(path)
+    assert again.manifest.version == 1 and LakeTable._versions(path) == [0, 1]
+    assert _rows(again.read(spark)) == {("a", 1)}
+
+
+def test_stray_temp_manifest_is_ignored(tmp_path):
+    """A publish that crashed with its temp manifest durable but unlinked
+    leaves a temp file that no reader or listing takes for a snapshot."""
+    path = str(tmp_path / "t")
+    LakeTable.create(path, SCHEMA)
+    empty = str(tmp_path / "empty")
+    for p, v in ((path, 1), (empty, 0)):
+        os.makedirs(os.path.join(p, "metadata"), exist_ok=True)
+        with open(os.path.join(p, "metadata", f"v{v}.json.tmp-deadbeef"), "w") as fh:
+            fh.write("{}")
+    assert LakeTable.exists(path) and not LakeTable.exists(empty)
+    t = LakeTable.load(path)
+    assert t.manifest.version == 0
+    assert [s["version"] for s in t.snapshots()] == [0]
+    assert t.set_properties({"k": "v"}).manifest.version == 1

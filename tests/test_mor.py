@@ -1,5 +1,5 @@
 """Merge-on-read guarantees: bounded per-batch writes, oracle parity,
-compaction invariance, commit-lock serialization, crash recovery.
+compaction invariance, stale-handle refusal, crash recovery.
 
 The round-1 scale ceiling was copy-on-write: a batch touching all buckets
 rewrote the whole table, making replay cost quadratic in table size
@@ -9,8 +9,8 @@ these tests pin the contract:
 - per-batch written bytes are O(batch), not O(table)  (bounded-write law)
 - replays reach the pandas oracle's final state at any batch slicing
 - compaction is a pure layout change (state_hash invariant to cadence)
-- concurrent committers serialize on the lock file, losers get an error
-  instead of silently clobbering the winner's manifest
+- a committer whose base is no longer the head gets an error instead of
+  silently clobbering the winner's manifest
 - a crash at any commit step resumes to the uninterrupted state
 """
 
@@ -129,7 +129,7 @@ def test_mor_resume_equals_oneshot(spark, tmp_lake):
     assert state_hash(a2.read_pages()) == state_hash(b.read_pages())
 
 
-def test_commit_lock_serializes_writers(spark, tmp_lake):
+def test_stale_handle_data_commit_is_refused(spark, tmp_lake):
     path = os.path.join(tmp_lake, "t")
     t = LakeTable.create(path, [("k", "string"), ("v", "bigint")], bucket_col="k")
     df = spark.createDataFrame([("a", 1)], "k string, v bigint")
@@ -139,18 +139,7 @@ def test_commit_lock_serializes_writers(spark, tmp_lake):
     t.append(df)
     with pytest.raises(RuntimeError, match="concurrent commit"):
         stale.append(df)
-
-    # a held lock blocks committers...
-    lock = os.path.join(path, "metadata", "commit.lock")
-    with open(lock, "w"):
-        pass
-    with pytest.raises(RuntimeError, match="in progress"):
-        t.append(df)
-    # ...until it goes stale (crashed committer), then it is broken
-    old = os.path.getmtime(lock) - LakeTable._LOCK_STALE_S - 1
-    os.utime(lock, (old, old))
-    t.append(df)  # succeeds by breaking the stale lock
-    assert not os.path.exists(lock)
+    assert LakeTable.load(path).manifest.version == t.manifest.version == 1
 
 
 def test_mor_metrics_account_for_every_event(spark, tmp_lake):
@@ -286,9 +275,9 @@ def crash_ref(spark, tmp_path_factory):
 
 def _crash_in_manifest_write(monkeypatch, operation: str, nth: int, after_write: bool):
     """Crash the nth commit of ``operation`` once its data files are
-    written: before its manifest is written, or (``after_write``) after the
-    manifest but before the pointer swap."""
-    real = LakeTable._write_manifest
+    written: before its temp manifest is written, or (``after_write``) with
+    the temp manifest durable but not yet linked to its version name."""
+    real = LakeTable._write_temp
     seen = []
 
     def write(path, m):
@@ -298,13 +287,13 @@ def _crash_in_manifest_write(monkeypatch, operation: str, nth: int, after_write:
                 if after_write:
                     real(path, m)
                 raise _Crash(f"crash in {operation} commit")
-        real(path, m)
+        return real(path, m)
 
-    monkeypatch.setattr(LakeTable, "_write_manifest", staticmethod(write))
+    monkeypatch.setattr(LakeTable, "_write_temp", staticmethod(write))
 
 
 def _crash_in_flush(monkeypatch, nth: int):
-    """Crash at the nth mirror flush — after that batch's pointer swap —
+    """Crash at the nth mirror flush — after that batch's publish —
     and every flush after it (a dead process flushes nothing more)."""
     real = CdcEngine.flush_mirrors
     calls = []
@@ -326,10 +315,11 @@ def test_crash_point_resumes_to_uninterrupted_state(
 ):
     """A crash at each step of the delta commit, inside compaction, and
     inside a rollback leaves a table that a fresh engine resumes to the
-    uninterrupted run's state_hash (the manifest pointer swap is the one
-    commit point). The rollback case replays the whole ledger, rolls the
-    table back to an early batch — before the schema evolution — and
-    resumes from the offsets committed with that batch."""
+    uninterrupted run's state_hash (linking the manifest to its version
+    name is the one commit point; ``before_swap`` crashes with the temp
+    manifest durable but not linked). The rollback case replays the whole
+    ledger, rolls the table back to an early batch — before the schema
+    evolution — and resumes from the offsets committed with that batch."""
     led, h_ref = crash_ref
     path = os.path.join(tmp_lake, "pages")
     if point == "rollback":

@@ -52,7 +52,7 @@ def test_time_travel_and_snapshot_listing(spark, tmp_lake):
     assert snaps[-1]["current"] and not snaps[0]["current"]
     assert snaps[2]["operation"] == "append_deltas"
 
-    # a historical handle is read-only: its commit fails the pointer CAS
+    # a historical handle is read-only: its commit fails the head check
     old = t.at_version(1)
     with pytest.raises(RuntimeError, match="concurrent commit"):
         old.append_deltas(spark.createDataFrame([("z", 0, 9)], t.schema()))
@@ -75,7 +75,7 @@ def test_rollback_restores_state_as_new_commit(spark, tmp_lake):
 
     t = t.rollback(v1)
     assert state_hash(t.read(spark)) == h1
-    assert t.manifest.version == v1 + 3  # a NEW commit, not a pointer rewind
+    assert t.manifest.version == v1 + 3  # a NEW commit, not a head rewind
     assert t.manifest.history[-1]["operation"] == f"rollback:v{v1}"
     # properties roll back with the data; refs made after v1 survive
     assert t.manifest.properties["offset"] == "1"

@@ -54,10 +54,12 @@ def test_spark_submit_pyfiles_replay(tmp_path):
     zip_path = build(str(tmp_path / "pkg.zip"))
 
     r2 = _submit("local[2]", led.path, str(tmp_path / "pages2"), zip_path)
+    assert r2["master"] == "local[2]"
     assert r2["batches"] > 0 and r2["events_applied"] == 3000
     assert r2["live_rows"] > 0
 
     r8 = _submit("local[8]", led.path, str(tmp_path / "pages8"), zip_path)
+    assert r8["master"] == "local[8]"
     # byte-identical state at both parallelism levels — the north-rule check
     assert r8["state_hash"] == r2["state_hash"]
     assert r8["live_rows"] == r2["live_rows"]
@@ -79,6 +81,8 @@ def test_spark_submit_local_cluster_multi_jvm(tmp_path):
     r_lc = _submit(
         "local-cluster[2,1,1536]", led.path, str(tmp_path / "pages_lc"), zip_path
     )
+    assert r_local["master"] == "local[2]"
+    assert r_lc["master"] == "local-cluster[2,1,1536]" and r_lc["executors"] == 2
     assert r_lc["batches"] > 0 and r_lc["events_applied"] == 3000
     assert r_lc["state_hash"] == r_local["state_hash"]
     assert r_lc["live_rows"] == r_local["live_rows"]

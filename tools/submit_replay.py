@@ -13,9 +13,10 @@ flags, so the SAME invocation runs at N and at 4N executors:
         --batch-size 20000000 --num-buckets 1024 \\
         --shuffle-partitions 4096
 
-Prints one JSON line with batches applied, events/sec, live rows, and the
-order-insensitive state hash — diff the hash across the two cluster sizes
-for the byte-identical-state half of the scaling criterion.
+Prints one JSON line with the master, the executor JVM count, batches
+applied, events/sec, live rows, and the order-insensitive state hash — diff
+the hash across the two cluster sizes for the byte-identical-state half of
+the scaling criterion.
 """
 
 from __future__ import annotations
@@ -44,7 +45,7 @@ def main() -> None:
                          "(one extra read of the live table)")
     args = ap.parse_args()
 
-    # session.get_spark passes master=None here: spark-submit owns it
+    # master=None: get_spark keeps the master spark-submit launched with
     from data_warehouse_etl_spark.session import get_spark
     from data_warehouse_etl_spark.cdc import CdcEngine, EngineConfig
 
@@ -68,7 +69,12 @@ def main() -> None:
     n_batches = eng.run(max_batches=args.max_batches)
     wall = time.monotonic() - t0
 
+    sc = spark.sparkContext
     out = {
+        "master": sc.master,
+        # block managers minus the driver's: executor JVMs (0 in local mode,
+        # where the driver runs the tasks)
+        "executors": sc._jsc.sc().getExecutorMemoryStatus().size() - 1,
         "batches": n_batches,
         "wall_sec": round(wall, 3),
         "committed_offsets": eng.committed_offsets(),
