@@ -21,7 +21,8 @@ Layout
                    simhash / jaccard), similarity search, text analysis,
                    multimodal column plumbing
 - ``sources``    : CSV / JSON / XML-feed ingest helpers
-- ``streaming``  : Structured Streaming variant of the apply loop
+- ``streaming``  : the stateful event-time sessionizer (Structured Streaming
+                   ``applyInPandasWithState``); the CDC tail is ``CdcEngine.run``
 """
 
 __version__ = "0.1.0"

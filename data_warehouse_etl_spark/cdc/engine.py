@@ -3,8 +3,9 @@ a lake table, exactly-once, with per-partition checkpoints and metrics.
 
 Lifecycle per batch (SURVEY.md §3.4), merge-on-read:
 
-    changes ledger (LakeTable)                                  [source]
-      → slice per-part offset range (cp[p], cp[p]+batch_size]   [plan; file-stats pruning]
+    changes ledger (LakeTable), head reloaded per run()         [source]
+      → slice per-part offset range (cp[p], cp[p]+batch_size],
+        skipping seq gaps no ledger file's stats cover          [plan; file-stats pruning]
       → LWW winner keys over a (url, warc_ts, seq) projection,
         hot urls (amortized sampled detection) salted two-phase;
         winners' seqs broadcast back as a map-side semi-join     [shuffle 1: keys only]
@@ -28,6 +29,11 @@ offsets ride in the same manifest (the reference needed a rename-swap publish
 batches resumes from the committed offsets; a crash mid-batch leaves the old
 snapshot visible and the batch re-runs identically (deterministic slicing +
 deterministic reduce ⇒ identical result).
+
+Tail: :meth:`CdcEngine.run` is the one loop for replay and tail alike. Each
+call reloads the ledger head, so calling it again on a long-lived handle
+applies whatever the ledger has committed since; it reads only files a
+ledger manifest lists, so a writer's uncommitted parquet is never applied.
 
 Deletes are kept as **tombstones** (``_deleted=true`` with the delete's
 version) rather than physically removed: a late update older than an applied
@@ -63,6 +69,7 @@ from .schedule import ScheduleTable
 INTERNAL_COLS = ("_seq", "_deleted")
 CHECKPOINTS_PROP = "checkpoints"
 BATCH_PROP = "last_batch_id"
+LEDGER_VERSION_PROP = "ledger_version"  # ledger snapshot the last batch was planned on
 WM_PROP = "wm_high"  # committed event-time high-water-mark (monotone watermark)
 
 log = logging.getLogger(__name__)
@@ -138,17 +145,13 @@ class EngineConfig:
     # compact() must not accumulate unbounded read amplification. The
     # per-batch `max_deltas_per_bucket` metric tracks it.
     compact_every_batches: int = 32
-    watermark_delay_s: int | None = None  # drop events older than watermark-delay
-    # how the watermark high-water-mark is obtained:
-    # - "monotone" (default): cutoff = (max warc_ts observed in PRIOR
-    #   batches) - delay, exactly Structured Streaming's own law (the
-    #   watermark advances one trigger behind event time). The max rides the
-    #   apply job's observation — ZERO extra passes — and is committed in
-    #   the manifest, so a cold resume restores the same cutoffs
-    #   deterministically. The first batch of a fresh table is unfiltered.
-    # - "batch_exact": cutoff = max(warc_ts) of the CURRENT batch - delay;
-    #   requires one extra pre-aggregated pass over the batch per batch.
-    watermark_mode: str = "monotone"
+    # drop events older than the watermark: cutoff = (max warc_ts observed
+    # in PRIOR batches) - delay, Structured Streaming's own law (the
+    # watermark advances one trigger behind event time). The max rides the
+    # apply job's observation — ZERO extra passes — and is committed in the
+    # manifest, so a cold resume restores the same cutoffs
+    # deterministically. The first batch of a fresh table is unfiltered.
+    watermark_delay_s: int | None = None
     # flush the observational metrics/checkpoints mirror tables every N
     # batches (and at end of run). The authoritative offsets are inside the
     # data commit; the mirrors are lineage queries, so batching their writes
@@ -190,9 +193,7 @@ class CdcEngine:
         # commit right after each batch, so the next batch's cutoff depends
         # only on committed state and a cold resume replays the identical
         # cutoffs
-        self._wm_track = (
-            cfg.watermark_delay_s is not None and cfg.watermark_mode == "monotone"
-        )
+        self._wm_track = cfg.watermark_delay_s is not None
         self._wm_pending = None
 
     # ------------------------------------------------------------------ setup
@@ -238,7 +239,7 @@ class CdcEngine:
 
     def refresh_pages(self) -> DataFrame:
         """Reload the table head, then read (for observers of a table
-        another handle — e.g. a streaming query — has been committing to)."""
+        another handle has been committing to)."""
         self.pages = self.pages.refresh()
         return self.read_pages()
 
@@ -305,7 +306,15 @@ class CdcEngine:
 
     def run(self, max_batches: int | None = None) -> int:
         """Replay until the ledger is exhausted (or max_batches). Returns the
-        number of batches applied in this call."""
+        number of batches applied in this call.
+
+        This is also the tail: each call first reloads the ledger head, so a
+        later call on the same handle applies whatever the ledger has
+        committed since. Only manifest-listed files are read, columns map by
+        field id (LakeTable.read), and the offsets committed with each batch
+        make the apply exactly-once."""
+        self.ledger = self.ledger.refresh()
+        self._check_ledger_appends()
         max_seq = self._ledger_max_seq_per_part()
         applied = 0
         try:
@@ -349,6 +358,41 @@ class CdcEngine:
                 log.warning("schedule registry write skipped: %s", e)
         return applied
 
+    def _check_ledger_appends(self) -> None:
+        """Refuse a ledger file committed since the last planned batch whose
+        stats start at or below a committed offset: the slices have already
+        passed its seqs, so run() would silently never apply them. Manifest
+        reads only. A file without stats, or a planned-on ledger snapshot
+        that is no longer retained, cannot be checked."""
+        raw = self.pages.manifest.properties.get(LEDGER_VERSION_PROP)
+        if raw is None or int(raw) == self.ledger.manifest.version:
+            return
+        try:
+            planned = LakeTable.load(self.ledger.path, int(raw)).manifest.files
+        except ValueError:
+            return
+        seen = {f["path"] for f in planned}
+        top = max(self.committed_offsets().values(), default=0)
+        for f in self.ledger.manifest.files:
+            st = f.get("stats")
+            if st and f["path"] not in seen and st["min_seq"] <= top:
+                raise ValueError(
+                    f"ledger file {f['path']} (seq {st['min_seq']}..{st['max_seq']}) "
+                    f"was committed after the replay passed seq {top}; "
+                    "its rows at or below the committed offsets would never be applied"
+                )
+
+    def _first_seq_above(self, cp: int) -> int:
+        """The first seq above offset ``cp`` that some ledger file's stats
+        cover. A slice starts there, so a seq gap wider than batch_size is
+        crossed in one batch instead of one empty slice at a time. Any file
+        without stats could hold any seq, and keeps the start at cp + 1."""
+        stats = [f.get("stats") for f in self.ledger.manifest.files]
+        if not all(stats):
+            return cp + 1
+        above = (max(st["min_seq"], cp + 1) for st in stats if st["max_seq"] > cp)
+        return min(above, default=cp + 1)
+
     def compact(self, buckets: list[int] | None = None) -> None:
         """Fold merge-on-read delta files into base files (pure layout
         change; state_hash invariant — see LakeTable.compact)."""
@@ -375,7 +419,7 @@ class CdcEngine:
         for p, mx in max_seq.items():
             cp = cps.get(p, 0)
             if cp < mx:
-                targets[p] = min(cp + cfg.batch_size, mx)
+                targets[p] = min(self._first_seq_above(cp) - 1 + cfg.batch_size, mx)
         if not targets:
             return False
         batch_id = self.last_batch_id() + 1
@@ -407,8 +451,9 @@ class CdcEngine:
             properties_update={
                 CHECKPOINTS_PROP: json.dumps({str(k): v for k, v in sorted(new_cps.items())}),
                 BATCH_PROP: str(batch_id),
+                LEDGER_VERSION_PROP: str(self.ledger.manifest.version),
             },
-            timer=tm,
+            tm=tm,
             parts=sorted(targets),
             input_counts=self._dense_input_counts(cps, targets),
         )
@@ -424,40 +469,7 @@ class CdcEngine:
         tm.mark("metrics+checkpoints")
         return True
 
-    # ------------------------------------------------ shared transform/merge
-
-    def apply_events(self, events: DataFrame, stream_batch_id: int | None = None) -> bool:
-        """Apply an arbitrary DataFrame of ledger-schema events (the
-        Structured Streaming ``foreachBatch`` entry point).
-
-        Exactly-once under micro-batch retry: when ``stream_batch_id`` is
-        given and ≤ the last committed one, the call is a no-op (Spark
-        re-delivers a failed micro-batch under the same id; the commit below
-        records it atomically with the data).
-        """
-        t0 = time.monotonic()
-        if stream_batch_id is not None:
-            last = int(self.pages.manifest.properties.get("last_stream_batch_id", "-1"))
-            if stream_batch_id <= last:
-                return False
-        self.pages = evolve.sync_schema(self.ledger, self.pages)
-        # same late-data law as the batch loop (a withWatermark on a
-        # foreachBatch sink is a no-op — the filter must run here)
-        events = self._apply_watermark(events)
-        props = {}
-        if stream_batch_id is not None:
-            props["last_stream_batch_id"] = str(stream_batch_id)
-        # parts=None: the part set rides the same per-part counting pass the
-        # input stats need anyway (one pass, not a separate distinct())
-        instats, mstats = self._transform_and_merge(
-            events, properties_update=props, parts=None
-        )
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        label = stream_batch_id if stream_batch_id is not None else self.last_batch_id()
-        self.metrics.append(
-            self.spark, self._metric_rows(label, sorted(instats), instats, mstats, wall_ms)
-        )
-        return True
+    # ------------------------------------------------------- transform/merge
 
     @staticmethod
     def _batch_predicate(cps: dict[int, int], targets: dict[int, int]):
@@ -474,8 +486,9 @@ class CdcEngine:
         if len(lo_set) == 1:
             lo = lo_set.pop()
             hi = max(targets.values())
-            # sound because run_one_batch builds t_p = min(lo+bs, max_p):
-            # a part whose ceiling is below hi simply HAS no rows above it,
+            # sound because run_one_batch builds t_p = min(s - 1 + bs, max_p)
+            # with one slice start s per offset (_first_seq_above): a part
+            # whose ceiling is below hi simply HAS no rows above it,
             # and parts absent from targets (exhausted at a different
             # offset) are excluded by the membership check
             return (
@@ -507,21 +520,14 @@ class CdcEngine:
         return _dt.datetime.fromisoformat(raw) if raw else None
 
     def _apply_watermark(self, events: DataFrame) -> DataFrame:
-        """Late-data filter. ``monotone`` mode (default) uses the committed
-        event-time high-water-mark — Structured Streaming's own law, zero
-        extra passes (the max rides the apply job's observation and is
-        persisted in the following commit). ``batch_exact`` pays one
-        pre-aggregated pass for a current-batch cutoff."""
-        cfg = self.cfg
-        if cfg.watermark_delay_s is None:
-            return events
-        if cfg.watermark_mode == "batch_exact":
-            wm = events.agg(F.max("warc_ts").alias("m")).collect()[0]["m"]
-        else:
-            wm = self._committed_wm()
+        """Late-data filter against the committed event-time high-water-mark
+        — Structured Streaming's own law, zero extra passes (the max rides
+        the apply job's observation and is persisted in the following
+        commit)."""
+        wm = self._committed_wm() if self._wm_track else None
         if wm is None:
             return events
-        cutoff = F.lit(wm) - F.expr(f"INTERVAL {cfg.watermark_delay_s} SECONDS")
+        cutoff = F.lit(wm) - F.expr(f"INTERVAL {self.cfg.watermark_delay_s} SECONDS")
         return events.filter(F.col("warc_ts") >= cutoff)
 
     def _dense_input_counts(self, cps: dict[int, int], targets: dict[int, int]):
@@ -550,8 +556,8 @@ class CdcEngine:
         self,
         events: DataFrame,
         properties_update: dict[str, str],
-        timer: _Timer | None = None,
-        parts: list[int] | None = None,
+        tm: _Timer,
+        parts: list[int],
         input_counts: dict[int, int] | None = None,
     ) -> tuple[dict[int, dict], dict]:
         """Dedup + extract + apply. Returns (instats, mstats), both computed
@@ -563,7 +569,6 @@ class CdcEngine:
         post-dedup survivor set (10-100x fewer rows) and reports bytes of
         APPLIED html rather than scanned html."""
         cfg = self.cfg
-        tm = timer or _Timer("apply")
         payload_names = [f.name for f in evolve.payload_fields(self.ledger)]
 
         # ---- per-part input stats. An events-level observe() is NOT safe
@@ -571,9 +576,7 @@ class CdcEngine:
         # (hot-key count, broadcast-keys winner subtree), and a
         # Spark Observation asserts on multiple updates. Ledgers that declare
         # dense-seq stats (input_counts) need no pass at all; others pay one
-        # explicit column-pruned pre-aggregation — which also yields the part
-        # set when the caller doesn't know it upfront (parts=None: streaming
-        # micro-batches of arbitrary composition).
+        # explicit column-pruned pre-aggregation.
         if input_counts is None:
             scanned_stats = {
                 int(r["part"]): {
@@ -587,8 +590,6 @@ class CdcEngine:
                 )
                 .collect()
             }
-            if parts is None:
-                parts = sorted(scanned_stats)
             n_rows = sum(s["events_in"] for s in scanned_stats.values())
         else:
             n_rows = sum(input_counts.values())
@@ -606,10 +607,9 @@ class CdcEngine:
 
         # ---- LWW dedup. "auto" gates the broadcast-keys plan on the ACTUAL
         # batch row count (ledger metadata or the scanned stats above), an
-        # upper bound on the winner count — cfg.batch_size bounds the
-        # deterministic loop's slices but not an arbitrary apply_events
-        # micro-batch, and a forced broadcast of an unbounded winner set is a
-        # driver/executor OOM hazard.
+        # upper bound on the winner count — cfg.batch_size bounds a slice's
+        # seq width, not its row count, and a forced broadcast of an
+        # unbounded winner set is a driver/executor OOM hazard.
         use_bcast = cfg.dedup_plan == "broadcast_keys" or (
             cfg.dedup_plan == "auto" and n_rows <= _BROADCAST_MAX_ROWS
         )
@@ -757,8 +757,7 @@ class CdcEngine:
             # event always wins its key), so observing it on the survivor set
             # equals the batch max — no pre-pass needed
             out_aggs.append(F.expr("max(warc_ts) as wm_max"))
-        if out_aggs:
-            enriched = enriched.observe(obs_out, *out_aggs)
+        enriched = enriched.observe(obs_out, *out_aggs)
 
         def val(name: str):
             if name == "_seq":
@@ -772,6 +771,7 @@ class CdcEngine:
             return F.col(name)
 
         delta = enriched.select(*[val(n).alias(n) for n in page_fields])
+        n_files = len(self.pages.manifest.files)
         self.pages = self.pages.append_deltas(
             delta,
             properties_update=properties_update,
@@ -784,7 +784,10 @@ class CdcEngine:
         )
         tm.mark("dedup+extract+delta_commit")
 
-        vals = obs_out.get if out_aggs else {}  # ONE py4j fetch (see _observed)
+        # ONE py4j fetch (see _observed). A slice with no survivors writes
+        # no file, and Spark may then skip the observed node entirely and
+        # report no row: its counts are all zero.
+        vals = obs_out.get if len(self.pages.manifest.files) > n_files else {}
         mstats: dict = {}
         bytes_by_part: dict[int, int] = {}
         for p in parts:

@@ -1,4 +1,3 @@
 from .sessionize import SESSION_SCHEMA, sessionize_stream
-from .stream_apply import StreamingCdcApply
 
-__all__ = ["StreamingCdcApply", "sessionize_stream", "SESSION_SCHEMA"]
+__all__ = ["sessionize_stream", "SESSION_SCHEMA"]

@@ -1,233 +1,136 @@
-"""Structured Streaming apply reaches the same final state as batch replay."""
+"""The CDC tail is ``CdcEngine.run()`` on a long-lived handle: each call
+applies what the ledger manifest has committed since the last one. Also the
+stateful sessionizer (``streaming/sessionize.py``)."""
 
 import os
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
+
 from data_warehouse_etl_spark.cdc import CdcEngine, EngineConfig, LedgerSpec, generate_ledger
-from data_warehouse_etl_spark.lake import state_hash
-from data_warehouse_etl_spark.streaming import StreamingCdcApply
+from data_warehouse_etl_spark.lake import LakeTable, state_hash
 
 SPEC = LedgerSpec(n_urls=200, n_events=1500, n_parts=2, seed=11)
 
 
-def test_stream_apply_matches_batch(spark, tmp_path):
+def _engine(spark, led, pages: str, **cfg) -> CdcEngine:
+    return CdcEngine(
+        spark,
+        EngineConfig(ledger_path=led.path, pages_path=pages, batch_size=400,
+                     num_buckets=4, **cfg),
+    )
+
+
+def _write_file(led, name: str, t: pa.Table) -> dict:
+    """Write ``t`` under the ledger's data dir WITHOUT committing it; returns
+    the manifest entry a ``register_files`` commit would add."""
+    rel = os.path.join("data", name, "f.parquet")
+    os.makedirs(os.path.join(led.path, "data", name), exist_ok=True)
+    pq.write_table(t, os.path.join(led.path, rel))
+    seqs = t.column("seq")
+    return {"path": rel, "bucket": 0,
+            "schema_version": led.manifest.files[0]["schema_version"],
+            "stats": {"min_seq": pc.min(seqs).as_py(), "max_seq": pc.max(seqs).as_py()}}
+
+
+def _one_row(led, name: str, url: str, seq: int) -> dict:
+    """A one-event file sliced from a committed one (so the physical types
+    match exactly), re-keyed to ``url`` at ``seq``; it keeps that event's
+    part, 1."""
+    t = pq.read_table(os.path.join(led.path, led.manifest.files[0]["path"])).slice(0, 1)
+    for col, val in (("url", url), ("seq", seq)):
+        idx = t.schema.get_field_index(col)
+        t = t.set_column(idx, t.schema.field(col), pa.array([val], type=t.schema.field(col).type))
+    return _write_file(led, name, t)
+
+
+def _count(eng: CdcEngine, url: str) -> int:
+    return eng.read_pages().filter(f"url = '{url}'").count()
+
+
+def test_run_tails_ledger_appends_on_same_handle(spark, tmp_path):
+    """An engine built before a ``register_files`` append applies the
+    appended events on its next run() (the ledger head is reloaded) and
+    reaches the one-shot replay's state; an exhausted ledger is a no-op
+    that publishes no snapshot."""
     led = generate_ledger(str(tmp_path / "changes"), SPEC)
+    tail = _engine(spark, led, str(tmp_path / "tail"))
+    assert tail.run() == 4
+    # the same 1500 events again, 1500 seqs and seconds later (an even
+    # shift keeps part = seq % 2): newer versions of the same urls
+    t = pq.read_table(os.path.join(led.path, led.manifest.files[0]["path"]))
+    shift = SPEC.n_events
+    t = t.set_column(t.schema.get_field_index("seq"), "seq", pc.add(t.column("seq"), shift))
+    ts = t.column("warc_ts")
+    shifted = pc.add(ts.cast(pa.int64()), shift * 1_000_000).cast(ts.type)
+    t = t.set_column(t.schema.get_field_index("warc_ts"), "warc_ts", shifted)
+    led.register_files([_write_file(led, "append", t)])
 
-    batch = CdcEngine(
-        spark,
-        EngineConfig(ledger_path=led.path, pages_path=str(tmp_path / "pages_batch"),
-                     batch_size=400, num_buckets=4),
-    )
-    batch.run()
-    h_batch = state_hash(batch.read_pages())
+    assert tail.run() == 4
+    one_shot = _engine(spark, led, str(tmp_path / "one_shot"))
+    one_shot.run()
+    assert state_hash(tail.read_pages()) == state_hash(one_shot.read_pages())
 
-    streaming = StreamingCdcApply(
-        spark,
-        EngineConfig(ledger_path=led.path, pages_path=str(tmp_path / "pages_stream"),
-                     batch_size=400, num_buckets=4),
-    )
-    streaming.run_to_completion(timeout_s=300)
-    h_stream = state_hash(streaming.engine.refresh_pages())
-    assert h_stream == h_batch
-    # the streaming tail records a cadence-registry row like the batch loop
-    sched = streaming.engine.schedule.read(spark).collect()
-    assert len(sched) >= 1 and sched[0]["batches_applied"] >= 1
-
-
-def test_stream_apply_matches_batch_on_evolved_ledger(spark, tmp_path):
-    """Round-2 regression (ADVICE r1): a fixed current-schema file stream
-    nulls out pre-evolution columns ('lang' files read as 'language'=null).
-    The stream must map historical columns by field id, like batch reads."""
-    spec = LedgerSpec(n_urls=200, n_events=1500, n_parts=2, seed=13, evolve_at_seq=700)
-    led = generate_ledger(str(tmp_path / "changes"), spec)
-
-    batch = CdcEngine(
-        spark,
-        EngineConfig(ledger_path=led.path, pages_path=str(tmp_path / "pages_batch"),
-                     batch_size=400, num_buckets=4),
-    )
-    batch.run()
-    h_batch = state_hash(batch.read_pages())
-    # sanity: the evolved column carries real values in the batch state
-    n_lang = batch.read_pages().filter("language IS NOT NULL").count()
-    assert n_lang > 0
-
-    streaming = StreamingCdcApply(
-        spark,
-        EngineConfig(ledger_path=led.path, pages_path=str(tmp_path / "pages_stream"),
-                     batch_size=400, num_buckets=4),
-    )
-    streaming.run_to_completion(timeout_s=300)
-    h_stream = state_hash(streaming.engine.refresh_pages())
-    assert h_stream == h_batch
-    assert (
-        streaming.engine.read_pages().filter("language IS NOT NULL").count() == n_lang
-    )
+    head = tail.pages.manifest.version
+    assert tail.run() == 0
+    assert LakeTable.load(tail.pages.path).manifest.version == head
 
 
 def test_stream_ignores_uncommitted_orphan_files(spark, tmp_path):
-    """Files in the data dir that never made a manifest commit must not be
-    applied (crashed writer's orphans)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    """A parquet file under the ledger's data dir that no manifest lists (a
+    crashed writer's orphan) is never applied, by a replay or a later tail
+    call."""
     led = generate_ledger(str(tmp_path / "changes"), SPEC)
-    # plant an orphan parquet with a poison row the stream must not apply —
-    # sliced from a real committed file so the physical types match exactly
-    orphan_dir = os.path.join(led.path, "data", "orphan")
-    os.makedirs(orphan_dir, exist_ok=True)
-    src = os.path.join(led.path, led.manifest.files[0]["path"])
-    t = pq.read_table(src).slice(0, 1)
-    t = t.set_column(
-        t.schema.get_field_index("url"),
-        t.schema.field("url"),
-        pa.array(["http://poison.example/x"], type=t.schema.field("url").type),
-    )
-    t = t.set_column(
-        t.schema.get_field_index("seq"),
-        t.schema.field("seq"),
-        pa.array([10**12], type=t.schema.field("seq").type),
-    )
-    pq.write_table(t, os.path.join(orphan_dir, "o.parquet"))
-
-    streaming = StreamingCdcApply(
-        spark,
-        EngineConfig(ledger_path=led.path, pages_path=str(tmp_path / "pages_o"),
-                     batch_size=400, num_buckets=4),
-    )
-    streaming.run_to_completion(timeout_s=300)
-    pages = streaming.engine.refresh_pages()
-    assert pages.filter("url = 'http://poison.example/x'").count() == 0
-
-
-def test_stream_batch_retry_is_noop(spark, tmp_path):
-    led = generate_ledger(str(tmp_path / "changes"), SPEC)
-    eng = CdcEngine(
-        spark,
-        EngineConfig(ledger_path=led.path, pages_path=str(tmp_path / "pages"),
-                     batch_size=400, num_buckets=4),
-    )
-    events = led.read(spark)
-    assert eng.apply_events(events, stream_batch_id=0) is True
-    h = state_hash(eng.read_pages())
-    # redelivery of the same micro-batch id (Spark's retry contract) is a no-op
-    assert eng.apply_events(events, stream_batch_id=0) is False
-    assert state_hash(eng.read_pages()) == h
+    _one_row(led, "orphan", "http://poison.example/x", 10**12)
+    eng = _engine(spark, led, str(tmp_path / "pages_o"))
+    eng.run()
+    assert eng.run() == 0
+    assert _count(eng, "http://poison.example/x") == 0
 
 
 def test_stream_defers_then_applies_late_committed_files(spark, tmp_path):
-    """A file the stream consumed BEFORE its manifest commit landed (the
-    ledger writer's normal write-then-register sequence) must not be lost:
-    it is deferred in the checkpoint sidecar and applied once committed
-    (round-3 fix for the consumed-and-dropped data-loss hazard)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    """A file written before its manifest commit lands (the ledger writer's
+    write-then-register sequence) is not applied while uncommitted, and the
+    first run() after its ``register_files`` applies it."""
     led = generate_ledger(str(tmp_path / "changes"), SPEC)
-    # a late-committed file: on disk now, manifest commit arrives later
-    late_rel = os.path.join("data", "late", "l.parquet")
-    late_abs = os.path.join(led.path, late_rel)
-    os.makedirs(os.path.dirname(late_abs), exist_ok=True)
-    src = os.path.join(led.path, led.manifest.files[0]["path"])
-    t = pq.read_table(src).slice(0, 1)
-    for col, val in (("url", "http://late.example/x"), ("seq", 10**12)):
-        idx = t.schema.get_field_index(col)
-        t = t.set_column(idx, t.schema.field(col), pa.array([val], type=t.schema.field(col).type))
-    pq.write_table(t, late_abs)
+    late = _one_row(led, "late", "http://late.example/x", 10**12)
+    eng = _engine(spark, led, str(tmp_path / "pages_l"))
+    eng.run()
+    assert _count(eng, "http://late.example/x") == 0
 
-    streaming = StreamingCdcApply(
-        spark,
-        EngineConfig(ledger_path=led.path, pages_path=str(tmp_path / "pages_l"),
-                     batch_size=400, num_buckets=4),
-    )
-    streaming.run_to_completion(timeout_s=300)
-    # consumed but uncommitted: not applied, but remembered in the sidecar
-    assert streaming.engine.refresh_pages().filter(
-        "url = 'http://late.example/x'"
-    ).count() == 0
-    assert late_abs in streaming._load_deferred()
-
-    # the writer's commit lands; the next drain applies the deferred rows
-    led.register_files([
-        {"path": late_rel, "bucket": 0,
-         "schema_version": led.manifest.files[0]["schema_version"],
-         "stats": {"min_seq": 10**12, "max_seq": 10**12}}
-    ])
-    streaming.run_to_completion(timeout_s=300)
-    assert streaming.engine.refresh_pages().filter(
-        "url = 'http://late.example/x'"
-    ).count() == 1
-    assert streaming._load_deferred() == []
+    led.register_files([late])
+    # part 1's offset (1499) trails the dense range's end (1500, part 0), so
+    # its first slice holds no event: it commits its offsets with zero
+    # counts, and the next slice starts at the late file
+    assert eng.run() == 2
+    assert _count(eng, "http://late.example/x") == 1
 
 
-def test_stream_retry_persists_new_orphans(spark, tmp_path):
-    """Round-4 ADVICE fix: a foreachBatch RETRY of an already-committed
-    micro-batch (apply_events short-circuits, applied=False) must still
-    persist newly observed uncommitted files as deferred — otherwise a file
-    consumed in the retried batch whose manifest commit lands before the next
-    directory walk is never classified an orphan (silent loss). Ready-but-
-    unapplied deferred files must likewise STAY deferred."""
-    import pyarrow.parquet as pq
-
+def test_run_crosses_seq_gap_wider_than_batch(spark, tmp_path):
+    """A committed event far past the dense seq range is applied in one
+    slice: each slice starts at the first seq some file's stats cover, so
+    the gap is not walked one empty batch_size slice at a time."""
     led = generate_ledger(str(tmp_path / "changes"), SPEC)
-    streaming = StreamingCdcApply(
-        spark,
-        EngineConfig(ledger_path=led.path, pages_path=str(tmp_path / "pages_r"),
-                     batch_size=400, num_buckets=4),
-    )
-    streaming.run_to_completion(timeout_s=300)
-    assert streaming._load_deferred() == []
-
-    # plant an uncommitted file AFTER the run (the retried batch will observe it)
-    orphan = os.path.join(led.path, "data", "retry-orphan", "o.parquet")
-    os.makedirs(os.path.dirname(orphan), exist_ok=True)
-    committed_file = os.path.join(led.path, led.manifest.files[0]["path"])
-    pq.write_table(pq.read_table(committed_file).slice(0, 1), orphan)
-
-    # simulate crash-before-sidecar-save: a deferred file whose commit HAS
-    # landed (ready) but that this retried attempt will not apply
-    streaming._save_sidecar([committed_file], {})
-
-    # redeliver stream batch 0 (already committed -> applied=False)
-    batch_df = spark.read.schema(streaming._superset_schema()).parquet(committed_file)
-    streaming._apply_batch(batch_df, 0)
-
-    deferred = set(streaming._load_deferred())
-    assert orphan in deferred, "new orphan dropped on retried batch"
-    assert committed_file in deferred, "ready-but-unapplied file dropped on retry"
+    led.register_files([_one_row(led, "gap", "http://gap.example/x", 10**6)])
+    eng = _engine(spark, led, str(tmp_path / "pages_g"))
+    # four slices cover seqs 1..1500, the fifth starts at 10**6
+    assert eng.run() == 5
+    assert _count(eng, "http://gap.example/x") == 1
 
 
-def test_stream_scan_skips_settled_dirs(spark, tmp_path):
-    """The incremental walk must reuse cached listings for settled snap dirs
-    (every file committed) and still fully discover files in new dirs."""
+def test_run_refuses_file_committed_behind_offsets(spark, tmp_path):
+    """A ledger file committed after the replay passed its seqs would never
+    be applied: run() names it in a ValueError and commits nothing."""
     led = generate_ledger(str(tmp_path / "changes"), SPEC)
-    streaming = StreamingCdcApply(
-        spark,
-        EngineConfig(ledger_path=led.path, pages_path=str(tmp_path / "pages_s"),
-                     batch_size=400, num_buckets=4),
-    )
-    committed = {
-        os.path.join(led.path, f["path"]) for f in led.manifest.files
-    }
-    data_dir = os.path.join(led.path, "data")
-    on_disk1, settled = streaming._scan_data_dir(data_dir, committed, {})
-    assert on_disk1 == committed
-    assert settled, "fully-committed snap dirs must settle"
-    # second scan with the cache must see the same files WITHOUT walking
-    # settled dirs — prove it by poisoning os.walk for settled paths
-    import os as _os
-    real_walk = _os.walk
-
-    def guarded_walk(top, *a, **kw):
-        for name in settled:
-            assert not top.endswith(name), f"re-walked settled dir {name}"
-        return real_walk(top, *a, **kw)
-
-    try:
-        _os.walk = guarded_walk
-        on_disk2, settled2 = streaming._scan_data_dir(data_dir, committed, settled)
-    finally:
-        _os.walk = real_walk
-    assert on_disk2 == on_disk1 and settled2 == settled
+    eng = _engine(spark, led, str(tmp_path / "pages_b"))
+    eng.run()
+    head = eng.pages.manifest.version
+    led.register_files([_one_row(led, "behind", "http://behind.example/x", 100)])
+    with pytest.raises(ValueError, match="data/behind/f.parquet"):
+        eng.run()
+    assert LakeTable.load(eng.pages.path).manifest.version == head
 
 
 def _write_events(spark, path: str, rows: list[tuple]) -> None:
@@ -401,38 +304,29 @@ def test_sessionize_stream_equals_batch_sessionization(spark, tmp_path):
 
 
 def test_stream_tail_with_retention_and_ivm(spark, tmp_path):
-    """Full production-tail integration (round 5): the streaming apply with
-    snapshot retention GC reaches the batch replay's exact state with the
-    snapshot count bounded, and a changelog-fed rollup refreshed afterwards
-    equals a from-scratch recompute (the retention-expired interval start
-    exercises ivm.py's recompute fallback on a real stream)."""
+    """A tail of run(max_batches=1) calls under snapshot retention reaches
+    the one-shot replay's state with the snapshot count bounded, and a
+    changelog-fed rollup whose anchor snapshot was expired meanwhile
+    refreshes by recompute to the from-scratch aggregate."""
     from pyspark.sql import functions as F
 
     from data_warehouse_etl_spark.cdc.ivm import IncrementalAggregate
-    from data_warehouse_etl_spark.lake import LakeTable
 
     led = generate_ledger(str(tmp_path / "changes"), SPEC)
-    batch = CdcEngine(
-        spark,
-        EngineConfig(ledger_path=led.path, pages_path=str(tmp_path / "pages_batch"),
-                     batch_size=400, num_buckets=4),
-    )
+    batch = _engine(spark, led, str(tmp_path / "pages_batch"))
     batch.run()
     h_batch = state_hash(batch.read_pages())
 
-    streaming = StreamingCdcApply(
-        spark,
-        EngineConfig(ledger_path=led.path, pages_path=str(tmp_path / "pages_stream"),
-                     batch_size=400, num_buckets=4, retain_snapshots=3),
-    )
-    streaming.run_to_completion(timeout_s=300)
-    eng = streaming.engine
-    assert state_hash(eng.refresh_pages()) == h_batch
-    assert len(eng.pages.snapshots()) <= 3
-
+    eng = _engine(spark, led, str(tmp_path / "pages_tail"), retain_snapshots=3)
+    assert eng.run(max_batches=1) == 1
     agg = IncrementalAggregate(
         eng, str(tmp_path / "agg"), group_cols=["lang"], num_buckets=4
     )
     agg.refresh()
+    while eng.run(max_batches=1):
+        assert len(eng.pages.snapshots()) <= 3
+    assert state_hash(eng.read_pages()) == h_batch
+
+    assert agg.refresh()["mode"] == "recompute"
     expected = eng.read_pages().groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
     assert state_hash(agg.read()) == state_hash(expected)

@@ -8,37 +8,9 @@ from data_warehouse_etl_spark.cdc import CdcEngine, EngineConfig, LedgerSpec, ge
 from data_warehouse_etl_spark.lake import LakeTable
 
 
-def test_watermark_drops_old_events(spark, tmp_path):
-    led = generate_ledger(
-        str(tmp_path / "changes"),
-        LedgerSpec(n_urls=100, n_events=800, n_parts=2, seed=3, out_of_order_rate=0.5),
-    )
-    with_wm = CdcEngine(
-        spark,
-        EngineConfig(ledger_path=led.path, pages_path=str(tmp_path / "wm"),
-                     batch_size=800, num_buckets=2, watermark_delay_s=60,
-                     watermark_mode="batch_exact"),
-    )
-    with_wm.run()
-    without = CdcEngine(
-        spark,
-        EngineConfig(ledger_path=led.path, pages_path=str(tmp_path / "nowm"),
-                     batch_size=800, num_buckets=2),
-    )
-    without.run()
-    n_wm = with_wm.read_pages().count()
-    n_all = without.read_pages().count()
-    # the 50%-out-of-order ledger shifts events up to 1h back; a 60s
-    # watermark must have filtered some of them out before apply
-    assert n_wm <= n_all
-    m = with_wm.metrics.read(spark).toPandas()
-    assert int(m["events_in"].sum()) < 800  # watermark filtered pre-stats
-
-
 def test_watermark_monotone_filters_and_resumes_identically(spark, tmp_path):
-    """Default 'monotone' mode: the cutoff is the COMMITTED event-time
-    high-water-mark (Structured Streaming's law) — no extra per-batch pass.
-    The first batch is unfiltered; later batches drop late rows; a cold
+    """The cutoff is the COMMITTED event-time high-water-mark (Structured
+    Streaming's law) — no extra per-batch pass. The first batch is unfiltered; later batches drop late rows; a cold
     resume mid-replay replays the identical cutoffs (the mark is persisted
     in the manifest) and reaches the same state as one continuous run."""
     from data_warehouse_etl_spark.lake import state_hash
@@ -55,6 +27,12 @@ def test_watermark_monotone_filters_and_resumes_identically(spark, tmp_path):
     cont.run()
     m = cont.metrics.read(spark).toPandas()
     assert int(m["events_in"].sum()) < 800  # later batches filtered late rows
+    unfiltered = CdcEngine(
+        spark,
+        EngineConfig(pages_path=str(tmp_path / "nowm"), **{**cfg, "watermark_delay_s": None}),
+    )
+    unfiltered.run()
+    assert cont.read_pages().count() <= unfiltered.read_pages().count()
 
     # cold resume after 2 of 4 batches: new engine handle, same cutoff law
     split = CdcEngine(
