@@ -35,12 +35,13 @@ buffers are all primitive (hash-aggregable, whole-stage codegen):
 Equivalence with ``max(struct(version, tie))`` — including null versions and
 the total (version, tie) order — is pinned by tests/test_dedup_*.
 
-Explicit ``hot_keys`` (the engine's amortized sampled detection) take a
-salted reduce per the north rule ("salted key-partitioned shuffle with
-explicit hot-url skew splitting"): hot rows get an explicit salt from
-``pmod(xxhash64(tie), k)`` and reduce per (key, salt) first — the salt is
-derived from the unique tie, so the plan is deterministic, and every reduce
-is associative+commutative, so the result is identical at any parallelism.
+Skew needs no special path: every key row crosses ONE ``repartition(key)``
+exchange and the reduce is a MAX over the total (version, tie) order —
+associative and commutative, so the result is identical at any parallelism
+and for any key distribution. A hot key lands in one reducer, which does one
+primitive hash-aggregate pass over its rows. A salted (key, salt) split
+never beat this plan, and map-side partial aggregation, which wins on a
+heavily skewed batch, loses on the uniform one (SCALE.md, Skew).
 """
 
 from __future__ import annotations
@@ -49,91 +50,36 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _argmax_tie(keys: DataFrame, key_cols: list[str], o1: str, tie: str) -> DataFrame:
-    """Per-``key_cols`` argmax of the (``o1``, ``tie``) pair, returning
-    ``key_cols + [tie]`` — the all-HashAggregate decomposition documented in
-    the module docstring. ``keys`` must already be partitioned compatibly
-    (or be small enough that the grouping exchanges are cheap)."""
-    ph1 = keys.groupBy(*key_cols, o1).agg(F.max(tie).alias(tie))
-    return (
-        ph1.groupBy(*key_cols)
-        .agg(
-            F.max_by(tie, o1).alias("_w_nn"),
-            F.max(F.when(F.col(o1).isNull(), F.col(tie))).alias("_w_null"),
-        )
-        .select(*key_cols, F.coalesce("_w_nn", "_w_null").alias(tie))
-    )
-
-
-def _hot_predicate(key: str, hot_keys: list):
-    """Routes a row to the salted reduce. NULL-safe: ``isin`` is NULL for a
-    NULL key and would drop those rows from BOTH branches, so the result is
-    coalesced to false, and a NULL listed in ``hot_keys`` (which ``isin``
-    never matches) routes the NULL-key group explicitly."""
-    is_hot = F.col(key).isin(list(hot_keys))
-    if None in hot_keys:
-        is_hot = is_hot | F.col(key).isNull()
-    return F.coalesce(is_hot, F.lit(False))
-
-
-def _winner_ties(
-    df: DataFrame,
-    key: str,
-    order: tuple[str, ...],
-    hot_keys: list | None = None,
-    n_salts: int = 16,
-) -> DataFrame:
+def _winner_ties(df: DataFrame, key: str, order: tuple[str, ...]) -> DataFrame:
     """The winning ``[key, tie]`` pair per key, where ``order`` is the
     (version, tie) 2-tuple — the one LWW law every dedup path and
     ``LakeTable._resolve`` share.
 
-    Cold keys: one ``repartition(key)`` exchange (raw rows, no map-side
-    combine — measured cheaper than paying a sort- or hash-map pass on the
-    map side for the ~8% row reduction combine buys on spread-out keys),
-    then the two chained hash aggregates of :func:`_argmax_tie` with no
-    further exchange (hashpartitioning(key) satisfies both groupings).
-
-    Hot keys (``hot_keys``): repartition by (key, salt) spreads a hot key
-    over ``n_salts`` reducers; per-(key, salt) argmax, then a
-    ≤ n_salts-rows-per-key fold — every aggregate hash-based, exact at any
-    parallelism because MAX/argmax with the total (o1, tie) order is
-    associative and commutative.
+    One ``repartition(key)`` exchange of the (key, version, tie) projection
+    (raw rows, no map-side combine — measured cheaper than paying a sort- or
+    hash-map pass on the map side for the ~8% row reduction combine buys on
+    spread-out keys), then the two chained hash aggregates of the module
+    docstring with no further exchange (hashpartitioning(key) satisfies both
+    groupings). The same plan serves skewed input: the reduce is exact at
+    any parallelism.
     """
     if len(order) != 2:
         raise ValueError(f"LWW order must be a (version, tie) pair, got {order!r}")
     o1, tie = order
-    keys = df.select(key, o1, tie)
-
-    def _cold(kdf: DataFrame) -> DataFrame:
-        return _argmax_tie(kdf.repartition(key), [key], o1, tie)
-
-    def _salted(kdf: DataFrame) -> DataFrame:
-        salted = kdf.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(tie)), F.lit(n_salts)).cast("int")
-        ).repartition(key, "_salt")
-        # per (key, salt): the winning (o1, tie) pair. o1 of the winner is
-        # max(o1) when any non-null o1 exists (argmax by (o1, tie) maximizes
-        # o1 first); tie via the usual null-branched argmax.
-        per_salt = (
-            salted.groupBy(key, "_salt", o1)
-            .agg(F.max(tie).alias(tie))
-            .groupBy(key, "_salt")
-            .agg(
-                F.max_by(tie, o1).alias("_w_nn"),
-                F.max(F.when(F.col(o1).isNull(), F.col(tie))).alias("_w_null"),
-                F.max(o1).alias(o1),
-            )
-            .select(key, o1, F.coalesce("_w_nn", "_w_null").alias(tie))
+    ph1 = (
+        df.select(key, o1, tie)
+        .repartition(key)
+        .groupBy(key, o1)
+        .agg(F.max(tie).alias(tie))
+    )
+    return (
+        ph1.groupBy(key)
+        .agg(
+            F.max_by(tie, o1).alias("_w_nn"),
+            F.max(F.when(F.col(o1).isNull(), F.col(tie))).alias("_w_null"),
         )
-        # fold the ≤ n_salts candidates per key (ties in o1 across salts are
-        # possible — duplicate events land in different salts — so run the
-        # full two-phase argmax again; input is tiny)
-        return _argmax_tie(per_salt, [key], o1, tie)
-
-    if not hot_keys:
-        return _cold(keys)
-    is_hot = _hot_predicate(key, hot_keys)
-    return _cold(keys.filter(~is_hot)).unionByName(_salted(keys.filter(is_hot)))
+        .select(key, F.coalesce("_w_nn", "_w_null").alias(tie))
+    )
 
 
 def _join_back(df: DataFrame, winners: DataFrame, key: str, tie: str) -> DataFrame:
@@ -163,8 +109,6 @@ def lww_dedup(
     df: DataFrame,
     key: str = "url",
     order: tuple[str, ...] = ("warc_ts", "seq"),
-    hot_keys: list | None = None,
-    n_salts: int = 16,
 ) -> DataFrame:
     """One full row per key: argmax over the (version, tie) ``order``, with
     ``tie`` unique per key (the :func:`_join_back` precondition).
@@ -175,8 +119,8 @@ def lww_dedup(
     join is hinted SHUFFLE_HASH: the winner side is a fraction of the input
     and the build per partition is bounded, while a sort-merge join would
     re-introduce exactly the payload sort this rewrite removes. Works for
-    any batch size (no broadcast); ``hot_keys`` take the salted reduce."""
-    winners = _winner_ties(df, key, order, hot_keys=hot_keys, n_salts=n_salts)
+    any batch size (no broadcast)."""
+    winners = _winner_ties(df, key, order)
     return _join_back(df, winners, key, order[-1])
 
 
@@ -184,8 +128,6 @@ def winner_seqs(
     df: DataFrame,
     key: str = "url",
     order: tuple[str, ...] = ("warc_ts", "seq"),
-    hot_keys: list | None = None,
-    n_salts: int = 16,
 ) -> DataFrame:
     """The winning tiebreaker (``order[-1]``) per key, as a 1-column frame.
 
@@ -193,25 +135,21 @@ def winner_seqs(
     last element is globally unique, the winner per key is a pure argmax
     over the (version, tie) pair — computed entirely with hash aggregations
     (see module docstring). The shuffle carries key + two scalars per row,
-    never a full row copy; ``hot_keys`` take the salted reduce.
+    never a full row copy.
     """
-    tie = order[-1]
-    return _winner_ties(df, key, order, hot_keys=hot_keys, n_salts=n_salts).select(tie)
+    return _winner_ties(df, key, order).select(order[-1])
 
 
 def lww_dedup_broadcast_keys(
     df: DataFrame,
     key: str = "url",
     order: tuple[str, ...] = ("warc_ts", "seq"),
-    n_salts: int = 16,
-    hot_keys: list | None = None,
 ) -> DataFrame:
     """LWW dedup that never shuffles the payload.
 
     1. computes the winning tiebreaker per key over a (key, *order)
        PROJECTION (:func:`winner_seqs` — tens of bytes per row through the
-       shuffle, 10-100x less volume, all-hash aggregation), with explicit
-       salted splitting for ``hot_keys``;
+       shuffle, 10-100x less volume, all-hash aggregation);
     2. broadcasts the winners' globally-unique tiebreaker column
        (``order[-1]``, the ledger seq) and left-semi-joins the original
        rows — payload rows are filtered map-side, never exchanged.
@@ -221,29 +159,6 @@ def lww_dedup_broadcast_keys(
     winner-key set fits a broadcast (≈8 bytes/key; a 10^6-event batch is a
     few MB); :func:`lww_dedup` serves unbounded batch sizes.
     """
-    winners = winner_seqs(df, key, order, hot_keys=hot_keys, n_salts=n_salts)
+    winners = winner_seqs(df, key, order)
     return df.join(F.broadcast(winners), order[-1], "left_semi")
 
-
-def sample_hot_keys(
-    df: DataFrame,
-    key: str = "url",
-    hot_threshold: int = 1_000_000,
-    salt_source: str = "seq",
-    detect_sample_mod: int = 64,
-) -> list:
-    """Sampled hot-key detection: keys whose (estimated) event count in
-    ``df`` exceeds ``hot_threshold``. Aggregates a deterministic 1/mod hash
-    sample of the unique tiebreaker (same sample at any parallelism), with
-    the threshold scaled down 4x extra for recall — misclassification is
-    harmless because both the salted and plain reduce paths are exact.
-    Result size is bounded by |df| / hot_threshold keys (driver-safe)."""
-    counts_src = df
-    eff_threshold = hot_threshold
-    if detect_sample_mod and detect_sample_mod > 1:
-        counts_src = df.filter(
-            F.pmod(F.xxhash64(F.col(salt_source)), F.lit(detect_sample_mod)) == 0
-        )
-        eff_threshold = max(hot_threshold // (detect_sample_mod * 4), 1)
-    counts = counts_src.groupBy(key).count().filter(F.col("count") > eff_threshold)
-    return [r[key] for r in counts.collect()]

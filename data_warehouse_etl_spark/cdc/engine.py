@@ -6,8 +6,8 @@ Lifecycle per batch (SURVEY.md §3.4), merge-on-read:
     changes ledger (LakeTable), head reloaded per run()         [source]
       → slice per-part offset range (cp[p], cp[p]+batch_size],
         skipping seq gaps no ledger file's stats cover          [plan; file-stats pruning]
-      → LWW winner keys over a (url, warc_ts, seq) projection,
-        hot urls (amortized sampled detection) salted two-phase;
+      → LWW winner keys over a (url, warc_ts, seq) projection:
+        one key exchange, one combining MAX reduce, any skew;
         winners' seqs broadcast back as a map-side semi-join     [shuffle 1: keys only]
       → ONE fused pandas/Arrow UDF: html → (text, lang) on
         surviving rows only                                      [transform]
@@ -42,9 +42,10 @@ make final state independent of batch boundaries and parallelism, which is
 the north rule's byte-identical-at-N-and-4N criterion.
 
 Scale posture: per-batch cost is O(batch), never O(table) — the delta
-commit reads no old state, LWW runs as hash aggregation (no window sort),
-the hot-url path splits skew explicitly, and the only Python in the hot path
-is the Arrow-batched extractor on post-dedup survivors.
+commit reads no old state, LWW runs as hash aggregation (no window sort) whose
+MAX reduce is exact under any key skew without a second plan, and the only
+Python in the hot path is the Arrow-batched extractor on post-dedup
+survivors.
 """
 
 from __future__ import annotations
@@ -60,7 +61,7 @@ from pyspark.sql import functions as F
 
 from ..lake import LakeTable
 from . import evolve
-from .dedup import lww_dedup, lww_dedup_broadcast_keys, sample_hot_keys
+from .dedup import lww_dedup, lww_dedup_broadcast_keys
 from .extract import extract_enrich_udf, extract_text_udf
 from .metrics import MetricsTable
 from .checkpoint import CheckpointsTable
@@ -112,17 +113,12 @@ class EngineConfig:
     batch_size: int = 1_000_000
     num_buckets: int = 16
     files_per_bucket: int = 1
+    # Accepted and IGNORED: hot-key detection and the salted (url, salt)
+    # reduce they configured are gone — every batch takes the one unsalted
+    # winner reduce (cdc/dedup.py _winner_ties; SCALE.md, Skew). Kept so
+    # existing configs and benchmark scripts still construct.
     salt_k: int = 16
-    # urls with more than hot_threshold events in a batch take the salted
-    # (key, salt) two-phase LWW reduce (cdc/dedup.py _winner_ties).
     hot_threshold: int = 1_000_000
-    # The sampled hot-key counting pass costs one keys scan — so it is
-    # AMORTIZED: it runs on the 2nd batch of a run and every Nth batch
-    # after, and the detected hot set is sticky in between. The first batch
-    # is safe without it: the winner reduce is a MAX whose per-key shuffle
-    # fan-in is bounded at O(input partitions) regardless of skew; detection
-    # only refines the plan shape (results are exact either way, so state
-    # stays byte-identical).
     hot_detect_every: int = 16
     # dedup row recovery (the winner law is the same either way):
     # - "broadcast_keys": winner selection runs over a (url, warc_ts, seq)
@@ -185,9 +181,6 @@ class CdcEngine:
         self.schedule = ScheduleTable.open(cfg.pages_path + "_schedule")
         self._pending_metrics: list[dict] = []
         self._pending_checkpoints: list[tuple[int, dict[int, int]]] = []
-        # amortized skew detection state (see EngineConfig.hot_detect_every)
-        self._hot_keys: list = []
-        self._batches_this_run: int = 0
         # monotone-watermark state: max event time observed by applied
         # batches. _transform_and_merge persists it with a set_properties
         # commit right after each batch, so the next batch's cutoff depends
@@ -573,7 +566,7 @@ class CdcEngine:
 
         # ---- per-part input stats. An events-level observe() is NOT safe
         # here: the events subtree is evaluated by more than one action
-        # (hot-key count, broadcast-keys winner subtree), and a
+        # (the broadcast-keys winner subtree, the write), and a
         # Spark Observation asserts on multiple updates. Ledgers that declare
         # dense-seq stats (input_counts) need no pass at all; others pay one
         # explicit column-pruned pre-aggregation.
@@ -594,17 +587,6 @@ class CdcEngine:
         else:
             n_rows = sum(input_counts.values())
 
-        # amortized sampled hot-key detection (see EngineConfig.hot_detect_every)
-        self._batches_this_run += 1
-        if (
-            self._batches_this_run >= 2
-            and (self._batches_this_run - 2) % cfg.hot_detect_every == 0
-        ):
-            self._hot_keys = sample_hot_keys(
-                events, key="url", hot_threshold=cfg.hot_threshold, salt_source="seq"
-            )
-            tm.mark("hot_key_detect")
-
         # ---- LWW dedup. "auto" gates the broadcast-keys plan on the ACTUAL
         # batch row count (ledger metadata or the scanned stats above), an
         # upper bound on the winner count — cfg.batch_size bounds a slice's
@@ -614,13 +596,7 @@ class CdcEngine:
             cfg.dedup_plan == "auto" and n_rows <= _BROADCAST_MAX_ROWS
         )
         dedup = lww_dedup_broadcast_keys if use_bcast else lww_dedup
-        deduped = dedup(
-            events,
-            key="url",
-            order=("warc_ts", "seq"),
-            n_salts=cfg.salt_k,
-            hot_keys=self._hot_keys,
-        )
+        deduped = dedup(events, key="url", order=("warc_ts", "seq"))
 
         # ---- transform: extract text on survivors only (Arrow-vectorized).
         # One FUSED pandas UDF produces (text, lang) in a single Arrow round

@@ -49,6 +49,7 @@ prunes to *affected* buckets per batch before calling overwrite_buckets.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -149,7 +150,10 @@ class Manifest:
         )
 
 
+@functools.lru_cache(maxsize=None)
 def _spark_type(ddl: str) -> T.DataType:
+    """The DataType of a DDL type string. Parsing goes through the JVM, and
+    a batch asks for the same few strings many times, so it is memoized."""
     return T._parse_datatype_string(ddl)
 
 

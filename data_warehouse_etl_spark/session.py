@@ -44,6 +44,14 @@ def get_spark(
     ``local[*]`` only when there is none. The ``spark.driver.memory``
     default is set only when this call launches the driver JVM: a running
     JVM's heap is already fixed.
+
+    DataFrame debugging is off (``spark.python.sql.dataFrameDebugging.
+    enabled=false``): with it on, every DataFrame/Column call walks the
+    Python stack and makes ~4 extra py4j round trips to record its call
+    site, about half a small batch's driver round trips. The cost: an
+    analysis error's DataFrame query context no longer names the Python
+    line that built the failing expression. PySpark reads this setting once
+    per process, at the first DataFrame call made with an active session.
     """
     launch = _launch_conf()
     if master is None:
@@ -107,6 +115,7 @@ def get_spark(
         # default wait stalls slots whenever cached/shuffle block preferences
         # don't line up (measured: 85s → 50s on a 2-batch replay)
         .config("spark.locality.wait", "0s")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     builder = builder.master(master)
     if launch is None:

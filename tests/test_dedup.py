@@ -5,11 +5,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from data_warehouse_etl_spark.cdc.dedup import (
-    lww_dedup,
-    lww_dedup_broadcast_keys,
-    sample_hot_keys,
-)
+from data_warehouse_etl_spark.cdc.dedup import lww_dedup, lww_dedup_broadcast_keys
 
 
 @pytest.fixture(scope="module")
@@ -38,34 +34,40 @@ def test_lww_basic_laws(spark, events):
         lww_dedup(events, key="url", order=("warc_ts", "payload", "seq"))
 
 
+def _pandas_argmax(df):
+    """Reference winners: per url, the payload of the greatest (warc_ts, seq)."""
+    pdf = df.toPandas().sort_values(["warc_ts", "seq"])
+    return dict(zip(pdf["url"], pdf["payload"]))  # later rows overwrite
+
+
 def test_salted_modes_equal_plain(spark, events):
-    """Hot-key salting is a plan shape only: the detected hot set, an
-    explicit one and none at all give the identical winners."""
-    plain = _winners(lww_dedup(events))
-    detected = sample_hot_keys(events, hot_threshold=50, detect_sample_mod=0)
-    assert detected == ["H"]
-    hot = _winners(lww_dedup(events, hot_keys=detected, n_salts=7))
-    every = _winners(lww_dedup(events, hot_keys=["A", "B", "H"], n_salts=7))
-    absent = _winners(lww_dedup(events, hot_keys=["no-such-url"], n_salts=7))
-    assert plain == hot == every == absent
+    """The hot url H carries 500 of 504 events. With no salted reduce left,
+    both row-recovery plans take the one unsalted reduce and give the
+    pandas argmax's winners on this skewed input."""
+    want = _pandas_argmax(events)
+    assert want["H"] == "h499"
+    for fn in (lww_dedup, lww_dedup_broadcast_keys):
+        assert _winners(fn(events)) == want, fn.__name__
 
 
 def test_salted_partition_invariance(spark, events):
-    a = _winners(lww_dedup(events.repartition(1), hot_keys=["H"], n_salts=4))
-    b = _winners(lww_dedup(events.repartition(16), hot_keys=["H"], n_salts=4))
-    assert a == b
+    """The skewed input gives the same winners at 1 and at 16 input
+    partitions, on both row-recovery plans."""
+    want = _pandas_argmax(events)
+    for fn in (lww_dedup, lww_dedup_broadcast_keys):
+        a = _winners(fn(events.repartition(1)))
+        b = _winners(fn(events.repartition(16)))
+        assert a == b == want, fn.__name__
 
 
 def test_no_window_sort_in_plan(spark, events):
     """The dedup must be hash aggregation, not a window sort (a window
     funnels each hot key through one task) nor a SortAggregate (a struct
     buffer sorts the whole input on both sides of the exchange)."""
-    for hot_keys in (None, ["H"]):
-        for fn in (lww_dedup, lww_dedup_broadcast_keys):
-            df = fn(events, hot_keys=hot_keys, n_salts=4)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            assert "HashAggregate" in plan, plan
-            assert "Window" not in plan and "SortAggregate" not in plan, plan
+    for fn in (lww_dedup, lww_dedup_broadcast_keys):
+        plan = fn(events)._jdf.queryExecution().executedPlan().toString()
+        assert "HashAggregate" in plan, plan
+        assert "Window" not in plan and "SortAggregate" not in plan, plan
 
 
 def test_winner_seqs_and_broadcast_keys_match_full_reduce(spark, events):
@@ -74,11 +76,6 @@ def test_winner_seqs_and_broadcast_keys_match_full_reduce(spark, events):
     full = lww_dedup(events, key="url", order=("warc_ts", "seq"))
     bc = lww_dedup_broadcast_keys(events, key="url", order=("warc_ts", "seq"))
     assert _winners(bc) == _winners(full)
-    # hot-key salted path produces the identical winner set
-    bc_hot = lww_dedup_broadcast_keys(
-        events, key="url", order=("warc_ts", "seq"), hot_keys=["H"], n_salts=4
-    )
-    assert _winners(bc_hot) == _winners(full)
     ws = {r["seq"] for r in winner_seqs(events, "url", ("warc_ts", "seq")).collect()}
     assert ws == {r["seq"] for r in full.collect()}
 
@@ -156,43 +153,6 @@ def test_simhash64_planted_neardups_share_a_band(spark):
     assert share(1, 2), "near-dups must agree on at least one band"
     assert rows[1]["n_band_candidates"] >= 1
     assert not share(1, 3) and not share(2, 3), "unrelated doc must not bucket"
-
-
-def test_engine_hot_detection_cadence_state_invariant(spark, tmp_path):
-    """Amortized detection (round 3): detection runs on the 2nd batch and
-    every Nth after; the detected hot set takes the salted reduce; the final
-    state is byte-identical to a run that never finds a hot key (plan shape
-    only)."""
-    from data_warehouse_etl_spark.cdc import (
-        CdcEngine,
-        EngineConfig,
-        LedgerSpec,
-        generate_ledger,
-    )
-    from data_warehouse_etl_spark.lake import state_hash
-
-    led = generate_ledger(
-        str(tmp_path / "changes"),
-        LedgerSpec(n_urls=200, n_events=4000, n_parts=2, seed=31, hot_url_rate=0.5),
-    )
-    base = dict(ledger_path=led.path, batch_size=1000, num_buckets=4,
-                dedup_plan="broadcast_keys")
-    det = CdcEngine(
-        spark,
-        EngineConfig(pages_path=str(tmp_path / "det"),
-                     hot_threshold=10, hot_detect_every=1, **base),
-    )
-    det.run()
-    assert det._hot_keys, "the planted hot url must be detected"
-
-    plain = CdcEngine(
-        spark,
-        EngineConfig(pages_path=str(tmp_path / "plain"), hot_threshold=10**9,
-                     hot_detect_every=1, **base),
-    )
-    plain.run()
-    assert not plain._hot_keys
-    assert state_hash(det.read_pages()) == state_hash(plain.read_pages())
 
 
 def test_winnow_guarantee_shared_passage(spark):
@@ -469,34 +429,13 @@ def test_null_key_rows_survive_dedup(spark):
     """A NULL key is an ordinary group (round-6 review finding: the semi-
     join row recovery must be null-safe on both columns, or NULL-key rows
     silently vanish where the aggregation form kept a winner for them) —
-    with and without hot-key salting, on both row-recovery paths."""
+    on both row-recovery paths."""
     df = _null_key_events(spark)
-    for hot_keys in (None, ["A"], [None], [None, "A"]):
-        got = {r["url"]: r["payload"] for r in lww_dedup(df, hot_keys=hot_keys, n_salts=4).collect()}
-        assert got == {None: "n2", "A": "a1"}, (hot_keys, got)
-        # broadcast-keys path: winner set must include the NULL-key winner seq
-        bc = {r["payload"] for r in lww_dedup_broadcast_keys(df, hot_keys=hot_keys, n_salts=4).collect()}
-        assert bc == {"n2", "a1"}, (hot_keys, bc)
-
-
-def test_hot_null_key_takes_salted_branch(spark):
-    """A NULL listed as a hot key routes the NULL-key group to the salted
-    reduce (``isin`` alone never matches NULL, which would leave it cold),
-    the winners still equal the unsalted ones, and the routing predicate
-    is unchanged when no NULL is listed."""
-    from data_warehouse_etl_spark.cdc.dedup import _hot_predicate, _winner_ties
-
-    df = _null_key_events(spark)
-    order = ("warc_ts", "seq")
-    assert df.filter(_hot_predicate("url", [None])).count() == 2  # the NULL rows
-    assert df.filter(_hot_predicate("url", ["A"])).count() == 1  # NULLs stay cold
-    salted = _winner_ties(df, "url", order, hot_keys=[None], n_salts=4)
-    assert "_salt" in salted._jdf.queryExecution().optimizedPlan().toString()
-    assert {tuple(r) for r in salted.collect()} == {
-        tuple(r) for r in _winner_ties(df, "url", order).collect()
-    }
-    plain = F.coalesce(F.col("url").isin(["A"]), F.lit(False))
-    assert str(_hot_predicate("url", ["A"])) == str(plain)
+    got = {r["url"]: r["payload"] for r in lww_dedup(df).collect()}
+    assert got == {None: "n2", "A": "a1"}, got
+    # broadcast-keys path: winner set must include the NULL-key winner seq
+    bc = {r["payload"] for r in lww_dedup_broadcast_keys(df).collect()}
+    assert bc == {"n2", "a1"}, bc
 
 
 def _null_key_events(spark):

@@ -32,7 +32,6 @@ def eng_ledger(tmp_path_factory, spark):
         pages_path=str(tmp / "pages"),
         batch_size=300,
         num_buckets=4,
-        salt_k=4,
     )
     return CdcEngine(spark, cfg), str(tmp)
 

@@ -222,7 +222,7 @@ def test_retention_bounds_metadata(spark, tmp_path):
     def cfg(sub, **kw):
         return EngineConfig(
             ledger_path=ledger.path, pages_path=str(tmp_path / sub),
-            batch_size=100, num_buckets=4, salt_k=4, **kw,
+            batch_size=100, num_buckets=4, **kw,
         )
 
     ref = CdcEngine(spark, cfg("ref"))
@@ -257,7 +257,6 @@ def test_engine_changelog_matches_state_diff_and_composes(spark, tmp_path):
         pages_path=str(tmp_path / "pages"),
         batch_size=200,
         num_buckets=4,
-        salt_k=4,
     )
     eng = CdcEngine(spark, cfg)
     versions = [eng.pages.manifest.version]

@@ -69,7 +69,6 @@ def main() -> None:
             pages_path=pages_path,
             batch_size=n_events // 4,
             num_buckets=num_buckets,
-            salt_k=8,
         ),
     )
     t0 = time.monotonic()

@@ -4,7 +4,8 @@ grep them for the properties that matter at 100 TB.
 Checks (per the scale rules the engine is designed around):
 - parquet scans show PushedFilters + pruned ReadSchema (no full-width reads);
 - small dims join as BroadcastHashJoin;
-- the LWW dedup is HashAggregate, never Window or SortAggregate;
+- the LWW dedup is HashAggregate, never Window or SortAggregate, and a
+  planted hot url still plans one key exchange (no salted branch);
 - WholeStageCodegen spans cover the relational operators;
 - no CartesianProduct / BroadcastNestedLoopJoin outside the intended
   cross-join-with-one-row-query cases;
@@ -107,6 +108,19 @@ def main() -> int:
                      ("lww_dedup_broadcast_keys", lww_dedup_broadcast_keys)):
         ok &= audit(f"engine {name} = hash agg", fn(ev),
                     want=["HashAggregate"], forbid=["Window", "SortAggregate"])
+
+    # Skew takes the same plan: with 40% of the events on one url, the
+    # winner subtree is still ONE key exchange feeding the chained hash
+    # aggregates — no salted branch, no union of two reduces.
+    hot = ev.withColumn("url", F.when(F.col("seq") % 5 < 2, F.lit("hot")).otherwise(F.col("url")))
+    skewed = lww_dedup_broadcast_keys(hot)
+    ok &= audit("engine lww_dedup_broadcast_keys, hot url = one reduce", skewed,
+                want=["HashAggregate"],
+                forbid=["Window", "SortAggregate", "Union", "_salt"])
+    n_exchanges = plan_of(skewed).count("hashpartitioning(url")
+    if n_exchanges != 1:
+        ok = False
+        print(f"BAD hot-url winner subtree: {n_exchanges} url exchanges, want 1")
 
     # J6 range join: equi key drives the join (no BNLJ)
     ok &= audit("j6 equi-driven range join", PARITY_QUERIES["j6_range_join"](spark, sf),

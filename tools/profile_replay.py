@@ -59,7 +59,6 @@ def main() -> None:
         batch_size=n_events,  # single batch
         num_buckets=16,
         files_per_bucket=1,
-        salt_k=16,
         dedup_plan="broadcast_keys",
     )
     eng = CdcEngine(spark, cfg)
