@@ -8,11 +8,18 @@ the row with the greatest (warc_ts, seq)** — warc_ts is the version order,
 seq the total-order tiebreaker (never rely on unordered ``first()``:
 determinism across cluster sizes requires a total order).
 
-One law, one path: :func:`_winner_ties` computes the winning ``[key, tie]``
-pairs over a (key, version, tie) projection, then the full rows are
-recovered either by a broadcast semi-join on the globally unique tie
-(:func:`lww_dedup_broadcast_keys`) or by the null-safe shuffle-hash
+One law, one path: :func:`_winner_ties_sql` computes the winning
+``[key, tie]`` pairs over a (key, version, tie) projection, then the full
+rows are recovered either by a broadcast semi-join on the globally unique
+tie (:func:`lww_dedup_broadcast_keys`) or by the null-safe shuffle-hash
 join-back on (key, tie) (:func:`lww_dedup`).
+
+Each function builds its frame from one SQL text, passed to ``spark.sql``
+with the input frame as its one argument (registered as a temporary view
+for the call, and dropped after it): one parse and one analysis in the JVM
+instead of one per DataFrame step, and a few py4j round trips instead of
+one per ``Column`` call. The plans are the ones the DataFrame steps built
+(``tools/plan_digest.py``).
 
 Physical strategy — HASH aggregation, never window, never sort-aggregate.
 A window rank forces ALL events of a key into one task and sorts them. Less
@@ -35,7 +42,7 @@ buffers are all primitive (hash-aggregable, whole-stage codegen):
 Equivalence with ``max(struct(version, tie))`` — including null versions and
 the total (version, tie) order — is pinned by tests/test_dedup_*.
 
-Skew needs no special path: every key row crosses ONE ``repartition(key)``
+Skew needs no special path: every key row crosses ONE ``DISTRIBUTE BY key``
 exchange and the reduce is a MAX over the total (version, tie) order —
 associative and commutative, so the result is identical at any parallelism
 and for any key distribution. A hot key lands in one reducer, which does one
@@ -47,15 +54,16 @@ heavily skewed batch, loses on the uniform one (SCALE.md, Skew).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from ..lake.table import quote_ident as q
 
 
-def _winner_ties(df: DataFrame, key: str, order: tuple[str, ...]) -> DataFrame:
-    """The winning ``[key, tie]`` pair per key, where ``order`` is the
-    (version, tie) 2-tuple — the one LWW law every dedup path and
-    ``LakeTable._resolve`` share.
+def _winner_ties_sql(rel: str, key: str, order: tuple[str, ...]) -> str:
+    """SQL text of the winning ``[key, tie]`` pair per key of the relation
+    ``rel``, where ``order`` is the (version, tie) 2-tuple — the one LWW law
+    every dedup path and ``LakeTable._resolve`` share.
 
-    One ``repartition(key)`` exchange of the (key, version, tie) projection
+    One ``DISTRIBUTE BY key`` exchange of the (key, version, tie) projection
     (raw rows, no map-side combine — measured cheaper than paying a sort- or
     hash-map pass on the map side for the ~8% row reduction combine buys on
     spread-out keys), then the two chained hash aggregates of the module
@@ -65,44 +73,38 @@ def _winner_ties(df: DataFrame, key: str, order: tuple[str, ...]) -> DataFrame:
     """
     if len(order) != 2:
         raise ValueError(f"LWW order must be a (version, tie) pair, got {order!r}")
-    o1, tie = order
-    ph1 = (
-        df.select(key, o1, tie)
-        .repartition(key)
-        .groupBy(key, o1)
-        .agg(F.max(tie).alias(tie))
-    )
+    k, o1, t = q(key), q(order[0]), q(order[1])
     return (
-        ph1.groupBy(key)
-        .agg(
-            F.max_by(tie, o1).alias("_w_nn"),
-            F.max(F.when(F.col(o1).isNull(), F.col(tie))).alias("_w_null"),
-        )
-        .select(key, F.coalesce("_w_nn", "_w_null").alias(tie))
+        f"SELECT {k}, coalesce(max_by({t}, {o1}), max(CASE WHEN {o1} IS NULL THEN {t} END)) AS {t} "
+        f"FROM (SELECT {k}, {o1}, max({t}) AS {t} "
+        f"FROM (SELECT {k}, {o1}, {t} FROM {rel} DISTRIBUTE BY {k}) GROUP BY {k}, {o1}) "
+        f"GROUP BY {k}"
     )
 
 
-def _join_back(df: DataFrame, winners: DataFrame, key: str, tie: str) -> DataFrame:
-    """Recover the full winning rows by a left-semi join on (key, tie).
+def _join_back_sql(rel: str, winners: str, key: str, tie: str) -> str:
+    """SQL text recovering the full winning rows of ``rel`` by a left-semi
+    join on (key, tie) to the relation ``winners``.
 
     NULL-SAFE on both columns: a NULL key forms its own group in the winner
-    aggregation (groupBy treats NULL as a value), and a plain equi join
+    aggregation (GROUP BY treats NULL as a value), and a plain equi join
     would silently drop its rows (NULL never equals NULL) — the pre-round-6
     aggregation form kept them. ``<=>`` conditions plan as hash-join keys,
     so the SHUFFLE_HASH shape is preserved.
 
     Precondition (documented on every caller): ``tie`` is unique per key
-    across ``df``'s rows. Rows that duplicate their key's winning
+    across ``rel``'s rows. Rows that duplicate their key's winning
     (key, tie) pair — only possible when the precondition is violated —
     all survive the semi join, where the old aggregation form kept an
     arbitrary one of them (``max_by`` is non-deterministic on order ties);
     neither behavior is deterministic on such input.
     """
-    w = winners.hint("shuffle_hash").select(
-        F.col(key).alias("_wk"), F.col(tie).alias("_wt")
+    k, t = q(key), q(tie)
+    return (
+        f"SELECT /*+ SHUFFLE_HASH(w) */ d.* FROM {rel} d LEFT SEMI JOIN "
+        f"(SELECT {k} AS _wk, {t} AS _wt FROM {winners}) w "
+        f"ON d.{k} <=> w._wk AND d.{t} <=> w._wt"
     )
-    cond = df[key].eqNullSafe(w["_wk"]) & df[tie].eqNullSafe(w["_wt"])
-    return df.join(w, cond, "left_semi")
 
 
 def lww_dedup(
@@ -111,7 +113,7 @@ def lww_dedup(
     order: tuple[str, ...] = ("warc_ts", "seq"),
 ) -> DataFrame:
     """One full row per key: argmax over the (version, tie) ``order``, with
-    ``tie`` unique per key (the :func:`_join_back` precondition).
+    ``tie`` unique per key (the :func:`_join_back_sql` precondition).
 
     Winners are computed hash-aggregated on a (key, *order) projection and
     the full rows recovered by the null-safe (key, tie) join-back — the
@@ -120,8 +122,8 @@ def lww_dedup(
     and the build per partition is bounded, while a sort-merge join would
     re-introduce exactly the payload sort this rewrite removes. Works for
     any batch size (no broadcast)."""
-    winners = _winner_ties(df, key, order)
-    return _join_back(df, winners, key, order[-1])
+    winners = f"({_winner_ties_sql('{df}', key, order)})"
+    return df.sparkSession.sql(_join_back_sql("{df}", winners, key, order[-1]), df=df)
 
 
 def winner_seqs(
@@ -137,7 +139,11 @@ def winner_seqs(
     (see module docstring). The shuffle carries key + two scalars per row,
     never a full row copy.
     """
-    return _winner_ties(df, key, order).select(order[-1])
+    return df.sparkSession.sql(_winner_seqs_sql("{df}", key, order), df=df)
+
+
+def _winner_seqs_sql(rel: str, key: str, order: tuple[str, ...]) -> str:
+    return f"SELECT {q(order[-1])} FROM ({_winner_ties_sql(rel, key, order)})"
 
 
 def lww_dedup_broadcast_keys(
@@ -159,6 +165,8 @@ def lww_dedup_broadcast_keys(
     winner-key set fits a broadcast (≈8 bytes/key; a 10^6-event batch is a
     few MB); :func:`lww_dedup` serves unbounded batch sizes.
     """
-    winners = winner_seqs(df, key, order)
-    return df.join(F.broadcast(winners), order[-1], "left_semi")
-
+    sql = (
+        "SELECT /*+ BROADCAST(w) */ * FROM {df} LEFT SEMI JOIN "
+        f"({_winner_seqs_sql('{df}', key, order)}) w USING ({q(order[-1])})"
+    )
+    return df.sparkSession.sql(sql, df=df)

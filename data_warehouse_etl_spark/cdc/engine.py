@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..lake import LakeTable
+from ..lake.table import quote_ident
 from . import evolve
 from .dedup import lww_dedup, lww_dedup_broadcast_keys
 from .extract import extract_enrich_udf, extract_text_udf
@@ -115,7 +116,7 @@ class EngineConfig:
     files_per_bucket: int = 1
     # Accepted and IGNORED: hot-key detection and the salted (url, salt)
     # reduce they configured are gone — every batch takes the one unsalted
-    # winner reduce (cdc/dedup.py _winner_ties; SCALE.md, Skew). Kept so
+    # winner reduce (cdc/dedup.py _winner_ties_sql; SCALE.md, Skew). Kept so
     # existing configs and benchmark scripts still construct.
     salt_k: int = 16
     hot_threshold: int = 1_000_000
@@ -228,7 +229,12 @@ class CdcEngine:
     def read_pages(self, spark: SparkSession | None = None) -> DataFrame:
         """The user-facing view: live rows, internal columns hidden."""
         df = self.pages.read(spark or self.spark)
-        return df.filter(~F.col("_deleted")).drop(*INTERNAL_COLS)
+        cols = ", ".join(
+            quote_ident(f.name)
+            for f in self.pages.manifest.current_fields
+            if f.name not in INTERNAL_COLS
+        )
+        return df.sparkSession.sql(f"SELECT {cols} FROM {{df}} WHERE NOT _deleted", df=df)
 
     def refresh_pages(self) -> DataFrame:
         """Reload the table head, then read (for observers of a table
@@ -465,8 +471,8 @@ class CdcEngine:
     # ------------------------------------------------------- transform/merge
 
     @staticmethod
-    def _batch_predicate(cps: dict[int, int], targets: dict[int, int]):
-        """The offset-range slice predicate.
+    def _batch_predicate(cps: dict[int, int], targets: dict[int, int]) -> str:
+        """The offset-range slice predicate, as SQL text.
 
         General form is a per-part disjunction — 3 comparisons × |parts|
         per row, which at 32 parts is ~100 row-ops on the scan's hot path.
@@ -484,16 +490,12 @@ class CdcEngine:
             # whose ceiling is below hi simply HAS no rows above it,
             # and parts absent from targets (exhausted at a different
             # offset) are excluded by the membership check
-            return (
-                (F.col("seq") > lo)
-                & (F.col("seq") <= hi)
-                & F.col("part").isin(list(targets))
-            )
-        pred = None
-        for p, tgt in sorted(targets.items()):
-            c = (F.col("part") == p) & (F.col("seq") > cps.get(p, 0)) & (F.col("seq") <= tgt)
-            pred = c if pred is None else (pred | c)
-        return pred
+            parts = ", ".join(str(p) for p in targets)
+            return f"seq > {lo} AND seq <= {hi} AND part IN ({parts})"
+        return " OR ".join(
+            f"(part = {p} AND seq > {cps.get(p, 0)} AND seq <= {tgt})"
+            for p, tgt in sorted(targets.items())
+        )
 
     @staticmethod
     def _observed(vals: dict, key: str) -> int:
@@ -625,20 +627,22 @@ class CdcEngine:
         lang_col = "language" if "language" in payload_names else "lang"
         has_lang = lang_col in payload_names
 
-        def enrich(df: DataFrame, live) -> DataFrame:
-            if has_lang:
-                return (
-                    df.withColumn(
-                        "_tx",
-                        extract_enrich_udf(
-                            F.when(live, F.col("html")), F.when(live, F.col(lang_col))
-                        ),
-                    )
-                    .withColumn("text", F.col("_tx.text"))
-                    .withColumn(lang_col, F.col("_tx.lang"))
-                    .drop("_tx")
+        def enrich(df: DataFrame, live: str) -> DataFrame:
+            """``df`` with ``text`` (added, or replaced in place) and the
+            language column extracted on rows where SQL ``live`` holds."""
+            if not has_lang:
+                return df.withColumn(
+                    "text", F.when(F.expr(live), extract_text_udf(F.col("html")))
                 )
-            return df.withColumn("text", F.when(live, extract_text_udf(F.col("html"))))
+            tx = extract_enrich_udf(
+                F.expr(f"CASE WHEN {live} THEN html END"),
+                F.expr(f"CASE WHEN {live} THEN {quote_ident(lang_col)} END"),
+            )
+            out = {"text": "_tx.text AS text", lang_col: f"_tx.lang AS {quote_ident(lang_col)}"}
+            names = df.columns + ([] if "text" in df.columns else ["text"])
+            return df.withColumn("_tx", tx).selectExpr(
+                *[out.get(n, quote_ident(n)) for n in names]
+            )
 
         page_fields = [f.name for f in self.pages.manifest.current_fields]
 
@@ -706,12 +710,14 @@ class CdcEngine:
         → exchange, no python boundary)."""
         cfg = self.cfg
         enriched = (
-            deduped if post_shuffle_extract else enrich(deduped, F.col("op") != "D")
+            deduped if post_shuffle_extract else enrich(deduped, "op != 'D'")
         )
         obs_out = Observation()
         # one F.expr per aggregate: building these ~3x|parts| conditional
         # sums out of Column operators costs ~15 py4j round trips EACH —
-        # measured ~1s of pure driver time per batch at 32 parts
+        # measured ~1s of pure driver time per batch at 32 parts. observe()
+        # has no SQL form, and one struct aggregate would change the
+        # CollectMetrics plan, so the texts stay one per aggregate.
         out_aggs = []
         for p in parts:
             out_aggs.append(
@@ -735,25 +741,21 @@ class CdcEngine:
             out_aggs.append(F.expr("max(warc_ts) as wm_max"))
         enriched = enriched.observe(obs_out, *out_aggs)
 
-        def val(name: str):
-            if name == "_seq":
-                return F.col("seq")
-            if name == "_deleted":
-                return F.col("op") == "D"
-            if name == "text" and post_shuffle_extract:
-                # computed post-shuffle (see docstring); placeholder keeps
-                # the delta schema-complete through the exchange
-                return F.lit(None).cast("string")
-            return F.col(name)
-
-        delta = enriched.select(*[val(n).alias(n) for n in page_fields])
+        val = {"_seq": "seq", "_deleted": "op = 'D'"}
+        if post_shuffle_extract:
+            # computed post-shuffle (see docstring); placeholder keeps the
+            # delta schema-complete through the exchange
+            val["text"] = "CAST(NULL AS STRING)"
+        delta = enriched.selectExpr(
+            *[f"{val.get(n, quote_ident(n))} AS {quote_ident(n)}" for n in page_fields]
+        )
         n_files = len(self.pages.manifest.files)
         self.pages = self.pages.append_deltas(
             delta,
             properties_update=properties_update,
             files_per_bucket=cfg.files_per_bucket,
             post_shuffle=(
-                (lambda df: enrich(df, ~F.col("_deleted")))
+                (lambda df: enrich(df, "NOT _deleted"))
                 if post_shuffle_extract
                 else None
             ),

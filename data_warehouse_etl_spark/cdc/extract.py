@@ -20,16 +20,77 @@ entity unescaping maps Python per element, bounded by the Arrow batch size.
 The reference's extraction analog is its XML feed boundary: entity-encoded
 payloads (`&amp;`, `&apos;`, `<br/>` inside description text —
 ``/root/reference/SampleBingFeeds.xml:33``) flattened to relational columns.
+
+Python worker setup: a Spark Python worker imports this module when it
+unpickles one of the UDFs below, and the import installs
+:func:`_keep_spark_zip_directories` in that worker process only. Before
+every task, the worker calls ``importlib.invalidate_caches()``, and on
+CPython 3.10-3.12 each cached ``zipimporter`` then re-reads its whole
+archive directory. For Spark's own archives (``pyspark.zip``, the py4j zip
+and the Spark jar: 16 importers) that re-read is the larger part of a small
+task's Python time, and those archives never change while a worker lives.
+The driver's import system is left as it is.
 """
 
 from __future__ import annotations
 
 import html as _html
+import os
 import re
+import sys
 
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def _keep_spark_zip_directories() -> None:
+    """In a Spark Python worker, make ``zipimporter.invalidate_caches`` skip
+    the archives in the ``python/lib`` and ``jars`` directories of the
+    Spark installation the worker imports ``pyspark`` from; every other
+    archive (``--py-files`` zips among them) keeps the stock re-read.
+
+    Measured with ``pyspark.zip`` 4.1.2 on CPython 3.11.7, 4 vCPUs:
+    ``importlib.invalidate_caches()`` took 230-240 ms per call in a reused
+    worker (about 1 ms with the skip). Over the extract tasks of 1k-event
+    tail ticks at ``local[4]``, the PythonRunner ``Times`` total per task
+    fell from a median of 369 ms (p25-p75 335-403) to 107 ms (57-150).
+
+    Version gate: ``zipimporter.invalidate_caches`` first exists in 3.10,
+    and it re-reads the archive at once in 3.10-3.12 (checked on 3.10.13,
+    3.11.7 and 3.12.1; later 3.12 releases were not checked, and the skip
+    is harmless where the re-read is lazy). From 3.13 (gh-103200; checked
+    on 3.13.0) it only drops the cached directory, which the next import
+    from that archive reads again; nothing is installed there."""
+    if not (3, 10) <= sys.version_info[:2] <= (3, 12):
+        return
+    try:
+        from pyspark.core.files import SparkFiles
+    except ImportError:  # a Spark Connect client has no Python workers
+        return
+    if not SparkFiles._is_running_on_worker:
+        return
+    import zipimport
+
+    import pyspark
+
+    stock = zipimport.zipimporter.invalidate_caches
+    archive = getattr(pyspark.__spec__.loader, "archive", None)
+    if archive is None or hasattr(stock, "spark_dirs"):
+        return  # pyspark is not imported from a zip, or already installed
+    # <spark home>/python/lib/{pyspark.zip,py4j-*.zip} and <spark home>/jars
+    lib = os.path.dirname(os.path.realpath(archive))
+    spark_dirs = {lib, os.path.join(os.path.dirname(os.path.dirname(lib)), "jars")}
+
+    def invalidate_caches(self) -> None:
+        if os.path.dirname(os.path.realpath(self.archive)) not in spark_dirs:
+            stock(self)
+
+    invalidate_caches.spark_dirs = spark_dirs
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_keep_spark_zip_directories()
 
 # Ordered, anchored pipeline. Block-level closers become newlines so text
 # keeps its visual structure; everything else strips to nothing.

@@ -150,6 +150,11 @@ class Manifest:
         )
 
 
+def quote_ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 @functools.lru_cache(maxsize=None)
 def _spark_type(ddl: str) -> T.DataType:
     """The DataType of a DDL type string. Parsing goes through the JVM, and
@@ -265,11 +270,14 @@ class LakeTable:
         murmur3 bucket transform). Callers use it to pre-compute affected
         buckets for pruned reads and copy-on-write commits.
         """
-        c = col or self.manifest.bucket_col
-        n = self.manifest.num_buckets
+        return F.expr(self._bucket_sql(col))
+
+    def _bucket_sql(self, col: str | None = None) -> str:
+        """SQL text of :meth:`bucket_expr`."""
+        c = quote_ident(col or self.manifest.bucket_col)
         if self.manifest.transform == "identity":
-            return F.col(c).cast("int")
-        return F.pmod(F.xxhash64(F.col(c)), F.lit(n)).cast("int")
+            return f"CAST({c} AS INT)"
+        return f"CAST(pmod(xxhash64({c}), {self.manifest.num_buckets}) AS INT)"
 
     def read(
         self,
@@ -287,7 +295,10 @@ class LakeTable:
 
         Files written under older schema versions are mapped to the current
         schema by field id: renamed columns resolve to their current name,
-        added columns appear as typed nulls.
+        added columns appear as typed nulls. Each schema version's mapping is
+        one ``selectExpr`` of ``CAST(old AS type) AS new`` texts (``CAST(NULL
+        AS type)`` for an added column): the plan of per-column ``Column``
+        calls, built in one JVM step and a few py4j round trips.
 
         Merge-on-read: when the table declares ``row_key``/``version_cols``
         and the selected files include delta files, rows are resolved to one
@@ -323,14 +334,11 @@ class LakeTable:
                 [T.StructField(f.name, _spark_type(f.type), True) for f in m.schemas[sv]]
             )
             df = spark.read.schema(file_schema).parquet(*paths)
-            cols = []
-            for f in cur:
-                old = old_by_id.get(f.id)
-                if old is not None:
-                    cols.append(F.col(old.name).cast(_spark_type(f.type)).alias(f.name))
-                else:
-                    cols.append(F.lit(None).cast(_spark_type(f.type)).alias(f.name))
-            part = df.select(*cols)
+            part = df.selectExpr(*[
+                f"CAST({quote_ident(old_by_id[f.id].name) if f.id in old_by_id else 'NULL'}"
+                f" AS {f.type}) AS {quote_ident(f.name)}"
+                for f in cur
+            ])
             out = part if out is None else out.unionByName(part)
 
         needs_resolve = m.row_key is not None and any(
@@ -355,14 +363,16 @@ class LakeTable:
         the build side (one id per live key of the scanned subset) is
         bounded per partition. The argmax is total-ordered → deterministic
         at any parallelism/batch slicing.
+
+        The 2-tuple case is ``cdc.dedup.lww_dedup``, built from one SQL
+        text: one JVM analysis and a few py4j round trips for the plan
+        described above.
         """
         m = self.manifest
         if len(m.version_cols) == 2:
-            from ..cdc.dedup import _join_back, _winner_ties
+            from ..cdc.dedup import lww_dedup
 
-            tie = m.version_cols[-1]
-            winners = _winner_ties(df, m.row_key, tuple(m.version_cols))
-            return _join_back(df, winners, m.row_key, tie).select(*df.columns)
+            return lww_dedup(df, m.row_key, tuple(m.version_cols))
         value_cols = [c for c in df.columns if c != m.row_key]
         return (
             df.groupBy(m.row_key)
@@ -405,9 +415,9 @@ class LakeTable:
         m = self.manifest
         snap_dir = f"data/snap-{uuid.uuid4().hex[:12]}"
         abs_dir = os.path.join(self.path, snap_dir)
-        names = [f.name for f in m.current_fields]
+        cols = [quote_ident(f.name) for f in m.current_fields]
         if m.bucket_col:
-            df = df.withColumn("_bucket", self.bucket_expr())
+            df = df.selectExpr("*", f"{self._bucket_sql()} AS _bucket")
             if files_per_bucket > 1:
                 df = df.repartition(
                     m.num_buckets * files_per_bucket,
@@ -418,13 +428,13 @@ class LakeTable:
                 df = df.repartition(m.num_buckets, F.col("_bucket"))
             if post_shuffle is not None:
                 df = post_shuffle(df)
-            df.select("_bucket", *names).write.mode("overwrite").partitionBy("_bucket").parquet(
-                abs_dir
-            )
+            df.selectExpr("_bucket", *cols).write.mode("overwrite").partitionBy(
+                "_bucket"
+            ).parquet(abs_dir)
         else:
             if post_shuffle is not None:
                 df = post_shuffle(df)
-            df.select(*names).write.mode("overwrite").parquet(abs_dir)
+            df.selectExpr(*cols).write.mode("overwrite").parquet(abs_dir)
 
         entries: list[dict[str, Any]] = []
         for root, _dirs, fnames in os.walk(abs_dir):

@@ -178,18 +178,30 @@ def test_dedup_mode_invariance(spark, tmp_path):
 
 
 # py4j round trips per plain tick on the module ledger (3 ticks of 300
-# events after one warm-up tick), measured with DataFrame debugging off and
-# DDL parses memoized: 649-683. With debugging on, the count is ~1,400.
-_PY4J_CALLS_PER_TICK = 680
+# events after one warm-up tick), and per build-and-collect of the live
+# view's per-language count on the same table. Each batch step and each read
+# step is built from one SQL text or selectExpr (cdc/dedup.py, LakeTable.read,
+# CdcEngine.read_pages): 228 per tick and 75-95 per read, against 650-690
+# and 430-465 when they were built one Column call at a time.
+_PY4J_CALLS_PER_TICK = 230
+_PY4J_CALLS_PER_READ = 95
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
 
 def test_py4j_round_trip_budget(spark, ledger, tmp_path, monkeypatch):
-    """Regression guard on a tick's driver fixed cost: the py4j round trips
-    of a plain run(max_batches=1) stay within 1.25x the measured count."""
+    """Regression guard on a tick's and a read's driver fixed cost: the py4j
+    round trips of a plain run(max_batches=1), and of building and
+    collecting an aggregate over read_pages(), stay within 1.25x the
+    measured counts. The SQL texts they are built from leave no temporary
+    view behind."""
     from py4j.clientserver import ClientServerConnection
 
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     eng = _mk_engine(spark, ledger, tmp_path, batch_size=300)
+    views = _temp_views(spark)
     assert eng.run(max_batches=1) == 1  # warm-up
     calls = [0]
     send = ClientServerConnection.send_command
@@ -198,12 +210,22 @@ def test_py4j_round_trip_budget(spark, ledger, tmp_path, monkeypatch):
         calls[0] += 1
         return send(self, command, *a, **kw)
 
-    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
-    for _ in range(3):
+    def per_op(op) -> float:
+        calls[0] = 0
+        monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+        for _ in range(3):
+            op()
+        monkeypatch.undo()
+        return calls[0] / 3
+
+    def tick():
         assert eng.run(max_batches=1) == 1
-    monkeypatch.undo()
-    per_tick = calls[0] / 3
+
+    per_tick = per_op(tick)
     assert per_tick <= 1.25 * _PY4J_CALLS_PER_TICK, per_tick
+    per_read = per_op(lambda: eng.read_pages().groupBy("lang").count().collect())
+    assert per_read <= 1.25 * _PY4J_CALLS_PER_READ, per_read
+    assert _temp_views(spark) == views
 
 
 def test_schema_evolution_replay(spark, tmp_path):

@@ -93,3 +93,55 @@ _html_soup = st.lists(
 @given(st.one_of(st.none(), st.binary(max_size=64), _html_soup))
 def test_fast_extract_equals_defining_pipeline(data):
     assert extract_text_bytes(data) == _extract_text_bytes_reference(data)
+
+
+# ---- Python worker setup: importing this module in a Spark Python worker
+# keeps Spark's own zip directories across tasks (extract.py docstring)
+
+import sys
+import zipimport
+
+import pytest
+
+
+@pytest.mark.skipif(
+    not (3, 10) <= sys.version_info[:2] <= (3, 12),
+    reason="zipimporter.invalidate_caches re-reads its archive only on 3.10-3.12",
+)
+def test_workers_keep_spark_zip_directories(spark):
+    """Two pandas-UDF jobs in one session. Each task reports its worker's
+    pid and the id of the cached directory of the pyspark.zip it imports
+    from: a reused worker keeps the same directory object from task to
+    task instead of re-reading the archive before each one. The driver's
+    zipimporter is untouched."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    @F.pandas_udf(T.StringType())
+    def probe(x: pd.Series) -> pd.Series:
+        import os
+        import zipimport
+
+        import pyspark
+        from pyspark import TaskContext
+
+        import data_warehouse_etl_spark.cdc.extract  # noqa: F401  (as the engine's UDFs do)
+
+        archive = pyspark.__spec__.loader.archive
+        cached = id(zipimport._zip_directory_cache[archive])
+        tid = TaskContext.get().taskAttemptId()
+        return x.map(lambda _: f"{os.getpid()} {cached} {tid}")
+
+    seen: dict[str, set[str]] = {}
+    tasks: dict[str, set[str]] = {}
+    for _ in range(2):
+        df = spark.range(0, 8, 1, 8).select(probe(F.col("id").cast("string")).alias("p"))
+        for r in df.collect():
+            pid, cached, tid = r["p"].split()
+            seen.setdefault(pid, set()).add(cached)
+            tasks.setdefault(pid, set()).add(tid)
+    assert any(len(t) > 1 for t in tasks.values()), tasks  # some worker was reused
+    assert all(len(ids) == 1 for ids in seen.values()), seen
+    stock = zipimport.zipimporter.invalidate_caches
+    assert (stock.__module__, stock.__qualname__) == ("zipimport", "zipimporter.invalidate_caches")

@@ -1,6 +1,6 @@
-"""The two audit tools run end to end: the plan audit passes, and the
+"""The audit tools run end to end: the plan audit passes, the
 materialized ANN indexes match the DuckDB oracle post-build and post-churn
-(``bench.py`` shells out to the second)."""
+(``bench.py`` shells out to that one), and the plan digest runs."""
 
 import json
 import os
@@ -29,3 +29,16 @@ def test_check_index_parity_post_build_and_churn():
     line = next(x for x in stdout.splitlines() if x.startswith("INDEX_PARITY "))
     res = json.loads(line[len("INDEX_PARITY "):])
     assert res["ok"] is True, res
+
+
+def test_plan_digest_smoke():
+    """The plan digest runs end to end on a small ledger and strips the
+    run-specific text: no expression ids, work paths or snapshot names."""
+    import re
+
+    out = _run("tools/plan_digest.py", "--ticks", "1", "--events", "1000")
+    blocks = out.split("== execution ")[1:]
+    assert blocks and blocks[0].startswith("0: initial plan"), out[:500]
+    assert "Execute InsertIntoHadoopFsRelationCommand" in out
+    assert "CreateViewCommand" not in out
+    assert not re.search(r"#\d|plan_id=\d|snap-[0-9a-f]{12}|plan-digest-", out)
