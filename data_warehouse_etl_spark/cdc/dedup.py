@@ -19,7 +19,9 @@ with the input frame as its one argument (registered as a temporary view
 for the call, and dropped after it): one parse and one analysis in the JVM
 instead of one per DataFrame step, and a few py4j round trips instead of
 one per ``Column`` call. The plans are the ones the DataFrame steps built
-(``tools/plan_digest.py``).
+(``tools/plan_digest.py``). ``spark.sql`` runs such a text through
+``str.format``, so column names are quoted with ``quote_format_ident``,
+which doubles their braces.
 
 Physical strategy — HASH aggregation, never window, never sort-aggregate.
 A window rank forces ALL events of a key into one task and sorts them. Less
@@ -55,7 +57,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..lake.table import quote_ident as q
+from ..lake.table import quote_format_ident as q
 
 
 def _winner_ties_sql(rel: str, key: str, order: tuple[str, ...]) -> str:

@@ -60,7 +60,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..lake import LakeTable
-from ..lake.table import quote_ident
+from ..lake.table import quote_format_ident, quote_ident
 from . import evolve
 from .dedup import lww_dedup, lww_dedup_broadcast_keys
 from .extract import extract_enrich_udf, extract_text_udf
@@ -230,7 +230,7 @@ class CdcEngine:
         """The user-facing view: live rows, internal columns hidden."""
         df = self.pages.read(spark or self.spark)
         cols = ", ".join(
-            quote_ident(f.name)
+            quote_format_ident(f.name)
             for f in self.pages.manifest.current_fields
             if f.name not in INTERNAL_COLS
         )

@@ -27,9 +27,10 @@ unpickles one of the UDFs below, and the import installs
 every task, the worker calls ``importlib.invalidate_caches()``, and on
 CPython 3.10-3.12 each cached ``zipimporter`` then re-reads its whole
 archive directory. For Spark's own archives (``pyspark.zip``, the py4j zip
-and the Spark jar: 16 importers) that re-read is the larger part of a small
-task's Python time, and those archives never change while a worker lives.
-The driver's import system is left as it is.
+and the ``spark-core`` jar: 16 importers) that re-read is the larger part
+of a small task's Python time, and those archives never change while a
+worker lives. Any other archive is re-read as before, and the driver's
+import system is left as it is.
 """
 
 from __future__ import annotations
@@ -46,9 +47,12 @@ from pyspark.sql import types as T
 
 def _keep_spark_zip_directories() -> None:
     """In a Spark Python worker, make ``zipimporter.invalidate_caches`` skip
-    the archives in the ``python/lib`` and ``jars`` directories of the
-    Spark installation the worker imports ``pyspark`` from; every other
-    archive (``--py-files`` zips among them) keeps the stock re-read.
+    Spark's own archives, matched by file: the ``pyspark.zip`` and py4j zip
+    the worker imports ``pyspark`` and ``py4j`` from, and the ``spark-core``
+    jar Spark puts on the worker's ``sys.path``. Every other archive keeps
+    the stock re-read, ``--py-files`` zips among them, also where they sit
+    in one directory with ``pyspark.zip`` (a YARN container's working
+    directory).
 
     Measured with ``pyspark.zip`` 4.1.2 on CPython 3.11.7, 4 vCPUs:
     ``importlib.invalidate_caches()`` took 230-240 ms per call in a reused
@@ -72,21 +76,27 @@ def _keep_spark_zip_directories() -> None:
         return
     import zipimport
 
+    import py4j
     import pyspark
 
     stock = zipimport.zipimporter.invalidate_caches
     archive = getattr(pyspark.__spec__.loader, "archive", None)
-    if archive is None or hasattr(stock, "spark_dirs"):
+    if archive is None or hasattr(stock, "spark_archives"):
         return  # pyspark is not imported from a zip, or already installed
-    # <spark home>/python/lib/{pyspark.zip,py4j-*.zip} and <spark home>/jars
-    lib = os.path.dirname(os.path.realpath(archive))
-    spark_dirs = {lib, os.path.join(os.path.dirname(os.path.dirname(lib)), "jars")}
+    spark_archives = {os.path.realpath(archive)}
+    if getattr(py4j.__spec__.loader, "archive", None):
+        spark_archives.add(os.path.realpath(py4j.__spec__.loader.archive))
+    spark_archives.update(
+        os.path.realpath(p)
+        for p in sys.path
+        if os.path.basename(p).startswith("spark-core_") and p.endswith(".jar")
+    )
 
     def invalidate_caches(self) -> None:
-        if os.path.dirname(os.path.realpath(self.archive)) not in spark_dirs:
+        if os.path.realpath(self.archive) not in spark_archives:
             stock(self)
 
-    invalidate_caches.spark_dirs = spark_dirs
+    invalidate_caches.spark_archives = spark_archives
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 

@@ -155,6 +155,13 @@ def quote_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def quote_format_ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier in a text passed to
+    ``spark.sql(text, df=...)``, which runs the text through ``str.format``
+    first: braces are doubled so that they reach the parser as written."""
+    return quote_ident(name).replace("{", "{{").replace("}", "}}")
+
+
 @functools.lru_cache(maxsize=None)
 def _spark_type(ddl: str) -> T.DataType:
     """The DataType of a DDL type string. Parsing goes through the JVM, and
@@ -262,18 +269,15 @@ class LakeTable:
             [T.StructField(f.name, _spark_type(f.type), True) for f in self.manifest.current_fields]
         )
 
-    def bucket_expr(self, col: str | None = None) -> F.Column:
-        """The table's partition transform: pmod(xxhash64(key), N), or
-        CAST(key AS INT) under the identity transform.
+    def bucket_sql(self, col: str | None = None) -> str:
+        """SQL text of the table's partition transform: pmod(xxhash64(key), N),
+        or CAST(key AS INT) under the identity transform.
 
         Deterministic and engine-internal (plays the role of Iceberg's
-        murmur3 bucket transform). Callers use it to pre-compute affected
-        buckets for pruned reads and copy-on-write commits.
+        murmur3 bucket transform). Callers use it (``F.expr`` of it as a
+        Column) to pre-compute affected buckets for pruned reads and
+        copy-on-write commits.
         """
-        return F.expr(self._bucket_sql(col))
-
-    def _bucket_sql(self, col: str | None = None) -> str:
-        """SQL text of :meth:`bucket_expr`."""
         c = quote_ident(col or self.manifest.bucket_col)
         if self.manifest.transform == "identity":
             return f"CAST({c} AS INT)"
@@ -417,7 +421,7 @@ class LakeTable:
         abs_dir = os.path.join(self.path, snap_dir)
         cols = [quote_ident(f.name) for f in m.current_fields]
         if m.bucket_col:
-            df = df.selectExpr("*", f"{self._bucket_sql()} AS _bucket")
+            df = df.selectExpr("*", f"{self.bucket_sql()} AS _bucket")
             if files_per_bucket > 1:
                 df = df.repartition(
                     m.num_buckets * files_per_bucket,

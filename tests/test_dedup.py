@@ -70,6 +70,23 @@ def test_no_window_sort_in_plan(spark, events):
         assert "Window" not in plan and "SortAggregate" not in plan, plan
 
 
+def test_dedup_accepts_braces_and_backticks_in_column_names(spark, events):
+    """The SQL texts pass through ``str.format`` in ``spark.sql(text,
+    df=...)``: a brace or a backtick in a column name must reach the parser
+    quoted, and the winners must be the ones of the plain names."""
+    from data_warehouse_etl_spark.cdc.dedup import winner_seqs
+
+    names = {"url": "u{rl}", "warc_ts": "ts`}", "seq": "{seq"}
+    odd = events.select(*[F.col(c).alias(names.get(c, c)) for c in events.columns])
+    order = (names["warc_ts"], names["seq"])
+    want = _winners(lww_dedup(events))
+    for fn in (lww_dedup, lww_dedup_broadcast_keys):
+        got = fn(odd, key=names["url"], order=order).withColumnRenamed(names["url"], "url")
+        assert _winners(got) == want, fn.__name__
+    ws = {r[0] for r in winner_seqs(odd, names["url"], order).collect()}
+    assert ws == {r["seq"] for r in lww_dedup(events).collect()}
+
+
 def test_winner_seqs_and_broadcast_keys_match_full_reduce(spark, events):
     from data_warehouse_etl_spark.cdc.dedup import winner_seqs
 

@@ -108,19 +108,22 @@ import pytest
     not (3, 10) <= sys.version_info[:2] <= (3, 12),
     reason="zipimporter.invalidate_caches re-reads its archive only on 3.10-3.12",
 )
-def test_workers_keep_spark_zip_directories(spark):
+def test_workers_keep_spark_zip_directories(spark, tmp_path):
     """Two pandas-UDF jobs in one session. Each task reports its worker's
     pid and the id of the cached directory of the pyspark.zip it imports
     from: a reused worker keeps the same directory object from task to
-    task instead of re-reading the archive before each one. The driver's
-    zipimporter is untouched."""
+    task instead of re-reading the archive before each one. A zip that is
+    not Spark's is still re-read. The driver's zipimporter is untouched."""
     import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    tmp = str(tmp_path)
+
     @F.pandas_udf(T.StringType())
     def probe(x: pd.Series) -> pd.Series:
         import os
+        import zipfile
         import zipimport
 
         import pyspark
@@ -131,6 +134,13 @@ def test_workers_keep_spark_zip_directories(spark):
         archive = pyspark.__spec__.loader.archive
         cached = id(zipimport._zip_directory_cache[archive])
         tid = TaskContext.get().taskAttemptId()
+        other = os.path.join(tmp, f"probe-{os.getpid()}-{tid}.zip")
+        with zipfile.ZipFile(other, "w") as z:
+            z.writestr("probe_mod.py", "")
+        importer = zipimport.zipimporter(other)
+        before = zipimport._zip_directory_cache[importer.archive]
+        importer.invalidate_caches()
+        assert zipimport._zip_directory_cache.get(importer.archive) is not before, other
         return x.map(lambda _: f"{os.getpid()} {cached} {tid}")
 
     seen: dict[str, set[str]] = {}

@@ -34,7 +34,7 @@ def test_bucket_pruning_and_overwrite(spark, tmp_lake):
     df = spark.createDataFrame([(f"u{i}", i) for i in range(40)], "url string, v int")
     t.append(df)
     # compute which bucket u3 belongs to, read only that bucket, find u3 there
-    b3 = df.filter(F.col("url") == "u3").select(t.bucket_expr()).collect()[0][0]
+    b3 = df.filter(F.col("url") == "u3").select(F.expr(t.bucket_sql())).collect()[0][0]
     pruned = t.read(spark, buckets=[b3])
     assert ("u3", 3) in _rows(pruned)
     assert len(_rows(pruned)) < 40  # actually pruned

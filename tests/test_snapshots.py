@@ -158,10 +158,10 @@ def test_changelog_plain_table(spark, tmp_lake):
     # update a, insert e (delta), then delete c via copy-on-write of its bucket
     t = t.append_deltas(spark.createDataFrame([("a", 10, 2), ("e", 5, 2)], t.schema()))
     c_bucket = t.read(spark).filter(F.col("k") == "c").select(
-        t.bucket_expr("k").alias("b")
+        F.expr(t.bucket_sql("k")).alias("b")
     ).collect()[0]["b"]
     keep = t.read(spark).filter(
-        (t.bucket_expr("k") == c_bucket) & (F.col("k") != "c")
+        (F.expr(t.bucket_sql("k")) == c_bucket) & (F.col("k") != "c")
     )
     t = t.overwrite_buckets(keep, [c_bucket])
 
@@ -393,7 +393,7 @@ def test_rebucket_partition_evolution(spark, tmp_lake):
     assert not t.manifest.has_deltas
     # pruned read under the NEW transform finds each key
     b_a = spark.createDataFrame([("a",)], "k string").select(
-        t.bucket_expr("k").alias("b")).collect()[0]["b"]
+        F.expr(t.bucket_sql("k")).alias("b")).collect()[0]["b"]
     assert t.read(spark, buckets=[b_a]).filter(F.col("k") == "a").count() == 1
     # changelog across the rebucket: no bucket pruning possible, still exact
     assert LakeTable._changed_buckets(

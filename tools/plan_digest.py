@@ -22,7 +22,7 @@ same plans:
 Temporary view creations are left out (see :func:`digest`).
 
 Usage:
-    python tools/plan_digest.py [--ticks N] [--events N] [--width N] > digest.txt
+    python tools/plan_digest.py [--ticks N] [--events N] > digest.txt
     diff parent.txt change.txt        # empty when the plans are identical
 """
 
@@ -38,6 +38,8 @@ import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# Cores and shuffle partitions. Fixed: two digests compare only at one width.
+WIDTH = 4
 sys.path.insert(0, REPO)
 
 _START = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart"
@@ -126,7 +128,6 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--ticks", type=int, default=3)
     ap.add_argument("--events", type=int, default=5000)
-    ap.add_argument("--width", type=int, default=4)
     args = ap.parse_args()
 
     from data_warehouse_etl_spark.session import get_spark
@@ -137,8 +138,8 @@ def main() -> int:
     try:
         spark = get_spark(
             app_name="plan-digest",
-            master=f"local[{args.width}]",
-            shuffle_partitions=args.width,
+            master=f"local[{WIDTH}]",
+            shuffle_partitions=WIDTH,
             extra_conf={
                 "spark.eventLog.enabled": "true",
                 "spark.eventLog.dir": events,
