@@ -14,7 +14,7 @@ Layout
                    schema evolution, bucket partitioning) usable without
                    external jars
 - ``cdc``        : the engine — ledger generator, HTML→text extractor (pandas
-                   UDF), salted LWW dedup, merge apply, checkpoints, metrics
+                   UDF), LWW dedup, merge-on-read apply, lineage views
 - ``operators``  : reference operator families (SURVEY.md §2) as reusable
                    DataFrame builders
 - ``functions``  : training-data-pipeline functions — dedup (exact / minhash /

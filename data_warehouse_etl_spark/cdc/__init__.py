@@ -3,7 +3,6 @@ from .gen import generate_ledger, LedgerSpec
 from .dedup import lww_dedup
 from .engine import CdcEngine, EngineConfig
 from .ivm import IncrementalAggregate
-from .schedule import ScheduleTable
 
 __all__ = [
     "extract_text_bytes",
@@ -17,5 +16,4 @@ __all__ = [
     "CdcEngine",
     "EngineConfig",
     "IncrementalAggregate",
-    "ScheduleTable",
 ]

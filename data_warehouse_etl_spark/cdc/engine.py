@@ -12,23 +12,29 @@ Lifecycle per batch (SURVEY.md §3.4), merge-on-read:
       → ONE fused pandas/Arrow UDF: html → (text, lang) on
         surviving rows only                                      [transform]
       → append_deltas commit: survivors land as per-bucket
-        DELTA files, offsets in the same manifest — one payload
-        job/batch, O(batch) bytes written, no old-state read    [exactly-once]
+        DELTA files — one payload job/batch, O(batch) bytes
+        written, no old-state read                              [exactly-once]
       → per-part stats from ledger metadata (dense-seq closed
-        form) + survivor-side observe() on the same job         [observability]
+        form) + survivor-side observe() on the same job, ready
+        before the publish                                      [observability]
       → reads LWW-resolve base+delta; compact() folds deltas
         back into base on the operator's cadence                [read path]
 
 Exactly-once: publishing the batch's manifest ``v{N+1}`` by atomic
-create-if-absent (LakeTable._publish) is the commit point, and the committed
-offsets ride in the same manifest (the reference needed a rename-swap publish
-+ anti-join guard + high-water-mark table to approximate this —
-``/root/reference/Sql Scripts/FCT_RESERVATION_UPD.sql:255-256``,
+create-if-absent (LakeTable._publish) is the commit point, and it is the
+batch's ONLY publish. The same manifest carries the committed offsets, the
+event-time watermark and, as its summary, the batch's per-part lineage rows
+with the run identity and declared frequency (the reference needed a
+rename-swap publish + anti-join guard + a separate high-water-mark table and
+metric-control table, each written in a second statement, to approximate
+this — ``/root/reference/Sql Scripts/FCT_RESERVATION_UPD.sql:255-256``,
 ``FCT_ERBRESERVATION.sql:229-231``,
 ``RestaurantDetails_Marta_v11_06152015.sql:153-155``). A crash between
 batches resumes from the committed offsets; a crash mid-batch leaves the old
 snapshot visible and the batch re-runs identically (deterministic slicing +
-deterministic reduce ⇒ identical result).
+deterministic reduce ⇒ identical result). ``eng.metrics`` and
+``eng.schedule`` are read-only views over the retained snapshots' summaries
+(cdc/metrics.py).
 
 Tail: :meth:`CdcEngine.run` is the one loop for replay and tail alike. Each
 call reloads the ledger head, so calling it again on a long-lived handle
@@ -51,9 +57,8 @@ survivors.
 from __future__ import annotations
 
 import json
-import logging
-import os
 import time
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -64,17 +69,13 @@ from ..lake.table import quote_format_ident, quote_ident
 from . import evolve
 from .dedup import lww_dedup, lww_dedup_broadcast_keys
 from .extract import extract_enrich_udf, extract_text_udf
-from .metrics import MetricsTable
-from .checkpoint import CheckpointsTable
-from .schedule import ScheduleTable
+from .metrics import MetricsView, ScheduleView
 
 INTERNAL_COLS = ("_seq", "_deleted")
 CHECKPOINTS_PROP = "checkpoints"
 BATCH_PROP = "last_batch_id"
 LEDGER_VERSION_PROP = "ledger_version"  # ledger snapshot the last batch was planned on
 WM_PROP = "wm_high"  # committed event-time high-water-mark (monotone watermark)
-
-log = logging.getLogger(__name__)
 
 # Adaptive extract placement (see _transform_and_merge): post-exchange
 # extraction is chosen when each write task gets at least this many rows —
@@ -91,17 +92,13 @@ _POST_SHUFFLE_MIN_ROWS_PER_TASK = 5_000
 _BROADCAST_MAX_ROWS = 4_000_000
 
 
-class _Timer:
-    """Phase timer: each mark logs the phase's wall time at DEBUG level."""
-
-    def __init__(self, label: str):
-        self.label = label
-        self.t = time.monotonic()
-
-    def mark(self, phase: str) -> None:
-        now = time.monotonic()
-        log.debug("TIMING %s %s: %.2fs", self.label, phase, now - self.t)
-        self.t = now
+def _max_deltas_per_bucket(files: list[dict]) -> int:
+    """Max MoR delta files stacked on any one bucket of a file list."""
+    per_bucket: dict[int, int] = {}
+    for f in files:
+        if f.get("kind", "base") == "delta":
+            per_bucket[f["bucket"]] = per_bucket.get(f["bucket"], 0) + 1
+    return max(per_bucket.values(), default=0)
 
 
 @dataclass
@@ -146,25 +143,27 @@ class EngineConfig:
     # in PRIOR batches) - delay, Structured Streaming's own law (the
     # watermark advances one trigger behind event time). The max rides the
     # apply job's observation — ZERO extra passes — and is committed in the
-    # manifest, so a cold resume restores the same cutoffs
-    # deterministically. The first batch of a fresh table is unfiltered.
+    # batch's own manifest commit (no commit of its own), so a cold resume
+    # restores the same cutoffs deterministically. The first batch of a
+    # fresh table is unfiltered.
     watermark_delay_s: int | None = None
-    # flush the observational metrics/checkpoints mirror tables every N
-    # batches (and at end of run). The authoritative offsets are inside the
-    # data commit; the mirrors are lineage queries, so batching their writes
-    # trades at most N batches of mirror rows on crash for fewer mirror
-    # commits (each flush is a driver-side pyarrow append plus one manifest
-    # publish per mirror — cdc/driverio.py).
+    # Accepted and IGNORED: the lineage rows it batched into mirror tables
+    # now ride each batch's own commit as its snapshot summary
+    # (cdc/metrics.py), so there is nothing left to flush. Kept so existing
+    # configs and benchmark scripts still construct.
     mirror_flush_batches: int = 8
-    # declared cadence recorded in the _schedule registry after each run()
-    # (the reference's "Schedule Frequency" metadata: daily | monthly |
-    # on_demand | run_time | cron:<expr> — free-form, purely observational)
+    # declared cadence recorded in each batch's summary, read back by the
+    # schedule view (the reference's "Schedule Frequency" metadata: daily |
+    # monthly | on_demand | run_time | cron:<expr> — free-form, purely
+    # observational)
     schedule_frequency: str = "on_demand"
     # snapshot retention: after each run(), expire all but the newest N
     # pages-table snapshots (0 = keep everything — replay/debug mode).
     # Bounds metadata at O(N x files) for a long-lived tail; final state and
     # resume are unaffected (offsets live in the current manifest). Size N
-    # to cover downstream changelog/IVM consumers' refresh cadence.
+    # to cover downstream changelog/IVM consumers' refresh cadence. It also
+    # bounds the lineage history: eng.metrics and eng.schedule read the
+    # summaries of retained snapshots only.
     retain_snapshots: int = 0
 
 
@@ -177,18 +176,10 @@ class CdcEngine:
             self.pages = LakeTable.load(cfg.pages_path)
         else:
             self.pages = self._create_pages()
-        self.metrics = MetricsTable.open(cfg.pages_path + "_metrics")
-        self.checkpoints = CheckpointsTable.open(cfg.pages_path + "_checkpoints")
-        self.schedule = ScheduleTable.open(cfg.pages_path + "_schedule")
-        self._pending_metrics: list[dict] = []
-        self._pending_checkpoints: list[tuple[int, dict[int, int]]] = []
-        # monotone-watermark state: max event time observed by applied
-        # batches. _transform_and_merge persists it with a set_properties
-        # commit right after each batch, so the next batch's cutoff depends
-        # only on committed state and a cold resume replays the identical
-        # cutoffs
+        # lineage: read-only views over the pages snapshots' summaries
+        self.metrics = MetricsView(self.pages)
+        self.schedule = ScheduleView(self.pages)
         self._wm_track = cfg.watermark_delay_s is not None
-        self._wm_pending = None
 
     # ------------------------------------------------------------------ setup
 
@@ -315,46 +306,28 @@ class CdcEngine:
         self.ledger = self.ledger.refresh()
         self._check_ledger_appends()
         max_seq = self._ledger_max_seq_per_part()
+        run_id = uuid.uuid4().hex
         applied = 0
-        try:
-            while max_batches is None or applied < max_batches:
-                if not self.run_one_batch(max_seq):
-                    break
-                applied += 1
-                if (
-                    self.cfg.compact_every_batches
-                    and self.last_batch_id() % self.cfg.compact_every_batches == 0
-                ):
-                    self.compact()
-            # retention GC: a production tail commits one manifest per batch
-            # and each manifest lists every live file, so metadata grows
-            # O(batches x files) unless bounded. Post-loop (not per-batch) so
-            # a replay's intermediate snapshots stay time-travelable while it
-            # runs; state is unaffected (expiration never touches the live
-            # snapshot — test_retention_bounds_metadata). Downstream
-            # changelog/IVM consumers must be given a keep_last covering
-            # their refresh cadence, or they pay one recompute (ivm.py
-            # fallback).
-            if applied and self.cfg.retain_snapshots:
-                self.pages.expire_snapshots(keep_last=self.cfg.retain_snapshots)
-        finally:
-            self.flush_mirrors()
-            # cadence registry: one observational row per run (driver-side
-            # append, no Spark job) — process identity + declared frequency
-            # + completion time, the reference's Schedule-Frequency surface.
-            # Best-effort by contract (schedule.py: "the data path's
-            # exactly-once guarantee never depends on it"): a failure here
-            # (e.g. a publish race lost to a concurrent process) must
-            # neither mask an in-flight data-path exception nor fail an
-            # otherwise-successful run.
-            try:
-                self.schedule.record(
-                    os.path.basename(self.cfg.pages_path.rstrip("/")),
-                    self.cfg.schedule_frequency,
-                    applied,
-                )
-            except (OSError, RuntimeError) as e:
-                log.warning("schedule registry write skipped: %s", e)
+        while max_batches is None or applied < max_batches:
+            if not self.run_one_batch(max_seq, run=(run_id, applied + 1)):
+                break
+            applied += 1
+            if (
+                self.cfg.compact_every_batches
+                and self.last_batch_id() % self.cfg.compact_every_batches == 0
+            ):
+                self.compact()
+        # retention GC: a production tail commits one manifest per batch
+        # and each manifest lists every live file, so metadata grows
+        # O(batches x files) unless bounded. Post-loop (not per-batch) so
+        # a replay's intermediate snapshots stay time-travelable while it
+        # runs; state is unaffected (expiration never touches the live
+        # snapshot — test_retention_bounds_metadata). Downstream
+        # changelog/IVM consumers must be given a keep_last covering
+        # their refresh cadence, or they pay one recompute (ivm.py
+        # fallback).
+        if applied and self.cfg.retain_snapshots:
+            self.pages.expire_snapshots(keep_last=self.cfg.retain_snapshots)
         return applied
 
     def _check_ledger_appends(self) -> None:
@@ -399,16 +372,13 @@ class CdcEngine:
             self.spark, buckets=buckets, files_per_bucket=self.cfg.files_per_bucket
         )
 
-    def flush_mirrors(self) -> None:
-        """Write buffered lineage rows to the mirror tables."""
-        if self._pending_metrics:
-            self.metrics.append(self.spark, self._pending_metrics)
-            self._pending_metrics = []
-        if self._pending_checkpoints:
-            self.checkpoints.record_many(self.spark, self._pending_checkpoints)
-            self._pending_checkpoints = []
-
-    def run_one_batch(self, max_seq: dict[int, int] | None = None) -> bool:
+    def run_one_batch(
+        self, max_seq: dict[int, int] | None = None, run: tuple[str, int] | None = None
+    ) -> bool:
+        """Apply the next batch, if the ledger holds one past the committed
+        offsets. ``run`` is (run identity, the batch's ordinal in that run),
+        recorded in the batch's summary for the schedule view; a call
+        without it is a run of its own."""
         cfg = self.cfg
         t0 = time.monotonic()
         if max_seq is None:
@@ -441,31 +411,11 @@ class CdcEngine:
 
         events = self._apply_watermark(events)
 
-        tm = _Timer(f"batch{batch_id}")
         # ---- transform + apply + atomic commit (input/output stats observed
         # on the same job — no separate stats passes)
-        new_cps = {**cps, **targets}
-        instats, mstats = self._transform_and_merge(
-            events,
-            properties_update={
-                CHECKPOINTS_PROP: json.dumps({str(k): v for k, v in sorted(new_cps.items())}),
-                BATCH_PROP: str(batch_id),
-                LEDGER_VERSION_PROP: str(self.ledger.manifest.version),
-            },
-            tm=tm,
-            parts=sorted(targets),
-            input_counts=self._dense_input_counts(cps, targets),
+        self._transform_and_merge(
+            events, batch_id, cps, targets, run or (uuid.uuid4().hex, 1), t0
         )
-
-        # ---- observability (buffered; authoritative offsets are in the commit)
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        self._pending_metrics.extend(
-            self._metric_rows(batch_id, sorted(targets), instats, mstats, wall_ms)
-        )
-        self._pending_checkpoints.append((batch_id, targets))
-        if len(self._pending_checkpoints) >= self.cfg.mirror_flush_batches:
-            self.flush_mirrors()
-        tm.mark("metrics+checkpoints")
         return True
 
     # ------------------------------------------------------- transform/merge
@@ -517,8 +467,8 @@ class CdcEngine:
     def _apply_watermark(self, events: DataFrame) -> DataFrame:
         """Late-data filter against the committed event-time high-water-mark
         — Structured Streaming's own law, zero extra passes (the max rides
-        the apply job's observation and is persisted in the following
-        commit)."""
+        the apply job's observation and is committed with that batch's
+        data)."""
         wm = self._committed_wm() if self._wm_track else None
         if wm is None:
             return events
@@ -550,20 +500,25 @@ class CdcEngine:
     def _transform_and_merge(
         self,
         events: DataFrame,
-        properties_update: dict[str, str],
-        tm: _Timer,
-        parts: list[int],
-        input_counts: dict[int, int] | None = None,
-    ) -> tuple[dict[int, dict], dict]:
-        """Dedup + extract + apply. Returns (instats, mstats), both computed
-        with ``observe()`` on the batch's own job(s) — stats never add a
-        driver-barrier pass over the events (round-1 cost: 2 extra O(batch)
-        scans per batch). When ``input_counts`` is given (exact counts from
-        ledger metadata, see _dense_input_counts) the pre-dedup scan carries
-        NO observation at all; per-part byte accounting then rides the
-        post-dedup survivor set (10-100x fewer rows) and reports bytes of
-        APPLIED html rather than scanned html."""
+        batch_id: int,
+        cps: dict[int, int],
+        targets: dict[int, int],
+        run: tuple[str, int],
+        t0: float,
+    ) -> None:
+        """Dedup + extract + merge-on-read apply, published as ONE manifest
+        that carries the batch's offsets, watermark and lineage summary
+        (``commit_info`` below, run between the write job and the publish).
+
+        The per-part stats are computed with ``observe()`` on the batch's
+        own job(s) — stats never add a driver-barrier pass over the events
+        (round-1 cost: 2 extra O(batch) scans per batch). When the ledger's
+        metadata gives exact input counts (_dense_input_counts) the
+        pre-dedup scan carries NO observation at all; per-part byte
+        accounting then rides the post-dedup survivor set (10-100x fewer
+        rows) and reports bytes of APPLIED html rather than scanned html."""
         cfg = self.cfg
+        input_counts = self._dense_input_counts(cps, targets)
         payload_names = [f.name for f in evolve.payload_fields(self.ledger)]
 
         # ---- per-part input stats. An events-level observe() is NOT safe
@@ -574,10 +529,7 @@ class CdcEngine:
         # explicit column-pruned pre-aggregation.
         if input_counts is None:
             scanned_stats = {
-                int(r["part"]): {
-                    "events_in": int(r["events_in"]),
-                    "bytes_html": int(r["bytes_html"] or 0),
-                }
+                int(r["part"]): (int(r["events_in"]), int(r["bytes_html"] or 0))
                 for r in events.groupBy("part")
                 .agg(
                     F.count("*").alias("events_in"),
@@ -585,7 +537,7 @@ class CdcEngine:
                 )
                 .collect()
             }
-            n_rows = sum(s["events_in"] for s in scanned_stats.values())
+            n_rows = sum(n for n, _ in scanned_stats.values())
         else:
             n_rows = sum(input_counts.values())
 
@@ -644,74 +596,24 @@ class CdcEngine:
                 *[out.get(n, quote_ident(n)) for n in names]
             )
 
-        page_fields = [f.name for f in self.pages.manifest.current_fields]
-
         write_tasks = max(cfg.num_buckets * cfg.files_per_bucket, 1)
-        mstats, bytes_by_part = self._apply_mor(
-            deduped,
-            enrich,
-            page_fields,
-            properties_update,
-            parts,
-            tm,
-            post_shuffle_extract=n_rows / write_tasks >= _POST_SHUFFLE_MIN_ROWS_PER_TASK,
-        )
+        post = n_rows / write_tasks >= _POST_SHUFFLE_MIN_ROWS_PER_TASK
+        choices = {
+            "dedup_plan": "broadcast_keys" if use_bcast else "full_shuffle",
+            "extract_placement": "post" if post else "pre",
+        }
 
-        if input_counts is not None:
-            # exact counts from ledger metadata; bytes are of APPLIED html
-            instats = {
-                p: {
-                    "events_in": int(input_counts.get(p, 0)),
-                    "bytes_html": bytes_by_part.get(p, 0),
-                }
-                for p in parts
-            }
-        else:
-            instats = {
-                p: scanned_stats.get(p, {"events_in": 0, "bytes_html": 0})
-                for p in parts
-            }
-        # monotone watermark: persist the event-time high-water-mark observed
-        # on the apply job as a driver-side property commit (manifest write,
-        # no Spark job). The NEXT batch's cutoff reads only committed state,
-        # so a cold resume replays identical cutoffs. A crash in this tiny
-        # window merely relaxes one batch's cutoff (fewer late drops) —
-        # data exactly-once is untouched.
-        if self._wm_track and self._wm_pending is not None:
-            committed = self._committed_wm()
-            if committed is None or self._wm_pending > committed:
-                self.pages = self.pages.set_properties(
-                    {WM_PROP: self._wm_pending.isoformat()}
-                )
-        return instats, mstats
-
-    def _apply_mor(
-        self,
-        deduped: DataFrame,
-        enrich,
-        page_fields: list[str],
-        properties_update: dict[str, str],
-        parts: list[int],
-        tm: _Timer,
-        post_shuffle_extract: bool = True,
-    ) -> tuple[dict, dict[int, int]]:
-        """Merge-on-read apply: commit the batch's LWW survivors as delta
-        files. No old-state read, no bucket discovery, no carried-row
-        rewrite — ONE Spark job per batch, writing O(batch) bytes however
-        large the table has grown. Late rows (older than the current live
-        row) are stored and simply lose read-time resolution, so
-        ``late_dropped`` is structurally 0 here and insert-vs-update is not
-        split (MoR never looks at old state; metrics report ``upsert``).
-
-        ``enrich`` (the UDF text extraction) runs via the write path's
-        post_shuffle hook — after the bucket exchange, before the file
-        write — so the derived text column never crosses the shuffle and
-        the pre-exchange subtree stays pure JVM (scan → broadcast semi-join
-        → exchange, no python boundary)."""
-        cfg = self.cfg
-        enriched = (
-            deduped if post_shuffle_extract else enrich(deduped, "op != 'D'")
-        )
+        # ---- merge-on-read apply: commit the batch's LWW survivors as delta
+        # files. No old-state read, no bucket discovery, no carried-row
+        # rewrite — ONE Spark job per batch, writing O(batch) bytes however
+        # large the table has grown. Late rows (older than the current live
+        # row) are stored and simply lose read-time resolution, so
+        # late_dropped is structurally 0 and insert-vs-update is not split.
+        # Post placement runs enrich through the write path's post_shuffle
+        # hook (after the bucket exchange, before the file write), so the
+        # pre-exchange subtree stays pure JVM.
+        enriched = deduped if post else enrich(deduped, "op != 'D'")
+        parts = sorted(targets)
         obs_out = Observation()
         # one F.expr per aggregate: building these ~3x|parts| conditional
         # sums out of Column operators costs ~15 py4j round trips EACH —
@@ -742,63 +644,46 @@ class CdcEngine:
         enriched = enriched.observe(obs_out, *out_aggs)
 
         val = {"_seq": "seq", "_deleted": "op = 'D'"}
-        if post_shuffle_extract:
-            # computed post-shuffle (see docstring); placeholder keeps the
+        if post:
+            # computed post-shuffle (see above); placeholder keeps the
             # delta schema-complete through the exchange
             val["text"] = "CAST(NULL AS STRING)"
-        delta = enriched.selectExpr(
-            *[f"{val.get(n, quote_ident(n))} AS {quote_ident(n)}" for n in page_fields]
-        )
+        delta = enriched.selectExpr(*[
+            f"{val.get(f.name, quote_ident(f.name))} AS {quote_ident(f.name)}"
+            for f in self.pages.manifest.current_fields
+        ])
         n_files = len(self.pages.manifest.files)
-        self.pages = self.pages.append_deltas(
-            delta,
-            properties_update=properties_update,
-            files_per_bucket=cfg.files_per_bucket,
-            post_shuffle=(
-                (lambda df: enrich(df, "NOT _deleted"))
-                if post_shuffle_extract
-                else None
-            ),
-        )
-        tm.mark("dedup+extract+delta_commit")
+        new_cps = {**cps, **targets}
 
-        # ONE py4j fetch (see _observed). A slice with no survivors writes
-        # no file, and Spark may then skip the observed node entirely and
-        # report no row: its counts are all zero.
-        vals = obs_out.get if len(self.pages.manifest.files) > n_files else {}
-        mstats: dict = {}
-        bytes_by_part: dict[int, int] = {}
-        for p in parts:
-            d = self._observed(vals, f"del_{p}")
-            s = self._observed(vals, f"surv_{p}")
-            if s - d:
-                mstats[(p, "upsert")] = s - d
-            if d:
-                mstats[(p, "delete")] = d
-            bytes_by_part[p] = self._observed(vals, f"by_{p}")
-        wm = vals.get("wm_max")
-        if wm is not None and (self._wm_pending is None or wm > self._wm_pending):
-            self._wm_pending = wm
-        return mstats, bytes_by_part
-
-    def _metric_rows(
-        self,
-        batch_id: int,
-        parts: list[int],
-        instats: dict[int, dict],
-        mstats: dict,
-        wall_ms: int,
-    ) -> list[dict]:
-        survivors_by_part: dict[int, int] = {}
-        for (p, k), c in mstats.items():
-            survivors_by_part[p] = survivors_by_part.get(p, 0) + c
-        read_amp = self.read_amplification()
-        rows = []
-        for p in parts:
-            ev_in = int(instats.get(p, {"events_in": 0})["events_in"] or 0)
-            by = int(instats.get(p, {"bytes_html": 0})["bytes_html"] or 0)
-            rows.append(
-                {
+        def commit_info(files: list[dict]) -> tuple[dict[str, str], dict]:
+            """The batch's properties and summary, from the write job's
+            observation; they ride the batch's one manifest publish."""
+            # ONE py4j fetch (see _observed). A slice with no survivors
+            # writes no file, and Spark may then skip the observed node
+            # entirely and report no row: its counts are all zero.
+            vals = obs_out.get if len(files) > n_files else {}
+            props = {
+                CHECKPOINTS_PROP: json.dumps({str(k): v for k, v in sorted(new_cps.items())}),
+                BATCH_PROP: str(batch_id),
+                LEDGER_VERSION_PROP: str(self.ledger.manifest.version),
+            }
+            # monotone watermark, max(committed, observed): the next batch's
+            # cutoff reads only committed state, so a cold resume replays
+            # the identical cutoffs
+            wm, committed = vals.get("wm_max"), self._committed_wm()
+            if wm is not None and (committed is None or wm > committed):
+                props[WM_PROP] = wm.isoformat()
+            wall_ms = int((time.monotonic() - t0) * 1000)
+            amp = _max_deltas_per_bucket(files)
+            rows = []
+            for p in parts:
+                if input_counts is None:
+                    ev_in, by = scanned_stats.get(p, (0, 0))
+                else:
+                    # exact counts from ledger metadata; bytes of APPLIED html
+                    ev_in, by = input_counts[p], self._observed(vals, f"by_{p}")
+                surv, dels = self._observed(vals, f"surv_{p}"), self._observed(vals, f"del_{p}")
+                rows.append({
                     "batch_id": batch_id,
                     "part": p,
                     "events_in": ev_in,
@@ -806,24 +691,34 @@ class CdcEngine:
                     # is not split (upserts count as updates) and late rows
                     # are stored, losing read-time resolution
                     "inserts": 0,
-                    "updates": mstats.get((p, "upsert"), 0),
-                    "deletes": mstats.get((p, "delete"), 0),
-                    "dedup_dropped": ev_in - survivors_by_part.get(p, 0),
+                    "updates": surv - dels,
+                    "deletes": dels,
+                    "dedup_dropped": ev_in - surv,
                     "late_dropped": 0,
                     "bytes_html": by,
                     "wall_ms": wall_ms,
-                    "events_per_sec": (ev_in / (wall_ms / 1000.0)) if wall_ms else 0.0,
-                    "max_deltas_per_bucket": read_amp,
-                }
-            )
-        return rows
+                    "events_per_sec": ev_in / (wall_ms / 1000.0) if wall_ms else 0.0,
+                    "max_deltas_per_bucket": amp,
+                    "committed_seq": targets[p],
+                    **choices,
+                })
+            summary = {
+                "batch_id": batch_id,
+                "run": run[0],
+                "run_batches": run[1],
+                "frequency": cfg.schedule_frequency,
+                "metrics": rows,
+            }
+            return props, summary
+
+        self.pages = self.pages.append_deltas(
+            delta,
+            files_per_bucket=cfg.files_per_bucket,
+            post_shuffle=(lambda df: enrich(df, "NOT _deleted")) if post else None,
+            commit_info=commit_info,
+        )
 
     def read_amplification(self) -> int:
         """Max MoR delta files stacked on any one bucket (driver-side
         manifest count — the metric `compact_every_batches` bounds)."""
-        per_bucket: dict[int, int] = {}
-        for f in self.pages.manifest.files:
-            if f.get("kind", "base") == "delta":
-                b = f["bucket"]
-                per_bucket[b] = per_bucket.get(b, 0) + 1
-        return max(per_bucket.values(), default=0)
+        return _max_deltas_per_bucket(self.pages.manifest.files)

@@ -31,7 +31,9 @@ same *semantics* on plain parquet + a JSON manifest, behind one interface
   properties map committed atomically with the data — the engine stores
   per-partition committed offsets there, making checkpoint+data one
   transaction (exactly-once; ETL_LOAD_CONTROL analog,
-  ``RestaurantDetails_Marta_v11_06152015.sql:153-155``).
+  ``RestaurantDetails_Marta_v11_06152015.sql:153-155``). Each version also
+  carries a ``summary`` of what its own commit recorded (Iceberg's snapshot
+  summary, not inherited): the engine's per-batch lineage rows.
 
 Concurrency: optimistic, like Delta Lake's put-if-absent log entries. Of the
 committers that share a base, exactly one creates the next version; the rest
@@ -100,6 +102,9 @@ class Manifest:
     # partition transform of bucket_col: "hash" = pmod(xxhash64(col), N);
     # "identity" = the column's own int value (one bucket per cell id)
     transform: str = "hash"
+    # what this version's commit recorded about itself (Iceberg's snapshot
+    # summary): JSON values, never inherited by later commits
+    summary: dict[str, Any] = field(default_factory=dict)
 
     @property
     def current_fields(self) -> list[FieldSpec]:
@@ -126,6 +131,7 @@ class Manifest:
             "row_key": self.row_key,
             "version_cols": self.version_cols,
             "transform": self.transform,
+            "summary": self.summary,
         }
 
     @staticmethod
@@ -147,6 +153,7 @@ class Manifest:
             row_key=d.get("row_key"),
             version_cols=d.get("version_cols", []),
             transform=d.get("transform", "hash"),
+            summary=d.get("summary", {}),
         )
 
 
@@ -469,6 +476,7 @@ class LakeTable:
         bucket_col_override: str | None = None,
         properties_drop: list[str] | None = None,
         num_buckets_override: int | None = None,
+        summary: dict[str, Any] | None = None,
     ) -> "LakeTable":
         m = self.manifest
         new = Manifest(
@@ -499,6 +507,7 @@ class LakeTable:
             row_key=m.row_key,
             version_cols=m.version_cols,
             transform=m.transform,
+            summary=summary or {},
         )
         LakeTable._publish(self.path, new)
         self.manifest = new
@@ -542,6 +551,7 @@ class LakeTable:
         properties_update: dict[str, str] | None = None,
         files_per_bucket: int = 1,
         post_shuffle=None,
+        commit_info=None,
     ) -> "LakeTable":
         """Merge-on-read upsert: commit df's rows as per-bucket DELTA files
         without reading or rewriting any carried row.
@@ -556,6 +566,12 @@ class LakeTable:
         (engine's ``_deleted=true``) is just a delta row that wins
         resolution — final state stays independent of batch slicing.
 
+        ``commit_info(files) -> (properties_update, summary)`` is called with
+        the new snapshot's file list after the write job and before the
+        publish, so what that job observed rides the same commit: the
+        properties it returns are applied over ``properties_update``, and
+        the summary becomes the new version's :attr:`Manifest.summary`.
+
         Mirrors Iceberg's merge-on-read row-delta commits; the reference's
         own incremental idiom never rewrites the full table either
         (delete+reinsert windows, STG_SP_ATTRIBUTION_ET.sql:220-228).
@@ -568,10 +584,13 @@ class LakeTable:
         entries = self._write_data(df, files_per_bucket, post_shuffle=post_shuffle)
         for e in entries:
             e["kind"] = "delta"
+        files = self.manifest.files + entries
+        props, summary = commit_info(files) if commit_info else ({}, None)
         return self._commit(
-            self.manifest.files + entries,
+            files,
             "append_deltas",
-            properties_update=properties_update,
+            properties_update={**(properties_update or {}), **props},
+            summary=summary,
         )
 
     def compact(
@@ -719,6 +738,22 @@ class LakeTable:
             }
             for v in LakeTable._versions(self.path)
         ]
+
+    def summaries(self) -> list[tuple[float, dict[str, Any]]]:
+        """``(commit time, summary)`` of every retained snapshot whose
+        commit recorded a summary, oldest first. Read from disk, so
+        the result does not depend on the version this handle is at; an
+        expired snapshot's summary is gone with it."""
+        out = []
+        for v in LakeTable._versions(self.path):
+            try:
+                with open(os.path.join(self.path, "metadata", f"v{v}.json")) as fh:
+                    d = json.load(fh)
+            except FileNotFoundError:
+                continue  # expired since the listing
+            if d.get("summary"):
+                out.append((d["history"][-1]["ts"], d["summary"]))
+        return out
 
     def at_version(self, version: int) -> "LakeTable":
         """Time-travel handle: read this table as of snapshot ``version``."""

@@ -164,7 +164,8 @@ def test_batch_size_invariance(spark, ledger, tmp_path):
 
 def test_dedup_mode_invariance(spark, tmp_path):
     """Both dedup row-recovery plans produce the identical final state — the
-    oracle's — on a ledger whose hot url carries ~30% of the events."""
+    oracle's — on a ledger whose hot url carries ~30% of the events. Each
+    batch's metric rows record the plan it ran."""
     spec = LedgerSpec(n_urls=300, n_events=3000, n_parts=4, seed=7, hot_url_rate=0.3)
     ledger = generate_ledger(str(tmp_path / "changes"), spec)
     hashes = set()
@@ -172,6 +173,8 @@ def test_dedup_mode_invariance(spark, tmp_path):
         e = _mk_engine(spark, ledger, tmp_path / plan, batch_size=1000, dedup_plan=plan)
         e.run()
         hashes.add(state_hash(e.read_pages()))
+        plans = {r["dedup_plan"] for r in e.metrics.read(spark).collect()}
+        assert plans == {plan}
     assert len(hashes) == 1
     got = _engine_final_state(spark, e)
     pd.testing.assert_frame_equal(got, _oracle_final_state(ledger), check_dtype=False)
@@ -251,66 +254,66 @@ def test_metrics_and_checkpoints_emitted(spark, ledger, tmp_path):
     applied = int((m["inserts"] + m["updates"] + m["deletes"]).sum())
     dropped = int((m["dedup_dropped"] + m["late_dropped"]).sum())
     assert applied + dropped == total_in
-    cp = eng.checkpoints.read(spark).toPandas()
-    per_part_final = cp.sort_values("batch_id").groupby("part")["committed_seq"].last()
+    # the offsets committed with each batch: the last batch's per part
+    per_part_final = m.sort_values("batch_id").groupby("part")["committed_seq"].last()
     assert dict(per_part_final) == eng.committed_offsets()
 
 
-def test_metrics_mirror_schema_evolves_on_open(spark, tmp_path):
-    """Round-4 ADVICE fix: a metrics mirror created before SCHEMA grew a
-    column must be evolved on open — otherwise appends register wider files
-    under the old schema_version and the new column is silently dropped on
-    read."""
-    from data_warehouse_etl_spark.cdc.driverio import append_rows
-    from data_warehouse_etl_spark.cdc.metrics import SCHEMA, MetricsTable
-
-    path = str(tmp_path / "metrics")
-    old_schema = SCHEMA[:-1]  # a pre-r3 mirror: no max_deltas_per_bucket
-    t = LakeTable.create(path, old_schema, bucket_col=None)
-    append_rows(t, [(1, 0, 10, 1, 2, 3, 0, 0, 100, 50, 200.0)], old_schema)
-
-    mt = MetricsTable.open(path)
-    assert [f.name for f in mt.table.manifest.current_fields] == [n for n, _ in SCHEMA]
-    mt.append(spark, [dict(
-        batch_id=2, part=0, events_in=20, inserts=2, updates=4, deletes=6,
-        dedup_dropped=0, late_dropped=0, bytes_html=200, wall_ms=80,
-        events_per_sec=250.0, max_deltas_per_bucket=7,
-    )])
-    got = {r["batch_id"]: r["max_deltas_per_bucket"] for r in mt.read(spark).collect()}
-    assert got == {1: None, 2: 7}  # old row add-as-null, new row's value kept
-
-
 def test_schedule_registry_records_runs(spark, ledger, tmp_path):
-    """Round-4 (VERDICT r3 item 8): the _schedule cadence registry — the
-    reference's Schedule-Frequency metadata surface — gets one row per
-    run() with the process identity, declared frequency, completion time
-    and batches applied; latest() resolves one row per process."""
-    eng = _mk_engine(spark, ledger, tmp_path, batch_size=2000,
+    """The schedule view — the reference's Schedule-Frequency metadata
+    surface — has one row per run() that applied a batch, with the process
+    identity, declared frequency, the run's last commit time and its
+    batches applied; a run that applies nothing records no row. latest()
+    is the newest run."""
+    eng = _mk_engine(spark, ledger, tmp_path, batch_size=1000,
                      schedule_frequency="daily")
-    n1 = eng.run()
-    assert n1 > 0
-    eng.run()  # exhausted: 0 batches, still a recorded run
+    assert eng.run(max_batches=1) == 1
+    n2 = eng.run()
+    assert n2 > 1
+    assert eng.run() == 0  # exhausted: 0 batches, no row
     rows = eng.schedule.read(spark).collect()
     assert len(rows) == 2
     assert {r["process"] for r in rows} == {"pages"}
     assert {r["frequency"] for r in rows} == {"daily"}
-    assert all(r["last_run_at"] is not None for r in rows)
-    assert sorted(r["batches_applied"] for r in rows) == [0, n1]
+    assert rows[0]["last_run_at"] > rows[1]["last_run_at"]  # newest first
+    assert [r["batches_applied"] for r in rows] == [n2, 1]
     latest = eng.schedule.latest(spark).collect()
-    assert len(latest) == 1 and latest[0]["batches_applied"] == 0
+    assert len(latest) == 1 and latest[0]["batches_applied"] == n2
 
 
-def test_schedule_registry_failure_never_masks_run(spark, ledger, tmp_path):
-    """Round-5 advisor fix: the cadence registry is observational — a
-    failure writing it (e.g. a publish race lost to a concurrent process)
-    must neither fail an otherwise-successful run() nor mask the data
-    path's own exception."""
-    eng = _mk_engine(spark, ledger, tmp_path, batch_size=2000)
+@pytest.mark.parametrize("watermark_delay_s", [None, 3600])
+def test_tick_publishes_once(spark, ledger, tmp_path, monkeypatch, watermark_delay_s):
+    """A run(max_batches=1) tick publishes one manifest, the pages table's:
+    the offsets, the watermark and the lineage rows ride the data commit.
+    A compacting tick adds the compaction's publish. After 12 ticks the
+    pages metadata holds v0 plus one version per batch and per compaction,
+    no mirror table exists, and the lineage views hold every tick."""
+    eng = _mk_engine(spark, ledger, tmp_path, batch_size=200,
+                     compact_every_batches=5, watermark_delay_s=watermark_delay_s)
+    published = []
+    real = LakeTable._publish
 
-    def boom(*a, **kw):
-        raise RuntimeError("concurrent commit detected on _schedule: refresh() and retry")
+    def publish(path, m):
+        published.append((path, m.history[-1]["operation"]))
+        real(path, m)
 
-    eng.schedule.record = boom
-    n = eng.run()  # must complete despite the registry write failing
-    assert n > 0
-    assert eng.read_pages().count() > 0
+    monkeypatch.setattr(LakeTable, "_publish", staticmethod(publish))
+    compactions = 0
+    for _ in range(12):
+        published.clear()
+        assert eng.run(max_batches=1) == 1
+        want = [(eng.pages.path, "append_deltas")]
+        if eng.last_batch_id() % 5 == 0:
+            want.append((eng.pages.path, "compact"))
+            compactions += 1
+        assert published == want
+    monkeypatch.undo()
+    if watermark_delay_s is not None:
+        assert "wm_high" in eng.pages.manifest.properties
+
+    assert sorted(os.listdir(os.path.join(eng.pages.path, "metadata"))) == sorted(
+        f"v{v}.json" for v in range(1 + 12 + compactions)
+    )
+    assert os.listdir(tmp_path) == ["pages"]  # no _metrics/_checkpoints/_schedule
+    assert eng.metrics.read(spark).count() == 12 * SPEC.n_parts
+    assert eng.schedule.read(spark).count() == 12

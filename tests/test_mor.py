@@ -51,7 +51,6 @@ def _commit_bytes_per_batch(spark, eng: CdcEngine) -> list[int]:
         out.append(
             sum(os.path.getsize(os.path.join(eng.pages.path, f["path"])) for f in added)
         )
-    eng.flush_mirrors()
     return out
 
 
@@ -217,12 +216,13 @@ def test_post_shuffle_extract_state_identical(spark, tmp_lake, monkeypatch):
     including across the schema-evolution boundary — and both produce
     non-null text for live rows. Unit-scale batches otherwise always take
     the pre path, leaving the post machinery (placeholder text column,
-    post_shuffle enrich on _deleted mask) uncovered."""
+    post_shuffle enrich on _deleted mask) uncovered. Each batch's metric
+    rows record the placement it ran."""
     from data_warehouse_etl_spark.cdc import engine as engine_mod
 
     led = _ledger(tmp_lake)
 
-    def run(name: str, threshold: int) -> str:
+    def run(name: str, threshold: int, placement: str) -> str:
         monkeypatch.setattr(
             engine_mod, "_POST_SHUFFLE_MIN_ROWS_PER_TASK", threshold
         )
@@ -232,10 +232,12 @@ def test_post_shuffle_extract_state_identical(spark, tmp_lake, monkeypatch):
         live_with_text = pages.filter("text IS NOT NULL").count()
         assert live_with_text > 0, "extract produced no text"
         assert "language" in pages.columns  # post-evolution schema visible
+        rows = eng.metrics.read(spark).collect()
+        assert {r["extract_placement"] for r in rows} == {placement}
         return str(state_hash(pages))
 
-    h_post = run("pages_post", 0)
-    h_pre = run("pages_pre", 10**12)
+    h_post = run("pages_post", 0, "post")
+    h_pre = run("pages_pre", 10**12, "pre")
     assert h_post == h_pre
 
 
@@ -248,21 +250,27 @@ class _Crash(RuntimeError):
     pass
 
 
-def _crash_cfg(led, path):
+def _crash_cfg(led, path, watermark_delay_s=None):
     return EngineConfig(
         ledger_path=led.path,
         pages_path=path,
         batch_size=400,
         num_buckets=4,
         compact_every_batches=2,
-        mirror_flush_batches=1,
+        watermark_delay_s=watermark_delay_s,
     )
+
+
+# the watermark case's delay: CRASH_SPEC's out-of-order events arrive up to
+# an hour late, so a 60 s delay drops some of them
+_CRASH_WM_DELAY_S = 60
 
 
 @pytest.fixture(scope="module")
 def crash_ref(spark, tmp_path_factory):
-    """The crash matrix's ledger and its uninterrupted replay's state hash;
-    that replay's state is checked against the pandas oracle once here."""
+    """The crash matrix's ledger and its uninterrupted replays: the state
+    hash without the watermark (checked against the pandas oracle once
+    here), and the state hash and committed ``wm_high`` with it."""
     d = tmp_path_factory.mktemp("crash")
     led = generate_ledger(str(d / "changes"), CRASH_SPEC)
     ref = CdcEngine(spark, _crash_cfg(led, str(d / "ref")))
@@ -270,7 +278,13 @@ def crash_ref(spark, tmp_path_factory):
     pd.testing.assert_frame_equal(
         _engine_final_state(spark, ref), _oracle_final_state(led), check_dtype=False
     )
-    return led, state_hash(ref.read_pages())
+    wm = CdcEngine(spark, _crash_cfg(led, str(d / "ref_wm"), _CRASH_WM_DELAY_S))
+    wm.run()
+    # the cutoff matters: it dropped late events
+    events_in = wm.metrics.read(spark).agg({"events_in": "sum"}).collect()[0][0]
+    assert events_in < CRASH_SPEC.n_events
+    wm_ref = (state_hash(wm.read_pages()), wm.pages.manifest.properties["wm_high"])
+    return led, state_hash(ref.read_pages()), wm_ref
 
 
 def _crash_in_manifest_write(monkeypatch, operation: str, nth: int, after_write: bool):
@@ -292,23 +306,9 @@ def _crash_in_manifest_write(monkeypatch, operation: str, nth: int, after_write:
     monkeypatch.setattr(LakeTable, "_write_temp", staticmethod(write))
 
 
-def _crash_in_flush(monkeypatch, nth: int):
-    """Crash at the nth mirror flush — after that batch's publish —
-    and every flush after it (a dead process flushes nothing more)."""
-    real = CdcEngine.flush_mirrors
-    calls = []
-
-    def flush(self):
-        calls.append(1)
-        if len(calls) >= nth:
-            raise _Crash("crash before the mirror flush")
-        real(self)
-
-    monkeypatch.setattr(CdcEngine, "flush_mirrors", flush)
-
-
 @pytest.mark.parametrize(
-    "point", ["before_manifest", "before_swap", "before_flush", "in_compact", "rollback"]
+    "point",
+    ["before_manifest", "before_swap", "watermark_before_publish", "in_compact", "rollback"],
 )
 def test_crash_point_resumes_to_uninterrupted_state(
     spark, tmp_lake, monkeypatch, crash_ref, point
@@ -317,10 +317,15 @@ def test_crash_point_resumes_to_uninterrupted_state(
     inside a rollback leaves a table that a fresh engine resumes to the
     uninterrupted run's state_hash (linking the manifest to its version
     name is the one commit point; ``before_swap`` crashes with the temp
-    manifest durable but not linked). The rollback case replays the whole
-    ledger, rolls the table back to an early batch — before the schema
-    evolution — and resumes from the offsets committed with that batch."""
-    led, h_ref = crash_ref
+    manifest durable but not linked). ``watermark_before_publish`` turns
+    the watermark on and crashes the 3rd batch after its write job, before
+    the publish that carries its watermark: the resumed run must reach the
+    uninterrupted watermark run's state and ``wm_high``. The rollback case
+    replays the whole ledger, rolls the table back to an early batch —
+    before the schema evolution — and resumes from the offsets committed
+    with that batch."""
+    led, h_ref, (h_wm, wm_high) = crash_ref
+    wm_delay = _CRASH_WM_DELAY_S if point == "watermark_before_publish" else None
     path = os.path.join(tmp_lake, "pages")
     if point == "rollback":
         eng = CdcEngine(spark, _crash_cfg(led, path))
@@ -335,8 +340,6 @@ def test_crash_point_resumes_to_uninterrupted_state(
         monkeypatch.undo()
         assert state_hash(eng.refresh_pages()) == h_ref  # the torn rollback is invisible
         eng.pages.rollback(v_mid)
-    elif point == "before_flush":
-        _crash_in_flush(monkeypatch, nth=3)
     elif point == "in_compact":
         _crash_in_manifest_write(monkeypatch, "compact", nth=1, after_write=False)
     else:
@@ -345,9 +348,13 @@ def test_crash_point_resumes_to_uninterrupted_state(
         )
     if point != "rollback":
         with pytest.raises(_Crash):
-            CdcEngine(spark, _crash_cfg(led, path)).run()
+            CdcEngine(spark, _crash_cfg(led, path, wm_delay)).run()
         monkeypatch.undo()
 
-    resumed = CdcEngine(spark, _crash_cfg(led, path))
+    resumed = CdcEngine(spark, _crash_cfg(led, path, wm_delay))
     assert resumed.run() > 0
-    assert state_hash(resumed.read_pages()) == h_ref
+    if wm_delay is None:
+        assert state_hash(resumed.read_pages()) == h_ref
+    else:
+        assert state_hash(resumed.read_pages()) == h_wm
+        assert resumed.pages.manifest.properties["wm_high"] == wm_high

@@ -26,8 +26,7 @@ def main() -> None:
     cpus = int(sys.argv[1])
     ledger_path = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, ".bench", "ledger_sf0.1")
     pages_path = os.path.join(REPO, ".bench", f"profile_pages_{cpus}")
-    for suffix in ("", "_metrics", "_checkpoints"):
-        shutil.rmtree(pages_path + suffix, ignore_errors=True)
+    shutil.rmtree(pages_path, ignore_errors=True)
 
     from data_warehouse_etl_spark.session import get_spark
     from data_warehouse_etl_spark.cdc import CdcEngine, EngineConfig
